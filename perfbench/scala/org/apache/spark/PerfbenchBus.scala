@@ -1,0 +1,9 @@
+package org.apache.spark
+
+/** Lets the benchmark wait until every posted listener event has been
+  * delivered, so counters read after a pass are complete. The listener
+  * bus is package-private to Spark, hence this file's package.
+  */
+object PerfbenchBus {
+  def drain(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+}
