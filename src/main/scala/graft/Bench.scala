@@ -1,9 +1,96 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
+  type Query = (SparkSession, String) => DataFrame
+
+  /** Default timed scale factor (`SPARK_GRAFT_SF_DIR`). */
+  def sfDir: String = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+  /** Registry queries sorted by name, those whose names start with one
+    * of `prefixes` (all of them when `prefixes` is empty).
+    */
+  def select(prefixes: Seq[String]): Seq[(String, Query)] =
+    SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (n, _) => prefixes.isEmpty || prefixes.exists(n.startsWith) }
+
+  /** Executes the query's own physical plan. Dataset.count() would
+    * re-optimize for the row count alone, and column pruning then
+    * deletes operators whose outputs feed no key or kept column (q136's
+    * window + exchange vanished from the timed work that way).
+    */
+  def run(spark: SparkSession, fn: Query, dir: String): Unit =
+    fn(spark, dir).queryExecution.toRdd.count()
+
+  /** Untimed warmup: run every query shape once so the timed numbers
+    * reflect steady-state execution. Spark compiles each distinct
+    * whole-stage-codegen unit on first use (janino) and JITs the
+    * scan/agg/join paths — one-time costs a long-lived cluster never
+    * pays per query. sf0.001 compiles the identical generated code
+    * (codegen is keyed on plan shape, not data size). The second pass
+    * at sf0.01 gets the generated loops hot enough for C2: at sf0.001
+    * row counts they never are, and the first timed sf0.1 run paid
+    * multi-second interpretation penalties on the heaviest queries
+    * (measured: first run 2-4x steady state).
+    */
+  val WarmupDirs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01")
+
+  /** Runs the warmup and returns its failures as `<name> at <sf>:
+    * <message>`, each also printed to stderr: a query that breaks only
+    * at a small SF must not stay invisible until the timed pass.
+    */
+  def warmup(spark: SparkSession, queries: Seq[(String, Query)]): Seq[String] =
+    for {
+      wdir <- WarmupDirs
+      sf = new java.io.File(wdir).getName
+      (name, fn) <- queries
+      msg <- scala.util.Try(run(spark, fn, wdir)).failed.toOption.map(_.getMessage)
+    } yield {
+      System.err.println(s"$name WARMUP FAILED at $sf: $msg")
+      s"$name at $sf: $msg"
+    }
+
+  /** Per-query isolation: a ~100-query single-JVM run accumulates
+    * garbage across queries (checkpoint blocks, broadcasts, shuffle
+    * buffers), and a major GC landing inside a timed query produced
+    * 4x outliers on whichever queries ran late (measured: q95 3.6s in
+    * a full run vs 0.55s isolated, same code). Dropping leftover
+    * cached RDDs and forcing collection BETWEEN queries charges each
+    * query its own work, the way a per-query cluster job would be.
+    */
+  def isolate(spark: SparkSession): Unit = {
+    spark.sparkContext.getPersistentRDDs.values
+      .foreach(_.unpersist(blocking = false))
+    System.gc()
+  }
+
+  /** `reps` isolated wall times (s) of one query at `dir`. A failing
+    * rep is passed to `onFail` and still timed (time-to-error).
+    */
+  def timeReps(spark: SparkSession, fn: Query, dir: String, reps: Int)
+              (onFail: Throwable => Unit): Seq[Double] =
+    (1 to reps).map { _ =>
+      isolate(spark)
+      val t0 = System.nanoTime()
+      try run(spark, fn, dir) catch { case e: Throwable => onFail(e) }
+      (System.nanoTime() - t0) / 1e9
+    }
+
+  def median(ts: Seq[Double]): Double = ts.sorted.apply((ts.size - 1) / 2)
+
+  /** Minimal JSON string escaping for interpolated values (a HEAD ref,
+    * query name or error message containing a quote/backslash/control
+    * char must not produce unparseable JSON).
+    */
+  def jstr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.Cpus
     // Load transparency: the r9 record overstated the engine 17% total
     // (5x on single queries) purely from box load, and only a judge
     // re-run could tell. Capture /proc/loadavg at start and end so the
@@ -16,82 +103,20 @@ object Bench {
         .split("\\s+").take(3).toSeq.map(_.toDouble)
       catch { case _: Throwable => Seq(-1.0, -1.0, -1.0) }
     val loadStart = loadavg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-mode knob: the biggest dimension-ish side (orders at
-      // sf0.1, ~5 MB parquet / ~20 MB in memory) is broadcastable;
-      // on a real cluster this stays default and the bucketed layout
-      // (see Bucketing) removes the fact-fact exchange instead
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // local-box shuffle hygiene (duplicated from build.sbt javaOptions
-      // so a non-sbt launch behaves the same): tmpfs scratch + no bypass
-      // writer — this host's ext4 serializes the bypass path's
-      // 32-files-per-map creates and was charging multi-second syscall
-      // stalls to every shuffle-heavy query (see build.sbt comment)
-      .config("spark.local.dir",
-        sys.props.getOrElse("spark.local.dir", "/dev/shm/spark-local"))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.props.getOrElse("spark.shuffle.sort.bypassMergeThreshold", "1"))
-      // Let AQE's parallelismFirst split sub-MB shuffles across the
-      // machine instead of coalescing kernel-bearing stages onto one
-      // task (a FLOOR: never binds on production-sized shuffles —
-      // see the build.sbt comment and OPTIMIZATION_r15.md)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.props.getOrElse(
-          "spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k"))
-      .getOrCreate()
+    val spark = GraftSession.forRegistry().getOrCreate()
     // ERROR, not WARN: executor-side WARN spam (e.g. WindowExec's
     // single-partition notice) would otherwise land in the same bounded
     // tail buffer the driver parses the metric line out of.
     spark.sparkContext.setLogLevel("ERROR")
-    // Untimed warmup on the tiny SF: run every query shape once so the
-    // timed numbers reflect steady-state execution. Spark compiles each
-    // distinct whole-stage-codegen unit on first use (janino) and JITs
-    // the scan/agg/join paths — one-time costs a long-lived cluster
-    // never pays per query. Warmup at sf0.001 compiles the identical
-    // generated code (codegen is keyed on plan shape, not data size),
-    // so the sf0.1 timed pass measures execution, not compilation.
-    // Second pass at sf0.01: codegen classes exist after pass one, but
-    // the JVM only JIT-compiles (C2) the generated loops once they're
-    // hot — at sf0.001 row counts they never get there, and the first
-    // timed sf0.1 run was paying multi-second interpretation penalties
-    // on the heaviest queries (measured: first run 2-4x steady state).
-    // dev-only: comma-separated name prefixes to time a subset while
-    // iterating on one query (the driver never sets this); one parse
-    // shared by warmup and the timed pass so they can't diverge
-    val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSeq)
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.exists(n.startsWith)) }
+    val selected = select(Nil)
     // key-collision check BEFORE any work: this is knowable from the
     // registry alone, and failing it after the multi-minute warmup +
     // timed run would discard the whole bench (no metric line printed,
     // driver records parsed=null)
     require(selected.map(p => p._1.takeWhile(_ != '_')).toSet.size == selected.size,
       "qNN bench-key prefixes collide; JSON would drop a timing")
-    Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01").foreach { wdir =>
-      selected.foreach { case (_, fn) =>
-        try fn(spark, wdir).queryExecution.toRdd.count()
-        catch { case _: Throwable => () }
-      }
-    }
+    val warmupErrors = warmup(spark, selected)
     val failed = scala.collection.mutable.LinkedHashSet[String]()
-    // Per-query isolation: a ~100-query single-JVM run accumulates
-    // garbage across queries (checkpoint blocks, broadcasts, shuffle
-    // buffers), and a major GC landing inside a timed query produced
-    // 4x outliers on whichever queries ran late (measured: q95 3.6s in
-    // a full run vs 0.55s isolated, same code). Dropping leftover
-    // cached RDDs and forcing collection BETWEEN queries charges each
-    // query its own work, the way a per-query cluster job would be.
-    def isolate(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      System.gc()
-    }
     // Median-of-N timed reps per query: GC isolation alone is not
     // enough when the whole MACHINE is loaded during the run — single
     // measurements recorded 3-6x steady state on specific queries
@@ -101,25 +126,12 @@ object Bench {
     // tail regression stays visible instead of being median'd away.
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
     val results: Seq[(String, Seq[Double])] =
-      selected
-        .map { case (name, fn) =>
-        val ts = (1 to reps).map { _ =>
-          isolate()
-          val t0 = System.nanoTime()
-          // toRdd.count() executes the query's own physical plan;
-          // Dataset.count() re-optimizes for the count alone and can
-          // prune real operators (q136's window + exchange) from the
-          // timed work
-          try { fn(spark, sfDir).queryExecution.toRdd.count() }
-          catch { case e: Throwable =>
-            if (failed.add(name))
-              System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          }
-          (System.nanoTime() - t0) / 1e9
+      selected.map { case (name, fn) =>
+        name -> timeReps(spark, fn, sfDir, reps) { e =>
+          if (failed.add(name))
+            System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
         }
-        name -> ts
       }
-    def median(ts: Seq[Double]): Double = ts.sorted.apply((ts.size - 1) / 2)
     // a FAILED query's reps measure time-to-error (often ~50ms) — summing
     // them would silently DEFLATE the headline total while the run looks
     // faster; failed queries are excluded from the totals and the
@@ -194,8 +206,11 @@ object Bench {
     // rep vector measures time-to-error — a reader summing rep_times
     // without this marker would reproduce the deflated-total bug the
     // metric line already guards against
-    detail ++= failed.toSeq.sorted.map("\"" + _ + "\"")
+    detail ++= failed.toSeq.sorted.map(jstr)
       .mkString("\"errors\":[", ",", "],")
+    // warmup failures: not in the metric line or the totals (the timed
+    // pass decides those), but recorded so a small-SF break is visible
+    detail ++= warmupErrors.map(jstr).mkString("\"warmup_errors\":[", ",", "],")
     detail ++= results.map { case (n, ts) =>
       "\"" + n + "\":" + ts.map(fmt).mkString("[", ",", "]")
     }.mkString("\"rep_times\":{", ",", "}}")
@@ -214,7 +229,7 @@ object Bench {
     // HEAD the jar was built from. BenchBudgetSpec reads it as the
     // bench-economics sidecar (coverage + per-query/total budgets),
     // the BENCH analog of tools/ORACLE_TIMING.json.
-    if (sys.env.contains("SPARK_GRAFT_BENCH_PIN") && only.isEmpty) {
+    if (sys.env.contains("SPARK_GRAFT_BENCH_PIN")) {
       def gitHead(): String =
         try {
           val head = new String(java.nio.file.Files.readAllBytes(
@@ -235,16 +250,6 @@ object Bench {
             }
           } else head
         } catch { case _: Throwable => "unknown" }
-      // minimal JSON string escaping for interpolated values (a HEAD
-      // ref or query name containing a quote/backslash/control char
-      // must not produce an unparseable pin — r14 ADVICE)
-      def jstr(s: String): String =
-        "\"" + s.flatMap {
-          case '"' => "\\\""
-          case '\\' => "\\\\"
-          case c if c < ' ' => f"\\u${c.toInt}%04x"
-          case c => c.toString
-        } + "\""
       val pin = new StringBuilder
       pin ++= s"""{"sf":$sfNum,"reps":$reps,"cpus":$cpus,"""
       pin ++= s""""git_head":${jstr(gitHead())},"""

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,27 +11,7 @@ object Verify {
     val only = args.drop(2).headOption.map(_.split(",").toSeq)
     def wanted(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local-mode knob: the biggest dimension-ish side (orders at
-      // sf0.1, ~5 MB parquet / ~20 MB in memory) is broadcastable;
-      // on a real cluster this stays default and the bucketed layout
-      // (see Bucketing) removes the fact-fact exchange instead
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      // local-box shuffle hygiene, same rationale as Bench/build.sbt:
-      // tmpfs scratch + no bypass writer (this host's ext4 serializes
-      // concurrent shuffle-temp-file creates)
-      .config("spark.local.dir",
-        sys.props.getOrElse("spark.local.dir", "/dev/shm/spark-local"))
-      .config("spark.shuffle.sort.bypassMergeThreshold",
-        sys.props.getOrElse("spark.shuffle.sort.bypassMergeThreshold", "1"))
-      .getOrCreate()
+    val spark = GraftSession.forRegistry().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => wanted(kv._1)).foreach { case (name, fn) =>

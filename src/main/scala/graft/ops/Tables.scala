@@ -31,10 +31,10 @@ object Tables {
     * surfaces as raw nano-longs (nanosAsLong), and TIMESTAMP(MICROS,
     * isAdjustedToUTC=false), which Spark 4 infers as TIMESTAMP_NTZ.
     * The NTZ->LTZ cast reinterprets wall time in the session zone;
-    * every entrypoint (GraftSession/Verify/Bench/SparkSpec) pins
-    * spark.sql.session.timeZone=UTC, so it is micros-exact and keeps
-    * unix_micros()/window arithmetic and the dumped parquet type
-    * identical across fixture generations.
+    * GraftSession, the one session builder every entrypoint and the
+    * specs use, pins spark.sql.session.timeZone=UTC, so it is
+    * micros-exact and keeps unix_micros()/window arithmetic and the
+    * dumped parquet type identical across fixture generations.
     */
   def normalizeEventTs(df: DataFrame): DataFrame =
     df.schema("ts").dataType match {

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.text.Normalize
 
@@ -23,12 +22,7 @@ object DumpStems {
       println(s"[dumpstems] ${words.length} tokens -> $out")
       return
     }
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val toks = Normalize
       .tokens(graft.ops.Tables.documents(spark, sfDir), stem = false)

@@ -226,14 +226,7 @@ object ScaleCheck {
 
   /** The shared local session every scale probe runs under. */
   private[tools] def session(): SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val s = graft.GraftSession.forRegistry().getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }

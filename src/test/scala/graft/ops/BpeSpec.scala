@@ -67,8 +67,8 @@ class BpeSpec extends SparkSpec {
     * "xyxy" so its (x,y) count 2f beats its own chain-mates at f)
     * must learn all 12 merges in ONE round. Real text conflicts at
     * the letter level early on, so there the assertion is the strict
-    * saving, not merges/batchSize (BpePerf measures the profile:
-    * 48→22 rounds, 2× wall on a 160k-type table).
+    * saving, not merges/batchSize (measured on a 160k-type table:
+    * 48→22 rounds, 2× wall; PLANS.md "BPE training at scale").
     */
   test("batching bounds the number of pair-count rounds") {
     val alpha = "abcdefghijklmnopqrstuvwx"

@@ -37,13 +37,13 @@ class BenchBudgetSpec extends AnyFunSuite {
   private val PerQueryBudgetS = 8.0
 
   /** Quiet full-registry ceiling — the accretion backstop the
-    * driver's load-sensitive 2x gate can't provide. The committed r14
-    * pin recorded 223.65 s over 213 queries; same-code quiet pins on
-    * this box drifted across 223.7-236.7 s (the r12-r14
-    * adjudications), so the ceiling sits ~10% above the drift band's
-    * top. Every future addition must either fit the headroom or raise
-    * this constant in review — the point is that raising it is a
-    * visible, argued act, not drift.
+    * load-sensitive 2x bench gate (BASELINE.md) can't provide. The
+    * committed pin records 163.07 s over 214 queries (taken at
+    * `49d25c6`); the ceiling was set ~10% above the 223.7-236.7 s band
+    * that same-code quiet pins drifted across in the r12-r14
+    * adjudications, before the r15 optimizations. Every future addition
+    * must either fit the headroom or raise this constant in review —
+    * the point is that raising it is a visible, argued act, not drift.
     */
   private val TotalBudgetS = 260.0
 
