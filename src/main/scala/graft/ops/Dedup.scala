@@ -990,10 +990,9 @@ object Dedup {
     // history chain below are independent until upsertComponents, but
     // sequentially each ran its eager construction work (checkpoint
     // materialization, CC's stats+collect) on an otherwise idle
-    // scheduler. Concurrency-safe for the same reason as the q195
-    // sweep pool: a <= 100-doc slice stays far under CC's
-    // local-dispatch edge limit, so neither thread can reach the
-    // conf-mutating distributed CC path.
+    // scheduler. Concurrency-safe by construction: neither chain
+    // writes session state (connectedComponents changes no session
+    // conf on either dispatch path).
     val pool = java.util.concurrent.Executors.newSingleThreadExecutor()
     val newPairsF = pool.submit(
       new java.util.concurrent.Callable[org.apache.spark.sql.DataFrame] {
@@ -1687,7 +1686,10 @@ object Dedup {
     * and the distributed loop's per-round scheduling (4+ jobs x
     * O(log diameter) rounds) is the dominant cost, not the data.
     * Graphs above the bound run the loop unchanged. Set
-    * `localEdgeLimit = 0` to force the distributed path.
+    * `localEdgeLimit = 0` to force the distributed path. Neither path
+    * changes session conf (the loop runs at the session's own shuffle
+    * partitions and AQE setting), so concurrent calls on one session
+    * are safe — spec-pinned.
     *
     * The dispatch bound is ESTIMATED DRIVER BYTES, not a row count: the
     * same edge-count cut that is safe for long ids OOMs a default-sized
@@ -1703,7 +1705,6 @@ object Dedup {
   def connectedComponents(pairs: DataFrame, maxIter: Int = 25,
                           localEdgeLimit: Long = 1000000L,
                           localDriverBytes: Long = 64L << 20): DataFrame = {
-    val spk = pairs.sparkSession
     // Null endpoints (junk upstream pair rows) are dropped up front —
     // the contract for BOTH dispatch paths. Without this they diverge:
     // the distributed pointer-jump join silently discards the vertex
@@ -1713,22 +1714,6 @@ object Dedup {
       .where(col("a").isNotNull && col("b").isNotNull)
     val sym = e.union(e.select(col("b"), col("a")))
       .toDF("src", "dst").distinct().cache()
-    // Size the loop to the graph, not the session. The edge list a
-    // dedup pipeline feeds here (verified near-dup pairs) is usually
-    // orders of magnitude smaller than the corpus, and each round pays
-    // per-task scheduling on every shuffle — at session-default
-    // partition counts the loop is pure overhead (measured 1.9s -> 1.0s
-    // on a 2k-edge graph at local[32]). AQE would coalesce these
-    // shuffles inside ONE query, but cannot see across the iteration
-    // boundary, so we make the same decision from the materialized edge
-    // count: scale partitions DOWN (never above the session setting),
-    // and skip AQE's per-stage re-planning jobs only when the whole
-    // graph is metadata-sized. Large graphs leave both confs untouched
-    // (AQE skew-splitting matters there: the pointer-jump join key is
-    // the component min-label, power-law-hot for giant components).
-    // Conf save/restore is session-global for the loop's duration —
-    // the operator is a blocking batch call, not for concurrent use on
-    // a shared session.
     val payload = sym.schema("src").dataType match {
       case org.apache.spark.sql.types.StringType =>
         (octet_length(col("src")) + octet_length(col("dst"))).cast("long")
@@ -1738,20 +1723,12 @@ object Dedup {
     val nEdges = stats.getLong(0)
     val payloadBytes = if (stats.isNullAt(1)) 0L else stats.getLong(1)
     val estDriverBytes = payloadBytes + nEdges * 96L
-    lastDispatchLocal = nEdges <= localEdgeLimit && estDriverBytes <= localDriverBytes
-    if (lastDispatchLocal) {
+    val local = nEdges <= localEdgeLimit && estDriverBytes <= localDriverBytes
+    lastDispatchLocal = local
+    if (local) {
       val out = componentsLocal(sym)
       sym.unpersist(blocking = false)
       return out
-    }
-    val smallGraph = nEdges < 10000000L
-    val prevParts = spk.conf.get("spark.sql.shuffle.partitions")
-    val prevAqe = spk.conf.get("spark.sql.adaptive.enabled")
-    if (smallGraph) {
-      val parts = math.max(1L,
-        math.min(prevParts.toLong, 1L + nEdges / 2000000L))
-      spk.conf.set("spark.sql.shuffle.partitions", parts.toString)
-      spk.conf.set("spark.sql.adaptive.enabled", "false")
     }
     try {
       var labels = sym.select(col("src").as("v")).distinct()
@@ -1805,17 +1782,9 @@ object Dedup {
         labels = labels.drop("old")
         converged = changed == 0L
         it += 1
-        if (sys.props.contains("graft.cc.debug"))
-          println(s"[cc] round $it changed=$changed")
       }
       labels.select(col("v"), col("label").as("component"))
-    } finally {
-      if (smallGraph) {
-        spk.conf.set("spark.sql.shuffle.partitions", prevParts)
-        spk.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      }
-      sym.unpersist(blocking = false)
-    }
+    } finally sym.unpersist(blocking = false)
   }
 
   /** Driver-side labeling for graphs under the collect bound:
@@ -2012,10 +1981,9 @@ object Dedup {
     // in a row on an idle cluster. Submit the per-cut construction
     // from a thread pool so those small jobs interleave (guide §2.6
     // "overlap independent jobs"); result identical — the rows are
-    // reassembled in sweep order. Safe for the shared-session conf:
-    // a <= 100-doc slice has <= C(100,2) = 4950 pairs, far under the
-    // local-dispatch edge limit, so no thread reaches the conf-mutating
-    // distributed CC path (its doc notes it is not concurrency-safe).
+    // reassembled in sweep order. Safe on the shared session:
+    // connectedComponents changes no session conf on either dispatch
+    // path, so the cuts run independently.
     val pool = java.util.concurrent.Executors.newFixedThreadPool(sweepTenths.size)
     implicit val ec: scala.concurrent.ExecutionContext =
       scala.concurrent.ExecutionContext.fromExecutor(pool)

@@ -86,6 +86,26 @@ object Curation {
     if (keepLangs.isEmpty) quality
     else quality.filter(col("lang").isin(keepLangs: _*))
 
+  /** Stage-5 optional source balancing (`maxPerSource` = 0 returns the
+    * frame itself): a deterministic per-source cap — a partitioned
+    * window over the arithmetic sample hash, no RNG, so the kept set
+    * is stable across runs and engines.
+    */
+  private def balanceStage(deduped: DataFrame, maxPerSource: Int): DataFrame =
+    if (maxPerSource <= 0) deduped
+    else {
+      require(deduped.columns.contains("source"),
+        "maxPerSource balancing needs a 'source' column")
+      import org.apache.spark.sql.expressions.Window
+      val w = Window.partitionBy(col("source"))
+        .orderBy(col("_hkey"), col("doc_id"))
+      deduped
+        .withColumn("_hkey", graft.ops.Sampling.hkey(col("doc_id")))
+        .withColumn("_rn", row_number().over(w))
+        .filter(col("_rn") <= maxPerSource)
+        .drop("_hkey", "_rn")
+    }
+
   /** Stage-4 verified near-dup strike set over the exact-deduped
     * frame's SIGNATURES (cache them — the shingle+MinHash kernel is
     * the pipeline's priciest narrow op and three consumers read the
@@ -138,21 +158,8 @@ object Curation {
     // stage and the caller's materialization must not recompute it
     sigs.unpersist(blocking = false)
 
-    // 5. optional source balancing: deterministic per-source cap
-    // (partitioned window over the arithmetic sample hash — no RNG, so
-    // the kept set is stable across runs and engines)
-    if (maxPerSource > 0) require(deduped.columns.contains("source"),
-      "maxPerSource balancing needs a 'source' column")
-    val curated = (if (maxPerSource > 0) {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("source"))
-        .orderBy(col("_hkey"), col("doc_id"))
-      deduped
-        .withColumn("_hkey", graft.ops.Sampling.hkey(col("doc_id")))
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") <= maxPerSource)
-        .drop("_hkey", "_rn")
-    } else deduped).cache()
+    // 5. optional source balancing
+    val curated = balanceStage(deduped, maxPerSource).cache()
     val afterBalance = curated.count()
     exact.unpersist(blocking = false)
     // with maxPerSource=0, curated IS deduped — releasing it would
@@ -242,18 +249,8 @@ object Curation {
       .join(nearDupIds(sigs, nHashes, minSigAgreement, bandSize),
         Seq("doc_id"), "left_anti")
       .observe(oNearDup, n)
-    if (maxPerSource > 0) require(deduped.columns.contains("source"),
-      "maxPerSource balancing needs a 'source' column")
-    val curated = (if (maxPerSource > 0) {
-      import org.apache.spark.sql.expressions.Window
-      val w = Window.partitionBy(col("source"))
-        .orderBy(col("_hkey"), col("doc_id"))
-      deduped
-        .withColumn("_hkey", graft.ops.Sampling.hkey(col("doc_id")))
-        .withColumn("_rn", row_number().over(w))
-        .filter(col("_rn") <= maxPerSource)
-        .drop("_hkey", "_rn")
-    } else deduped).observe(oBalance, n).cache()
+    val curated = balanceStage(deduped, maxPerSource)
+      .observe(oBalance, n).cache()
 
     def metric(o: Observation): Long =
       o.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)

@@ -8,9 +8,9 @@ import org.apache.spark.sql.functions._
   * The reference's source is an HDFS directory of text documents, one
   * doc per file, with the doc id encoded in the filename as
   * `<int>.<ext>` (parse at ProcessData.java:392-401,417) and per-line
-  * records (TextInputFormat). Spark-native form: `spark.read.text` with
-  * `input_file_name()` + regexp doc-id extraction — stays a single
-  * narrow scan, no shuffle.
+  * records (TextInputFormat). Spark-native form: the `binaryFile`
+  * datasource (one row per file) + regexp doc-id extraction from the
+  * path — stays a single narrow scan, no shuffle.
   *
   * Scale note: many-small-files is the classic HDFS/S3 listing
   * bottleneck; Spark's file index parallelizes the listing, and
@@ -19,23 +19,6 @@ import org.apache.spark.sql.functions._
   * exists for reference-format corpora.
   */
 object Corpus {
-
-  /** dir of `<docId>.<ext>` text files -> (doc_id, line). Files whose
-    * names don't match `<digits>.<ext>` are skipped (the cast is
-    * guarded so Spark's default ANSI mode can't fail the whole scan on
-    * a stray readme/checkpoint file).
-    */
-  def readLines(spark: SparkSession, dir: String): DataFrame =
-    spark.read.text(dir)
-      // the filename must be ENTIRELY `<digits>.<ext>` (anchored at the
-      // path separator — `readme2.txt` must not ingest as doc 2), and
-      // the id capped at 9 digits so the int cast can never overflow
-      // (ANSI mode would otherwise fail the whole scan on one file)
-      .select(
-        regexp_extract(input_file_name(), "(?:^|/)(\\d{1,9})\\.[^/.]*$", 1).as("_id"),
-        col("value").as("line"))
-      .filter(length(col("_id")) > 0)
-      .select(col("_id").cast("int").as("doc_id"), col("line"))
 
   /** dir -> (doc_id, text): whole-document granularity (reference maps
     * per line; per-doc is what the rest of the engine consumes).

@@ -66,29 +66,19 @@ object BloomStream {
     val batchWords = Dedup.bloomWords(
       Dedup.shingleSet4(spark, batch.select(col("doc_id"), col("text")))
         .select(col("sh")).distinct())
-    // HOT-PATH read: one collect, max batch picked driver-side (the
-    // DriftStream scoreBatchWith pattern readLatestSnapshot's own doc
-    // prescribes for per-micro-batch reads of driver-sized state) —
-    // readWords' two-job form stays for the reporting/serving APIs
-    val prev = {
-      val rows = DeltaStore.readScopedOr(spark, wordsDir, Some(batchId),
-          wordSchema)
-        .select(col("batch_id").cast("long"), col("word_idx"), col("bits"))
-        .collect()
-      val words = new Array[Long](Dedup.BloomBits / 64)
-      if (rows.nonEmpty) {
-        val mx = rows.map(_.getLong(0)).max
-        rows.filter(_.getLong(0) == mx)
-          .foreach(r => words(r.getInt(1)) = r.getLong(2))
-      }
-      words
-    }
+    // HOT-PATH read: one collect, max batch picked driver-side —
+    // readWords' form stays for the reporting/serving APIs
+    val prev = new Array[Long](Dedup.BloomBits / 64)
+    DeltaStore.collectLatestSnapshot(spark, wordsDir, Some(batchId), wordSchema,
+        Seq("word_idx", "bits"))
+      .foreach(r => prev(r.getInt(0)) = r.getLong(1))
     val merged = prev.zip(batchWords).map { case (a, b) => a | b }
     import spark.implicits._
-    merged.toSeq.zipWithIndex.map { case (w, i) => (i, w) }
-      .toDF("word_idx", "bits")
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$wordsDir/batch_id=$batchId")
+    DeltaStore.writeBatch(
+      merged.toSeq.zipWithIndex.map { case (w, i) => (i, w) }
+        .toDF("word_idx", "bits")
+        .repartition(1),
+      wordsDir, batchId)
   }
 
   /** The current packed filter (all-zero when the store is absent —

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
@@ -131,15 +130,11 @@ object ClusterStream {
     // via the anti-join, not the window — the batch never sorts with
     // the history); null-mh rows are takedown tombstones from earlier
     // batches and carry no signature
-    val prevSigs = {
-      val raw = DeltaStore.readScopedOr(spark, sigDir, Some(batchId), sigSchema)
-        .select(col("doc_id"), col("mh"), col("batch_id").cast("long"))
-      val w = Window.partitionBy(col("doc_id"))
-        .orderBy(col("batch_id").desc)
-      raw.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-        .filter(col("mh").isNotNull)
-        .select(col("doc_id"), col("mh"))
-    }
+    val prevSigs = DeltaStore.latestPerKey(
+        DeltaStore.readScopedOr(spark, sigDir, Some(batchId), sigSchema),
+        Seq("doc_id"))
+      .filter(col("mh").isNotNull)
+      .select(col("doc_id"), col("mh"))
     val curSigs = prevSigs
       .join(allIds, Seq("doc_id"), "left_anti")
       .unionByName(batchSigs)
@@ -166,16 +161,12 @@ object ClusterStream {
     // edges come in, touched components recompute — a taken-down
     // vertex has no new edges, so it drops out of the recomputed
     // region (upsertComponents' struck-id-loses-all-edges rule)
-    val prevPairs = DeltaStore.readScopedOr(spark, pairsDir, Some(batchId),
-        pairSchema)
-      .transform(r => DeltaStore.latestSnapshot(
-        r.select(col("d1"), col("d2"), col("batch_id").cast("long")
-          .as("batch_id")), Seq("d1", "d2")))
-    val prevComp = DeltaStore.readScopedOr(spark, compDir, Some(batchId),
-        compSchema)
-      .transform(r => DeltaStore.latestSnapshot(
-        r.select(col("v"), col("component"), col("batch_id").cast("long")
-          .as("batch_id")), Seq("v", "component")))
+    val prevPairs = DeltaStore.latestSnapshot(
+      DeltaStore.readScopedOr(spark, pairsDir, Some(batchId), pairSchema),
+      Seq("d1", "d2"))
+    val prevComp = DeltaStore.latestSnapshot(
+      DeltaStore.readScopedOr(spark, compDir, Some(batchId), compSchema),
+      Seq("v", "component"))
     val mergedComp = Dedup.upsertComponents(prevPairs, prevComp,
         allIds, newPairs)
       .localCheckpoint(false)
@@ -188,19 +179,16 @@ object ClusterStream {
       .select(col("d1"), col("d2"))
       .unionByName(newPairs)
       .localCheckpoint(false)
-    // repartition(1) (an exchange), NOT coalesce(1): coalescing would
-    // collapse the signature/merge pipelines upstream into one task —
-    // the ContractStream ids-write lesson. Takedowns land as null-mh
-    // tombstone rows so the latest-wins fold shadows the old signature
-    batchSigs
-      .unionByName(downs.select(col("doc_id"),
-        lit(null).cast(sigSchema("mh").dataType).as("mh")))
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$sigDir/batch_id=$batchId")
-    mergedPairs.repartition(1)
-      .write.mode("overwrite").parquet(s"$pairsDir/batch_id=$batchId")
-    mergedComp.repartition(1)
-      .write.mode("overwrite").parquet(s"$compDir/batch_id=$batchId")
+    // takedowns land as null-mh tombstone rows so the latest-wins fold
+    // shadows the old signature
+    DeltaStore.writeBatch(
+      batchSigs
+        .unionByName(downs.select(col("doc_id"),
+          lit(null).cast(sigSchema("mh").dataType).as("mh")))
+        .repartition(1),
+      sigDir, batchId)
+    DeltaStore.writeBatch(mergedPairs.repartition(1), pairsDir, batchId)
+    DeltaStore.writeBatch(mergedComp.repartition(1), compDir, batchId)
   }
 
   /** Current component view (latest snapshot; absent store = empty). */
@@ -224,13 +212,11 @@ object ClusterStream {
     */
   def compactSigs(spark: SparkSession, sigDir: String,
                   onDelete: org.apache.hadoop.fs.Path => Unit = _ => ()): Unit =
-    DeltaStore.compact(spark, sigDir, raw => {
-      val w = Window.partitionBy(col("doc_id"))
-        .orderBy(col("batch_id").cast("long").desc)
-      raw.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    DeltaStore.compact(spark, sigDir,
+      DeltaStore.latestPerKey(_, Seq("doc_id"))
         .filter(col("mh").isNotNull)
-        .select(col("doc_id"), col("mh"))
-    }, keepLatest = true, onDelete = onDelete)
+        .select(col("doc_id"), col("mh")),
+      keepLatest = true, onDelete = onDelete)
 
   /** Fold the pair store: whole-snapshot latest-wins. */
   def compactPairs(spark: SparkSession, pairsDir: String,

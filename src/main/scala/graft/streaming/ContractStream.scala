@@ -75,6 +75,8 @@ object ContractStream {
     StructField("n_clean", LongType),
     StructField("batch_id", LongType)))
 
+  private val reportCols = reportSchema.fieldNames.toSeq.filter(_ != "batch_id")
+
   /** Monitor a streaming (doc_id, text, lang, source, n_chars) frame:
     * per micro-batch, the updated id index lands in
     * `idsDir/batch_id=<k>` and the full per-source counter snapshot in
@@ -115,23 +117,11 @@ object ContractStream {
     val bkey = flagged.groupBy(col("doc_id"), col("source"))
       .agg(count(lit(1)).cast("long").as("b_n"),
         sum(col("rclean")).cast("long").as("b_rc"))
-    // previous cumulative state for the batch's ids only: scoped read
-    // (the replay guard), one semi-join on doc_id (an id's rows under
-    // OTHER sources matter for its total), THEN latest-wins per key.
-    // The semi-join must sit BELOW the window — Catalyst cannot push a
-    // semi-join through a window, and the join key doc_id is a prefix
-    // of the window partition key (doc_id, source), so filtering whole
-    // key groups first is result-identical while the per-batch sort
-    // covers only the touched keys instead of the whole id index.
-    val bids = bkey.select(col("doc_id").as("b_doc")).distinct()
-    val prevRaw = DeltaStore.readScopedOr(spark, idsDir, Some(batchId), idsSchema)
-      .select(col("doc_id"), col("source"), col("n"), col("rc"),
-        col("batch_id").cast("long").as("batch_id"))
-      .join(bids, col("doc_id") <=> col("b_doc"), "left_semi")
-    val wkey = Window.partitionBy(col("doc_id"), col("source"))
-      .orderBy(col("batch_id").desc)
-    val prevTouched = prevRaw
-      .withColumn("__rn", row_number().over(wkey)).filter(col("__rn") === 1)
+    // previous cumulative state for the batch's ids only, touched on
+    // doc_id alone (an id's rows under OTHER sources matter for its
+    // total), latest-wins per (doc_id, source) key
+    val prevTouched = DeltaStore.readTouched(spark, idsDir, batchId, idsSchema,
+        bkey.select(col("doc_id")), Seq("doc_id", "source"))
       .select(col("doc_id"), col("source"),
         col("n").as("p_n"), col("rc").as("p_rc"))
     // merge: full outer on the null-safe key, sides classified by
@@ -175,25 +165,14 @@ object ContractStream {
       .agg(sum(col("d_dup")).as("d_dup"), sum(col("d_clean")).as("d_clean"))
       .collect()
       .map(r => Option(r.getString(0)) -> ((r.getLong(1), r.getLong(2)))).toMap
-    // previous report snapshot (latest-wins, replay-guarded) — ONE
-    // driver-side collect + max filter (the store is source-count-sized
-    // by design; readReport's DataFrame form would cost two extra jobs
-    // and two store scans on the hot ingest path — the DriftStream
-    // scoreBatchWith argument)
-    val prevRepRows = DeltaStore
-      .readScopedOr(spark, reportDir, Some(batchId), reportSchema)
-      .select(col("source"), col("n_rows"), col("n_null_text"),
-        col("n_len_mismatch"), col("n_bad_lang"), col("n_dup_id"),
-        col("n_clean"), col("batch_id").cast("long")).collect()
+    // previous report snapshot (latest-wins, replay-guarded; the
+    // store is source-count-sized by design)
     val prevRep: Map[Option[String], (Long, Long, Long, Long, Long, Long)] =
-      if (prevRepRows.isEmpty) Map.empty
-      else {
-        val mx = prevRepRows.map(_.getLong(7)).max
-        prevRepRows.filter(_.getLong(7) == mx)
-          .map(r => Option(r.getString(0)) ->
-            ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
-              r.getLong(5), r.getLong(6)))).toMap
-      }
+      DeltaStore.collectLatestSnapshot(spark, reportDir, Some(batchId),
+          reportSchema, reportCols)
+        .map(r => Option(r.getString(0)) ->
+          ((r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4),
+            r.getLong(5), r.getLong(6)))).toMap
     val sources = prevRep.keySet ++ incr.keySet ++ deltas.keySet
     val report = sources.toSeq
       .map { s =>
@@ -203,17 +182,12 @@ object ContractStream {
         (s.orNull, pr + ir, pn + in, pl + il, pg + ig, pd + dd, pc + dc)
       }
     import spark.implicits._
-    // repartition (an exchange), not coalesce: coalesce(1) would
-    // collapse the merge pipeline above into one task — the exchange
-    // keeps the join/window parallel and only the delta-sized result
-    // funnels to one output file
-    merged.select(col("doc_id"), col("source"), col("n"), col("rc"))
-      .repartition(1)
-      .write.mode("overwrite").parquet(s"$idsDir/batch_id=$batchId")
-    report.toDF("source", "n_rows", "n_null_text", "n_len_mismatch",
-      "n_bad_lang", "n_dup_id", "n_clean")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$reportDir/batch_id=$batchId")
+    DeltaStore.writeBatch(
+      merged.select(col("doc_id"), col("source"), col("n"), col("rc"))
+        .repartition(1),
+      idsDir, batchId)
+    DeltaStore.writeBatch(report.toDF(reportCols: _*).coalesce(1),
+      reportDir, batchId)
     } finally {
       // unpersist in finally: a failed write replays the batch in the
       // same session, and each failed attempt would otherwise leave
@@ -230,8 +204,7 @@ object ContractStream {
   def readReport(spark: SparkSession, reportDir: String,
                  beforeBatch: Option[Long] = None): DataFrame =
     DeltaStore.readLatestSnapshot(spark, reportDir, beforeBatch, reportSchema,
-      Seq("source", "n_rows", "n_null_text", "n_len_mismatch", "n_bad_lang",
-        "n_dup_id", "n_clean"))
+      reportCols)
 
   /** Fold the id index into `batch_id=0`: latest-wins PER KEY on
     * batch_id (each partition holds full cumulative counts for its
@@ -241,12 +214,10 @@ object ContractStream {
     */
   def compactIds(spark: SparkSession, idsDir: String,
                  onDelete: org.apache.hadoop.fs.Path => Unit = _ => ()): Unit =
-    DeltaStore.compact(spark, idsDir, raw => {
-      val w = Window.partitionBy(col("doc_id"), col("source"))
-        .orderBy(col("batch_id").cast("long").desc)
-      raw.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-        .select(col("doc_id"), col("source"), col("n"), col("rc"))
-    }, keepLatest = true, onDelete = onDelete)
+    DeltaStore.compact(spark, idsDir,
+      DeltaStore.latestPerKey(_, Seq("doc_id", "source"))
+        .select(col("doc_id"), col("source"), col("n"), col("rc")),
+      keepLatest = true, onDelete = onDelete)
 
   /** Fold the report store: whole-snapshot latest-wins (the
     * DriftStream histogram fold over the report columns).
@@ -254,7 +225,6 @@ object ContractStream {
   def compactReport(spark: SparkSession, reportDir: String,
                     onDelete: org.apache.hadoop.fs.Path => Unit = _ => ()): Unit =
     DeltaStore.compact(spark, reportDir,
-      DeltaStore.latestSnapshot(_, Seq("source", "n_rows", "n_null_text",
-        "n_len_mismatch", "n_bad_lang", "n_dup_id", "n_clean")),
+      DeltaStore.latestSnapshot(_, reportCols),
       keepLatest = true, onDelete = onDelete)
 }

@@ -1,14 +1,19 @@
 package graft.streaming
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-/** Shared delta-directory store for streaming-maintained indexes
-  * (the LSH band index, the first-seen novelty index): each committed
-  * micro-batch writes a `batch_id=<k>` partition; reads union the
-  * partitions and fold them with an index-specific merge; a compactor
-  * folds everything into `batch_id=0`.
+/** Shared delta-directory store for every streaming-maintained index
+  * in `graft.streaming`, and the ONLY code that knows its layout: each
+  * committed micro-batch writes a `batch_id=<k>` partition
+  * ([[DeltaStore.writeBatch]]); reads union the partitions and fold
+  * them with one of the store's folds (whole-snapshot or per-group
+  * [[DeltaStore.latestSnapshot]], per-key [[DeltaStore.latestPerKey]])
+  * or an index-specific merge; a compactor folds everything into
+  * `batch_id=0`.
   *
   * Crash contract (shared by every index built on this store):
   *  - the maintainer's per-batch write is a DETERMINISTIC overwrite of
@@ -99,6 +104,41 @@ private[graft] object SwapDir {
 
 private[streaming] object DeltaStore {
 
+  /** The one spelling of the layout: batch `k`'s partition under `dir`. */
+  private def partition(dir: String, batchId: Long): String =
+    s"$dir/batch_id=$batchId"
+
+  /** THE one writer of a micro-batch's delta: a DETERMINISTIC
+    * overwrite of `dir/batch_id=<k>` — replaying a batch rewrites its
+    * own partition instead of adding a second copy (the exactly-once-
+    * by-rewrite half of the crash contract above).
+    *
+    * The caller picks the file count. Frames carrying a parallel
+    * pipeline (a join, window or signature pass) should arrive as
+    * `repartition(1)` — an exchange — NOT `coalesce(1)`, which would
+    * collapse that whole upstream pipeline into one task; only the
+    * delta-sized result should funnel to one output file.
+    * `coalesce(1)` suits driver-built frames.
+    */
+  def writeBatch(df: DataFrame, dir: String, batchId: Long): Unit =
+    df.write.mode("overwrite").parquet(partition(dir, batchId))
+
+  /** Paths of the delta partitions strictly older than `batchId`, in
+    * listing order. Empty for an absent store.
+    */
+  def partitionsBefore(spark: SparkSession, dir: String,
+                       batchId: Long): Seq[String] = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(root)) Nil
+    else fs.listStatus(root).toSeq.map(_.getPath).filter { p =>
+      val n = p.getName
+      n.startsWith("batch_id=") &&
+        scala.util.Try(n.stripPrefix("batch_id=").toLong).toOption
+          .exists(_ < batchId)
+    }.map(_.toString)
+  }
+
   /** Raw union of all delta partitions, `batch_id` taken from the
     * partition directories, with a crashed compaction's sibling backup
     * unioned IN PLACE as batch 0. None when the root holds no
@@ -109,7 +149,7 @@ private[streaming] object DeltaStore {
     val conf = spark.sparkContext.hadoopConfiguration
     val root = new Path(indexDir)
     val fs = root.getFileSystem(conf)
-    val zero = new Path(s"$indexDir/batch_id=0")
+    val zero = new Path(partition(indexDir, 0))
     val old = new Path(indexDir + "_old0")
     val backup = !fs.exists(zero) && fs.exists(old)
     val hasParts = fs.exists(root) &&
@@ -137,7 +177,7 @@ private[streaming] object DeltaStore {
     */
   def readScopedOr(spark: SparkSession, indexDir: String,
                    beforeBatch: Option[Long],
-                   schema: org.apache.spark.sql.types.StructType): DataFrame =
+                   schema: StructType): DataFrame =
     readRaw(spark, indexDir) match {
       case Some(raw) =>
         beforeBatch match {
@@ -146,7 +186,7 @@ private[streaming] object DeltaStore {
         }
       case None =>
         spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+          spark.sparkContext.emptyRDD[Row], schema)
     }
 
   /** Whole-snapshot LATEST-WINS fold over a raw delta union: keep only
@@ -158,31 +198,112 @@ private[streaming] object DeltaStore {
     * leftover from a crashed compaction is itself a valid (older)
     * snapshot. Previously copy-pasted per store; a fix to the fold
     * semantics could silently miss a copy (the SwapDir argument).
+    *
+    * With `by` keys the snapshot is per key group: each group keeps
+    * ALL its rows from its own newest batch (GraphStream's per-src
+    * edge-list replacement).
     */
-  def latestSnapshot(raw: DataFrame, cols: Seq[String]): DataFrame = {
-    val w = org.apache.spark.sql.expressions.Window.partitionBy()
+  def latestSnapshot(raw: DataFrame, cols: Seq[String],
+                     by: String*): DataFrame = {
+    val w = Window.partitionBy(by.map(col): _*)
     raw.withColumn("__mx", max(col("batch_id").cast("long")).over(w))
       .filter(col("batch_id").cast("long") === col("__mx"))
       .select(cols.map(col): _*)
+  }
+
+  /** Per-key LATEST-WINS fold: the one row per `keys` group from the
+    * highest NUMERIC batch_id (cast to long — partition discovery may
+    * type small ids as int, and a string order would rank batch 9 over
+    * batch 10). NULL keys form one group, as in a SQL PARTITION BY.
+    * Returns the raw columns (batch_id included); tombstone filters
+    * and projections are the caller's. The id-index store shape
+    * (ContractStream's ids, the vocabulary-keyed count stores, the
+    * signature/cell/node stores): each partition holds the full
+    * current row of every key it touched, so the newest row IS the
+    * key's state, and leftover suffix survivors of a crashed
+    * compaction never shadow batch 0's fold (see the crash contract).
+    */
+  def latestPerKey(raw: DataFrame, keys: Seq[String]): DataFrame = {
+    val w = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("batch_id").cast("long").desc)
+    raw.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+      .drop("__rn")
+  }
+
+  /** Previous state of the keys a micro-batch touches: the scoped read
+    * (`batch_id < batchId`, the replay guard), a null-safe semi-join
+    * on `touched`'s columns, then [[latestPerKey]] over `keys`.
+    * `touched` holds store-named columns, a subset of `keys`
+    * (ContractStream joins on doc_id alone: an id's rows under other
+    * sources matter for its total). The semi-join sits BELOW
+    * the window on purpose — Catalyst cannot push a semi-join through
+    * a window, and filtering whole key groups first is
+    * result-identical — so each batch sorts only its touched keys,
+    * never the whole index.
+    */
+  def readTouched(spark: SparkSession, dir: String, batchId: Long,
+                  schema: StructType, touched: DataFrame,
+                  keys: Seq[String]): DataFrame = {
+    val t = touched.select(touched.columns.map(c => col(c).as(s"__t_$c")): _*)
+      .distinct()
+    val on = touched.columns.map(c => col(c) <=> col(s"__t_$c")).reduce(_ && _)
+    latestPerKey(readScopedOr(spark, dir, Some(batchId), schema)
+      .join(t, on, "left_semi"), keys)
+  }
+
+  /** The cumulative-count add of the vocabulary-keyed count stores:
+    * `batchCounts` (`keys` ++ `counts` columns) plus each touched
+    * key's previous cumulative counts ([[readTouched]]; 0 for a new
+    * key), as `keys` ++ `counts`. The merge join is null-safe: a
+    * using-column join's EqualTo would never match a NULL key, so that
+    * key's cumulative count would silently RESET every batch.
+    */
+  def addToPrevious(spark: SparkSession, dir: String, batchId: Long,
+                    schema: StructType, batchCounts: DataFrame,
+                    keys: Seq[String], counts: Seq[String]): DataFrame = {
+    val prev = readTouched(spark, dir, batchId, schema,
+        batchCounts.select(keys.map(col): _*), keys)
+      .select((keys ++ counts).map(c => col(c).as(s"__p_$c")): _*)
+    batchCounts
+      .join(prev, keys.map(k => col(k) <=> col(s"__p_$k")).reduce(_ && _), "left")
+      .select(keys.map(col) ++ counts.map(c =>
+        (col(c) + coalesce(col(s"__p_$c"), lit(0L))).as(c)): _*)
   }
 
   /** The read-path form of [[latestSnapshot]] over a store directory:
     * scoped raw read (`beforeBatch` = the replay guard), then the
     * max-batch_id snapshot, falling back to the empty frame for an
     * absent store. Two jobs (max + filter) — fine for reporting APIs;
-    * per-micro-batch HOT paths with driver-sized state should collect
-    * once and pick the max driver-side instead (the DriftStream
-    * scoreBatchWith pattern).
+    * per-micro-batch HOT paths with driver-sized state use
+    * [[collectLatestSnapshot]] instead.
     */
   def readLatestSnapshot(spark: SparkSession, indexDir: String,
                          beforeBatch: Option[Long],
-                         schema: org.apache.spark.sql.types.StructType,
+                         schema: StructType,
                          cols: Seq[String]): DataFrame = {
     val raw = readScopedOr(spark, indexDir, beforeBatch, schema)
       .withColumn("batch_id", col("batch_id").cast("long"))
     val latest = raw.agg(max(col("batch_id"))).head().get(0)
     if (latest == null) raw.select(cols.map(col): _*)
     else raw.filter(col("batch_id") === lit(latest)).select(cols.map(col): _*)
+  }
+
+  /** The hot-path form of [[readLatestSnapshot]] for driver-sized
+    * state (a histogram, a report, a prior): ONE collect of the scoped
+    * read, the max-batch_id rows picked on the driver — no second job
+    * and no second store scan per micro-batch. Rows carry `cols` only;
+    * empty for an absent store.
+    */
+  def collectLatestSnapshot(spark: SparkSession, dir: String,
+                            beforeBatch: Option[Long], schema: StructType,
+                            cols: Seq[String]): Seq[Row] = {
+    val rows = readScopedOr(spark, dir, beforeBatch, schema)
+      .select(col("batch_id").cast("long") +: cols.map(col): _*).collect().toSeq
+    if (rows.isEmpty) Nil
+    else {
+      val mx = rows.map(_.getLong(0)).max
+      rows.filter(_.getLong(0) == mx).map(r => Row.fromSeq(r.toSeq.tail))
+    }
   }
 
   /** If a compaction crashed between renaming the old `batch_id=0`
@@ -194,7 +315,7 @@ private[streaming] object DeltaStore {
     */
   private def recoverCompaction(spark: SparkSession, indexDir: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val zero = new Path(s"$indexDir/batch_id=0")
+    val zero = new Path(partition(indexDir, 0))
     SwapDir.recover(zero.getFileSystem(conf), zero,
       new Path(indexDir + "_old0"), "delta-store")
   }
@@ -254,11 +375,11 @@ private[streaming] object DeltaStore {
       } else all
     if (snapshot.isEmpty || snapshot.forall(_.getName == "batch_id=0")) return
     val tmp = new Path(indexDir + "_compacting")
-    val zero = new Path(s"$indexDir/batch_id=0")
+    val zero = new Path(partition(indexDir, 0))
     val old0 = new Path(indexDir + "_old0")
     fold(spark.read.option("basePath", indexDir)
         .parquet(snapshot.map(_.toString): _*))
-      .write.mode("overwrite").parquet(tmp.toString + "/batch_id=0")
+      .write.mode("overwrite").parquet(partition(tmp.toString, 0))
     SwapDir.swap(fs, zero, new Path(tmp, "batch_id=0"), old0,
       "delta-store compaction")
     // OLDEST-FIRST (ascending numeric id): a crash anywhere in this

@@ -152,22 +152,11 @@ object DriftStream {
     val hb: Map[Long, Long] = bucketOf(batch)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // driver-side latest-wins: the store is bucket-count-sized by
-    // design, so collect the raw rows ONCE and pick the max-batch_id
-    // snapshot here — readHistogram's DataFrame form would cost a
-    // second Spark action (agg(max).head) plus a second store scan on
-    // every micro-batch of the hot ingest path
-    // batch_id cast: partition discovery infers INT for small ids
-    // (the empty-store fallback schema says LONG) — normalize
-    val raw = DeltaStore
-      .readScopedOr(spark, refDir, Some(batchId), refSchema)
-      .select(col("bucket"), col("c"), col("batch_id").cast("long")).collect()
-    val ref: Map[Long, Long] =
-      if (raw.isEmpty) Map.empty
-      else {
-        val mx = raw.map(_.getLong(2)).max
-        raw.filter(_.getLong(2) == mx)
-          .map(r => r.getLong(0) -> r.getLong(1)).toMap
-      }
+    // design, so the hot path takes the one-collect form
+    val ref: Map[Long, Long] = DeltaStore
+      .collectLatestSnapshot(spark, refDir, Some(batchId), refSchema,
+        Seq("bucket", "c"))
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
     // combined = reference + this batch: q151's "corpus includes the
     // source", which also guarantees e_b > 0 for every batch bucket
     val combined: Seq[(Long, Long)] = (ref.keySet ++ hb.keySet).toSeq.sorted
@@ -199,9 +188,9 @@ object DriftStream {
             aggregate(col("ts"), lit(0.0),
               (acc, t) => acc + t.getField("term")).as("chi2"))
       }
-    score.write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    combined.toDF("bucket", "c").coalesce(1)
-      .write.mode("overwrite").parquet(s"$refDir/batch_id=$batchId")
+    DeltaStore.writeBatch(score, outDir, batchId)
+    DeltaStore.writeBatch(combined.toDF("bucket", "c").coalesce(1),
+      refDir, batchId)
   }
 
   private val scoreSchema = org.apache.spark.sql.types.StructType(Seq(

@@ -79,26 +79,19 @@ object DsirStream {
     val hb: Map[Long, (Long, Long)] = CurationOps
       .dsirBucketCounts(CurationOps.dsirBigrams(CurationOps.dsirBase(batch), nBuckets))
       .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    // driver-side latest-wins over the scoped read (the replay guard);
-    // batch_id cast: partition discovery infers INT for small ids
-    val raw = DeltaStore
-      .readScopedOr(spark, bucketsDir, Some(batchId), bucketsSchema)
-      .select(col("bucket"), col("cnt_r"), col("cnt_t"),
-        col("batch_id").cast("long")).collect()
-    val ref: Map[Long, (Long, Long)] =
-      if (raw.isEmpty) Map.empty
-      else {
-        val mx = raw.map(_.getLong(3)).max
-        raw.filter(_.getLong(3) == mx)
-          .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      }
+    // driver-side latest-wins over the scoped read (the replay guard)
+    val ref: Map[Long, (Long, Long)] = DeltaStore
+      .collectLatestSnapshot(spark, bucketsDir, Some(batchId), bucketsSchema,
+        Seq("bucket", "cnt_r", "cnt_t"))
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
     val combined = (ref.keySet ++ hb.keySet).toSeq.sorted.map { b =>
       val (pr, pt) = ref.getOrElse(b, (0L, 0L))
       val (br, bt) = hb.getOrElse(b, (0L, 0L))
       (b, pr + br, pt + bt)
     }
-    combined.toDF("bucket", "cnt_r", "cnt_t").coalesce(1)
-      .write.mode("overwrite").parquet(s"$bucketsDir/batch_id=$batchId")
+    DeltaStore.writeBatch(
+      combined.toDF("bucket", "cnt_r", "cnt_t").coalesce(1),
+      bucketsDir, batchId)
   }
 
   /** Current bucket reference: the LATEST cumulative snapshot among

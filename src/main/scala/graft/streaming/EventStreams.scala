@@ -86,14 +86,6 @@ object EventStreams {
         col("window.start").as("window_start"),
         col("event_type"), col("n"), col("sum_value"))
 
-  /** Sliding-window event rate (1 hour window, 15 minute slide). */
-  def slidingRate(events: DataFrame): DataFrame =
-    events
-      .withWatermark("ts", "30 minutes")
-      .groupBy(window(col("ts"), "1 hour", "15 minutes"))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("window_start"), col("n"))
-
   case class Event(event_id: Long, ts: Timestamp, user_id: Long,
                    event_type: String, value: Double)
   case class SessionState(start: Long, last: Long, n: Int, sum: Double)

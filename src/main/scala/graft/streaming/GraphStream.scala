@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -150,37 +149,31 @@ object GraphStream {
           lit(null).cast(IntegerType).as("c1"),
           lit(null).cast(IntegerType).as("c2"),
           lit(true).as("deleted")))
-    nodeRows.repartition(1)
-      .write.mode("overwrite").parquet(s"$nodesDir/batch_id=$batchId")
-    rebuilt.unionByName(sentinels).repartition(1)
-      .write.mode("overwrite").parquet(s"$edgesDir/batch_id=$batchId")
+    DeltaStore.writeBatch(nodeRows.repartition(1), nodesDir, batchId)
+    DeltaStore.writeBatch(rebuilt.unionByName(sentinels).repartition(1),
+      edgesDir, batchId)
   }
 
   /** Current live nodes (vid, vv, c1, c2): per-key latest-wins,
     * tombstoned ids absent.
     */
   def readNodes(spark: SparkSession, nodesDir: String,
-                beforeBatch: Option[Long] = None): DataFrame = {
-    val raw = DeltaStore.readScopedOr(spark, nodesDir, beforeBatch, nodeSchema)
-    val w = Window.partitionBy(col("vid"))
-      .orderBy(col("batch_id").cast("long").desc)
-    raw.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+                beforeBatch: Option[Long] = None): DataFrame =
+    DeltaStore.latestPerKey(
+        DeltaStore.readScopedOr(spark, nodesDir, beforeBatch, nodeSchema),
+        Seq("vid"))
       .filter(!col("deleted"))
       .select(col("vid"), col("vv"), col("c1"), col("c2"))
-  }
 
   /** Current edge table (src, dst, ern): each src's rows from its
     * LATEST touching batch (replacement semantics), sentinels dropped.
     */
   def readEdges(spark: SparkSession, edgesDir: String,
-                beforeBatch: Option[Long] = None): DataFrame = {
-    val raw = DeltaStore.readScopedOr(spark, edgesDir, beforeBatch, edgeSchema)
-    val w = Window.partitionBy(col("src"))
-    raw.withColumn("__mx", max(col("batch_id").cast("long")).over(w))
-      .filter(col("batch_id").cast("long") === col("__mx"))
+                beforeBatch: Option[Long] = None): DataFrame =
+    DeltaStore.latestSnapshot(
+        DeltaStore.readScopedOr(spark, edgesDir, beforeBatch, edgeSchema),
+        Seq("src", "dst", "ern"), "src")
       .filter(col("dst").isNotNull)
-      .select(col("src"), col("dst"), col("ern"))
-  }
 
   /** Serve top-k from the streamed graph: the shared batch walk
     * ([[Similarity.graphServe]]) over the latest-wins state, with the
@@ -205,14 +198,12 @@ object GraphStream {
     */
   def compactNodes(spark: SparkSession, nodesDir: String,
                    onDelete: org.apache.hadoop.fs.Path => Unit = _ => ()): Unit =
-    DeltaStore.compact(spark, nodesDir, raw => {
-      val w = Window.partitionBy(col("vid"))
-        .orderBy(col("batch_id").cast("long").desc)
-      raw.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    DeltaStore.compact(spark, nodesDir,
+      DeltaStore.latestPerKey(_, Seq("vid"))
         .filter(!col("deleted"))
         .select(col("vid"), col("vv"), col("c1"), col("c2"),
-          lit(false).as("deleted"))
-    }, keepLatest = true, onDelete = onDelete)
+          lit(false).as("deleted")),
+      keepLatest = true, onDelete = onDelete)
 
   /** Fold the edges store: per-src latest-batch rows. Sentinels are
     * KEPT (see the object scaladoc — a folded sentinel must keep
@@ -221,10 +212,7 @@ object GraphStream {
     */
   def compactEdges(spark: SparkSession, edgesDir: String,
                    onDelete: org.apache.hadoop.fs.Path => Unit = _ => ()): Unit =
-    DeltaStore.compact(spark, edgesDir, raw => {
-      val w = Window.partitionBy(col("src"))
-      raw.withColumn("__mx", max(col("batch_id").cast("long")).over(w))
-        .filter(col("batch_id").cast("long") === col("__mx"))
-        .select(col("src"), col("dst"), col("ern"))
-    }, keepLatest = true, onDelete = onDelete)
+    DeltaStore.compact(spark, edgesDir,
+      DeltaStore.latestSnapshot(_, Seq("src", "dst", "ern"), "src"),
+      keepLatest = true, onDelete = onDelete)
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
@@ -91,10 +90,8 @@ object IvfStream {
         lit(null).cast(ArrayType(DoubleType)).as("cv"),
         lit(null).cast(cidType).as("center_id"),
         lit(true).as("deleted"))
-    // repartition(1), not coalesce(1) — the ContractStream ids-write
-    // lesson (coalesce would single-task the assignment upstream)
-    assigned.unionByName(dels).repartition(1)
-      .write.mode("overwrite").parquet(s"$cellsDir/batch_id=$batchId")
+    DeltaStore.writeBatch(assigned.unionByName(dels).repartition(1),
+      cellsDir, batchId)
   }
 
   /** Current live cells (cid, cv, center_id): per-key latest-wins,
@@ -102,14 +99,12 @@ object IvfStream {
     * directly servable.
     */
   def readCells(spark: SparkSession, cellsDir: String,
-                beforeBatch: Option[Long] = None): DataFrame = {
-    val raw = DeltaStore.readScopedOr(spark, cellsDir, beforeBatch, cellSchema)
-    val w = Window.partitionBy(col("cid"))
-      .orderBy(col("batch_id").cast("long").desc)
-    raw.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+                beforeBatch: Option[Long] = None): DataFrame =
+    DeltaStore.latestPerKey(
+        DeltaStore.readScopedOr(spark, cellsDir, beforeBatch, cellSchema),
+        Seq("cid"))
       .filter(!col("deleted"))
       .select(col("cid"), col("cv"), col("center_id"))
-  }
 
   /** Serve top-k from the streamed state: the shared batch serve join
     * ([[Similarity.searchIvfIndex]] — probe the frozen quantizer,
@@ -130,15 +125,13 @@ object IvfStream {
     */
   def compactCells(spark: SparkSession, cellsDir: String,
                    onDelete: org.apache.hadoop.fs.Path => Unit = _ => ()): Unit =
-    DeltaStore.compact(spark, cellsDir, raw => {
-      val w = Window.partitionBy(col("cid"))
-        .orderBy(col("batch_id").cast("long").desc)
-      raw.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
+    DeltaStore.compact(spark, cellsDir, raw =>
+      DeltaStore.latestPerKey(raw, Seq("cid"))
         .filter(!col("deleted"))
         // tombstone ROWS are dropped; the deleted COLUMN stays (all
         // false) so the folded partition keeps the store schema —
         // readCells filters on it unconditionally
         .select(col("cid"), col("cv"), col("center_id"),
-          lit(false).as("deleted"))
-    }, keepLatest = false, onDelete = onDelete)
+          lit(false).as("deleted")),
+      keepLatest = false, onDelete = onDelete)
 }

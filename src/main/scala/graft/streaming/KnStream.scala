@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -70,39 +69,21 @@ object KnStream {
     val spark = batch.sparkSession
     val bc = TextAnalytics.knCounts(TextAnalytics.knBigrams(
       batch.select(col("doc_id"), TextAnalytics.toks(col("text")).as("t"))))
-    val bk = bc.select(col("w1").as("b_w1"), col("w2").as("b_w2")).distinct()
-    val prevRaw = DeltaStore.readScopedOr(spark, countsDir, Some(batchId), countsSchema)
-      .select(col("w1"), col("w2"), col("c12"),
-        col("batch_id").cast("long").as("batch_id"))
-      .join(bk, col("w1") <=> col("b_w1") && col("w2") <=> col("b_w2"),
-        "left_semi")
-    val wkey = Window.partitionBy(col("w1"), col("w2"))
-      .orderBy(col("batch_id").desc)
-    val prevTouched = prevRaw
-      .withColumn("__rn", row_number().over(wkey)).filter(col("__rn") === 1)
-      .select(col("w1"), col("w2"), col("c12").as("p12"))
-    val merged = bc
-      .join(prevTouched, Seq("w1", "w2"), "left")
-      .select(col("w1"), col("w2"),
-        (col("c12") + coalesce(col("p12"), lit(0L))).as("c12"))
-    // repartition (an exchange), not coalesce: keep the merge parallel
-    merged.repartition(1)
-      .write.mode("overwrite").parquet(s"$countsDir/batch_id=$batchId")
+    DeltaStore.writeBatch(
+      DeltaStore.addToPrevious(spark, countsDir, batchId, countsSchema, bc,
+        Seq("w1", "w2"), Seq("c12")).repartition(1),
+      countsDir, batchId)
   }
 
   /** Current cumulative bigram counts: latest-wins per (w1, w2) over
     * the visible partitions. An absent store is a valid empty model.
     */
   def readCounts(spark: SparkSession, countsDir: String,
-                 beforeBatch: Option[Long] = None): DataFrame = {
-    val raw = DeltaStore.readScopedOr(spark, countsDir, beforeBatch, countsSchema)
-      .select(col("w1"), col("w2"), col("c12"),
-        col("batch_id").cast("long").as("batch_id"))
-    val wk = Window.partitionBy(col("w1"), col("w2"))
-      .orderBy(col("batch_id").desc)
-    raw.withColumn("__rn", row_number().over(wk)).filter(col("__rn") === 1)
+                 beforeBatch: Option[Long] = None): DataFrame =
+    DeltaStore.latestPerKey(
+        DeltaStore.readScopedOr(spark, countsDir, beforeBatch, countsSchema),
+        Seq("w1", "w2"))
       .select(col("w1"), col("w2"), col("c12"))
-  }
 
   /** Score candidates against the ACCUMULATED model: the batch
     * kernel's exact scoring chain
@@ -125,10 +106,8 @@ object KnStream {
     */
   def compact(spark: SparkSession, countsDir: String,
               onDelete: org.apache.hadoop.fs.Path => Unit = _ => ()): Unit =
-    DeltaStore.compact(spark, countsDir, raw => {
-      val w = Window.partitionBy(col("w1"), col("w2"))
-        .orderBy(col("batch_id").cast("long").desc)
-      raw.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-        .select(col("w1"), col("w2"), col("c12"))
-    }, keepLatest = true, onDelete = onDelete)
+    DeltaStore.compact(spark, countsDir,
+      DeltaStore.latestPerKey(_, Seq("w1", "w2"))
+        .select(col("w1"), col("w2"), col("c12")),
+      keepLatest = true, onDelete = onDelete)
 }

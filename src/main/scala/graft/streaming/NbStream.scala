@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -95,27 +94,10 @@ object NbStream {
     val base = TextAnalytics.nbBase(batch).persist()
     try {
     val btc = TextAnalytics.nbTokenCounts(TextAnalytics.nbOccurrences(base))
-    // previous cumulative counts for the batch's tokens only: scoped
-    // read (the replay guard), semi-join BELOW the latest-wins window
-    // (w is the partition key, so filtering whole key groups first is
-    // result-identical — the ContractStream argument)
-    val bw = btc.select(col("w").as("b_w")).distinct()
-    val prevRaw = DeltaStore.readScopedOr(spark, tokensDir, Some(batchId), tokensSchema)
-      .select(col("w"), col("c_pos"), col("c_neg"),
-        col("batch_id").cast("long").as("batch_id"))
-      .join(bw, col("w") <=> col("b_w"), "left_semi")
-    val wkey = Window.partitionBy(col("w")).orderBy(col("batch_id").desc)
-    val prevTouched = prevRaw
-      .withColumn("__rn", row_number().over(wkey)).filter(col("__rn") === 1)
-      .select(col("w"), col("c_pos").as("p_pos"), col("c_neg").as("p_neg"))
-    val merged = btc
-      .join(prevTouched, Seq("w"), "left")
-      .select(col("w"),
-        (col("c_pos") + coalesce(col("p_pos"), lit(0L))).as("c_pos"),
-        (col("c_neg") + coalesce(col("p_neg"), lit(0L))).as("c_neg"))
-    // repartition (an exchange), not coalesce: keep the merge parallel
-    merged.repartition(1)
-      .write.mode("overwrite").parquet(s"$tokensDir/batch_id=$batchId")
+    DeltaStore.writeBatch(
+      DeltaStore.addToPrevious(spark, tokensDir, batchId, tokensSchema, btc,
+        Seq("w"), Seq("c_pos", "c_neg")).repartition(1),
+      tokensDir, batchId)
     // sum over an EMPTY batch aggregates to NULL — an empty batch
     // contributes zero documents to either class
     val bp = TextAnalytics.nbPriorCounts(base).head()
@@ -123,9 +105,9 @@ object NbStream {
       (if (bp.isNullAt(0)) 0L else bp.getLong(0),
         if (bp.isNullAt(1)) 0L else bp.getLong(1))
     val (ppd, pnd) = readPrior(spark, priorDir, Some(batchId))
-    Seq((ppd + bpd, pnd + bnd))
-      .toDF("npd", "nnd").coalesce(1)
-      .write.mode("overwrite").parquet(s"$priorDir/batch_id=$batchId")
+    DeltaStore.writeBatch(
+      Seq((ppd + bpd, pnd + bnd)).toDF("npd", "nnd").coalesce(1),
+      priorDir, batchId)
     } finally
       // in finally: a failed write replays the batch in the same
       // session, and each attempt would otherwise pin another copy
@@ -136,29 +118,20 @@ object NbStream {
     * visible partitions. An absent store is a valid empty model.
     */
   def readTokenCounts(spark: SparkSession, tokensDir: String,
-                      beforeBatch: Option[Long] = None): DataFrame = {
-    val raw = DeltaStore.readScopedOr(spark, tokensDir, beforeBatch, tokensSchema)
-      .select(col("w"), col("c_pos"), col("c_neg"),
-        col("batch_id").cast("long").as("batch_id"))
-    val wk = Window.partitionBy(col("w")).orderBy(col("batch_id").desc)
-    raw.withColumn("__rn", row_number().over(wk)).filter(col("__rn") === 1)
+                      beforeBatch: Option[Long] = None): DataFrame =
+    DeltaStore.latestPerKey(
+        DeltaStore.readScopedOr(spark, tokensDir, beforeBatch, tokensSchema),
+        Seq("w"))
       .select(col("w"), col("c_pos"), col("c_neg"))
-  }
 
   /** Current cumulative (npd, nnd) prior counts — latest-wins snapshot
     * (driver-side: the store is one row per batch by design).
     */
   private[streaming] def readPrior(spark: SparkSession, priorDir: String,
-                                   beforeBatch: Option[Long] = None): (Long, Long) = {
-    val raw = DeltaStore.readScopedOr(spark, priorDir, beforeBatch, priorSchema)
-      .select(col("npd"), col("nnd"), col("batch_id").cast("long")).collect()
-    if (raw.isEmpty) (0L, 0L)
-    else {
-      val mx = raw.map(_.getLong(2)).max
-      val r = raw.filter(_.getLong(2) == mx).head
-      (r.getLong(0), r.getLong(1))
-    }
-  }
+                                   beforeBatch: Option[Long] = None): (Long, Long) =
+    DeltaStore.collectLatestSnapshot(spark, priorDir, beforeBatch, priorSchema,
+        Seq("npd", "nnd"))
+      .headOption.fold((0L, 0L))(r => (r.getLong(0), r.getLong(1)))
 
   /** Score + label candidates against the ACCUMULATED model: the
     * batch kernel's exact scoring chain
@@ -185,12 +158,10 @@ object NbStream {
     */
   def compactTokens(spark: SparkSession, tokensDir: String,
                     onDelete: org.apache.hadoop.fs.Path => Unit = _ => ()): Unit =
-    DeltaStore.compact(spark, tokensDir, raw => {
-      val w = Window.partitionBy(col("w"))
-        .orderBy(col("batch_id").cast("long").desc)
-      raw.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-        .select(col("w"), col("c_pos"), col("c_neg"))
-    }, keepLatest = true, onDelete = onDelete)
+    DeltaStore.compact(spark, tokensDir,
+      DeltaStore.latestPerKey(_, Seq("w"))
+        .select(col("w"), col("c_pos"), col("c_neg")),
+      keepLatest = true, onDelete = onDelete)
 
   /** Fold the prior store: whole-snapshot latest-wins. */
   def compactPrior(spark: SparkSession, priorDir: String,

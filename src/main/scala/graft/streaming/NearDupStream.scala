@@ -165,19 +165,7 @@ object NearDupStream {
         // history read included the batch's own keys, the replay would
         // dedup the batch against itself, emit zero survivors, and
         // overwrite both outputs with empty data.
-        val priorBatches = {
-          val p = new org.apache.hadoop.fs.Path(historyDir)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (!fs.exists(p)) Array.empty[String]
-          else fs.listStatus(p).map(_.getPath)
-            .filter { d =>
-              val n = d.getName
-              n.startsWith("batch_id=") &&
-                scala.util.Try(n.stripPrefix("batch_id=").toLong)
-                  .toOption.exists(_ < batchId)
-            }
-            .map(_.toString)
-        }
+        val priorBatches = DeltaStore.partitionsBefore(spark, historyDir, batchId)
         val survivors =
           if (priorBatches.nonEmpty)
             Dedup.dedupAgainstHistory(inBatch,
@@ -186,10 +174,8 @@ object NearDupStream {
         // cache: referenced by both the data write and the key write
         survivors.persist()
         try {
-          survivors.write.mode("overwrite")
-            .parquet(s"$outDir/batch_id=$batchId")
-          survivors.select(col(keyCol)).write.mode("overwrite")
-            .parquet(s"$historyDir/batch_id=$batchId")
+          DeltaStore.writeBatch(survivors, outDir, batchId)
+          DeltaStore.writeBatch(survivors.select(col(keyCol)), historyDir, batchId)
         } finally survivors.unpersist(blocking = false)
   }
 
@@ -247,13 +233,13 @@ object NearDupStream {
     val delta = Dedup.upsertBandIndex(
       emptyIdx, batch, nHashes, bandSize, shingleSize, route = route,
       fold = fold)
-    delta.write.mode("overwrite").parquet(s"$indexDir/batch_id=$batchId")
+    DeltaStore.writeBatch(delta, indexDir, batchId)
   }
 
   /** Current view of a streaming-maintained band index: all delta
     * partitions, each doc represented by its LATEST batch's rows
-    * (merge-on-read — one doc-count-sized winner aggregate + an
-    * equi-join, the cost compaction amortizes away). Feed this to
+    * (merge-on-read — one per-doc window over the index, the cost
+    * compaction amortizes away). Feed this to
     * [[graft.ops.Dedup.probeBandIndex]].
     */
   def readBandIndex(spark: SparkSession, indexDir: String): DataFrame =
@@ -263,12 +249,12 @@ object NearDupStream {
       // zero-state)
       .getOrElse(spark.read.parquet(indexDir)))
 
-  /** Latest-batch-wins view of a (…, doc_id, batch_id) delta union. */
-  private def mergeOnRead(all: DataFrame): DataFrame = {
-    val latest = all.groupBy(col("doc_id"))
-      .agg(max(col("batch_id")).as("batch_id"))
-    all.join(latest, Seq("doc_id", "batch_id")).drop("batch_id")
-  }
+  /** Latest-batch-wins view of a (…, doc_id, batch_id) delta union:
+    * each doc keeps ALL its band rows from its newest batch.
+    */
+  private def mergeOnRead(all: DataFrame): DataFrame =
+    DeltaStore.latestSnapshot(all,
+      "doc_id" +: all.columns.filterNot(Set("doc_id", "batch_id")), "doc_id")
 
   /** Fold the delta partitions present AT ENTRY into `batch_id=0`,
     * dropping superseded rows — [[DeltaStore.compact]] with the

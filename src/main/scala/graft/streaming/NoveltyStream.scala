@@ -56,10 +56,10 @@ object NoveltyStream {
                                     n: Int): Unit = {
     val spark = batch.sparkSession
     val index = readFirstSeen(spark, indexDir, beforeBatch = Some(batchId))
-    CorpusDrift.noveltyAgainstIndexBloom(index, batch, n)
-      .write.mode("overwrite").parquet(s"$outDir/batch_id=$batchId")
-    CorpusDrift.buildFirstSeen(batch, n)
-      .write.mode("overwrite").parquet(s"$indexDir/batch_id=$batchId")
+    DeltaStore.writeBatch(CorpusDrift.noveltyAgainstIndexBloom(index, batch, n),
+      outDir, batchId)
+    DeltaStore.writeBatch(CorpusDrift.buildFirstSeen(batch, n),
+      indexDir, batchId)
   }
 
   /** Current first-seen view of the streaming-maintained index:

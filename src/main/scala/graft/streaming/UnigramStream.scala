@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
@@ -61,44 +60,21 @@ object UnigramStream {
                                      swDir: String): Unit = {
     val spark = batch.sparkSession
     val bc = UnigramLm.sourceWordCounts(batch)
-    val bk = bc.select(col("source").as("b_s"), col("word").as("b_w")).distinct()
-    val prevRaw = DeltaStore.readScopedOr(spark, swDir, Some(batchId), swSchema)
-      .select(col("source"), col("word"), col("swn"),
-        col("batch_id").cast("long").as("batch_id"))
-      .join(bk, col("source") <=> col("b_s") && col("word") <=> col("b_w"),
-        "left_semi")
-    val wkey = Window.partitionBy(col("source"), col("word"))
-      .orderBy(col("batch_id").desc)
-    val prevTouched = prevRaw
-      .withColumn("__rn", row_number().over(wkey)).filter(col("__rn") === 1)
-      .select(col("source").as("p_s"), col("word").as("p_w"),
-        col("swn").as("p_n"))
-    // null-safe merge join: `source` is nullable (junk rows are keyed,
-    // not dropped), and a using-column join's EqualTo would never
-    // match the null-source key — its cumulative count would silently
-    // RESET every batch (caught by the null-key spec)
-    val merged = bc
-      .join(prevTouched,
-        col("source") <=> col("p_s") && col("word") <=> col("p_w"), "left")
-      .select(col("source"), col("word"),
-        (col("swn") + coalesce(col("p_n"), lit(0L))).as("swn"))
-    merged.repartition(1)
-      .write.mode("overwrite").parquet(s"$swDir/batch_id=$batchId")
+    DeltaStore.writeBatch(
+      DeltaStore.addToPrevious(spark, swDir, batchId, swSchema, bc,
+        Seq("source", "word"), Seq("swn")).repartition(1),
+      swDir, batchId)
   }
 
   /** Current cumulative (source, word) counts: latest-wins per key.
     * An absent store is a valid empty corpus.
     */
   def readCounts(spark: SparkSession, swDir: String,
-                 beforeBatch: Option[Long] = None): DataFrame = {
-    val raw = DeltaStore.readScopedOr(spark, swDir, beforeBatch, swSchema)
-      .select(col("source"), col("word"), col("swn"),
-        col("batch_id").cast("long").as("batch_id"))
-    val wk = Window.partitionBy(col("source"), col("word"))
-      .orderBy(col("batch_id").desc)
-    raw.withColumn("__rn", row_number().over(wk)).filter(col("__rn") === 1)
+                 beforeBatch: Option[Long] = None): DataFrame =
+    DeltaStore.latestPerKey(
+        DeltaStore.readScopedOr(spark, swDir, beforeBatch, swSchema),
+        Seq("source", "word"))
       .select(col("source"), col("word"), col("swn"))
-  }
 
   /** The q192 report rebuilt from accumulated state — the batch
     * kernel's own derivation chain over the streamed counts.
@@ -129,10 +105,8 @@ object UnigramStream {
   /** Fold the store into `batch_id=0`: latest-wins PER KEY. */
   def compact(spark: SparkSession, swDir: String,
               onDelete: org.apache.hadoop.fs.Path => Unit = _ => ()): Unit =
-    DeltaStore.compact(spark, swDir, raw => {
-      val w = Window.partitionBy(col("source"), col("word"))
-        .orderBy(col("batch_id").cast("long").desc)
-      raw.withColumn("__rn", row_number().over(w)).filter(col("__rn") === 1)
-        .select(col("source"), col("word"), col("swn"))
-    }, keepLatest = true, onDelete = onDelete)
+    DeltaStore.compact(spark, swDir,
+      DeltaStore.latestPerKey(_, Seq("source", "word"))
+        .select(col("source"), col("word"), col("swn")),
+      keepLatest = true, onDelete = onDelete)
 }

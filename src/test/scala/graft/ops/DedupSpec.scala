@@ -97,6 +97,37 @@ class DedupSpec extends SparkSpec {
     assert(local.nonEmpty)
   }
 
+  test("connectedComponents: concurrent distributed calls leave the session conf alone") {
+    val rnd = new scala.util.Random(11)
+    val pairs = Seq.fill(400)((rnd.nextInt(150).toLong, rnd.nextInt(150).toLong))
+      .filter(p => p._1 != p._2).toDF("a", "b")
+    def run(): Map[Long, Long] =
+      Dedup.connectedComponents(pairs, localEdgeLimit = 0L)
+        .as[(Long, Long)].collect().toMap
+    val serial = run()
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.enabled")
+    def settings(): Seq[String] = keys.map(spark.conf.get)
+    val before = settings()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    try {
+      @volatile var running = true
+      val sampler = pool.submit(new java.util.concurrent.Callable[Set[Seq[String]]] {
+        def call(): Set[Seq[String]] = {
+          val seen = Set.newBuilder[Seq[String]]
+          while (running) { seen += settings(); Thread.sleep(1) }
+          seen.result()
+        }
+      })
+      val calls = Seq.fill(2)(pool.submit(new java.util.concurrent.Callable[Map[Long, Long]] {
+        def call(): Map[Long, Long] = run()
+      }))
+      val results = try calls.map(_.get()) finally running = false
+      results.foreach(r => assert(r == serial))
+      assert(sampler.get() == Set(before), "a CC call changed the shared session conf")
+      assert(settings() == before)
+    } finally pool.shutdown()
+  }
+
   /** The driver fast path must dispatch on ESTIMATED BYTES, not edge
     * count: fat string ids (URLs, content hashes) blow a default
     * driver heap at edge counts that are safe for longs. Estimate =
