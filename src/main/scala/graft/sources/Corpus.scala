@@ -62,18 +62,20 @@ object Corpus {
     * PresenceVectorAgg, corrupting the index. (Deliberate divergence
     * from raw getFileCount: only files matching the anchored doc-id
     * pattern count, consistent with what the ingest actually reads.)
+    * Walks with `listStatus`, not `listFiles`: the latter builds a
+    * `LocatedFileStatus` per file, which on the local filesystem loads
+    * each file's permission with a per-file lookup.
     */
   def fileCount(spark: SparkSession, dir: String): Int = {
     val path = new org.apache.hadoop.fs.Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val namePat = java.util.regex.Pattern.compile("^\\d{1,9}\\.[^/.]*$")
-    val it = fs.listFiles(path, true)
-    var n = 0
-    while (it.hasNext) {
-      val st = it.next()
-      if (st.isFile && namePat.matcher(st.getPath.getName).matches()) n += 1
-    }
-    n
+    def count(p: org.apache.hadoop.fs.Path): Int = fs.listStatus(p).iterator.map { st =>
+      if (!st.isFile) count(st.getPath)
+      else if (namePat.matcher(st.getPath.getName).matches()) 1
+      else 0
+    }.sum
+    count(path)
   }
 
   /** Stopword side-input (reference S5: DistributedCache file,
@@ -84,8 +86,7 @@ object Corpus {
     spark.read.text(path)
       .select(explode(split(col("value"), "\\s+")).as("w"))
       .filter(length(col("w")) > 0)
-      .distinct()
-      .collect().map(_.getString(0)).toSeq.sorted
+      .collect().map(_.getString(0)).distinct.toSeq.sorted
 
   /** Centroid side-input (reference S6 + K1: one `[b1,b2,...,bN,]`
     * bracket-vector per line, :545-557,579-590), N-dimensional

@@ -9,7 +9,9 @@ import scala.jdk.CollectionConverters._
   *    spells the `batch_id=<k>` layout or folds a window over
   *    `batch_id` (the one exception: `BloomStream.readWords`' read of
   *    the two newest snapshots, its guard against a torn newest write);
-  *  - `Dedup` writes no session conf.
+  *  - `Dedup` writes no session conf;
+  *  - no main code lists files through Hadoop's `listFiles` or
+  *    `listLocatedStatus`.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -51,5 +53,24 @@ class SourceGuardSpec extends AnyFunSuite {
       case (l, i) if l.contains("conf.set") => s"$p:${i + 1}: ${l.trim}"
     }
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no Hadoop listFiles or listLocatedStatus walk in src/main") {
+    val files = {
+      val s = Files.walk(Paths.get("src/main"))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally s.close()
+    }
+    // java.io.File#listFiles() takes no arguments and stays allowed
+    val located = """listFiles\(\s*[^\s)]|listLocatedStatus\(""".r
+    val hits = files.flatMap { p =>
+      codeLines(p).collect {
+        case (l, i) if located.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(hits.isEmpty,
+      "walk with FileSystem.listStatus instead: listFiles/listLocatedStatus build a " +
+        "LocatedFileStatus per file, a per-file permission lookup on the local " +
+        "filesystem\n" + hits.mkString("\n"))
   }
 }

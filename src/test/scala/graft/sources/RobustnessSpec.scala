@@ -63,6 +63,20 @@ class RobustnessSpec extends SparkSpec {
     assert(Corpus.fileCount(spark, dir.toString) == 3)
   }
 
+  test("fileCount walks subdirectories and counts only doc-named files") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-walk")
+    java.nio.file.Files.write(dir.resolve("1.txt"), "alpha".getBytes)
+    java.nio.file.Files.write(dir.resolve("4.txt"), Array.emptyByteArray)
+    java.nio.file.Files.write(dir.resolve("9.txt"), Array.emptyByteArray)
+    val nested = java.nio.file.Files.createDirectories(dir.resolve("part/deeper"))
+    java.nio.file.Files.write(nested.resolve("2.txt"), "beta".getBytes)
+    // a directory named like a doc is not a doc itself; its files are
+    val docNamedDir = java.nio.file.Files.createDirectory(dir.resolve("7.d"))
+    java.nio.file.Files.write(docNamedDir.resolve("5.txt"), "gamma".getBytes)
+    java.nio.file.Files.write(dir.resolve("notes.txt"), "not a doc".getBytes)
+    assert(Corpus.fileCount(spark, dir.toString) == 5)
+  }
+
   test("corpus scan skips non-numeric filenames instead of failing the job") {
     val dir = java.nio.file.Files.createTempDirectory("graft-mixed")
     java.nio.file.Files.write(dir.resolve("1.txt"), "alpha beta".getBytes)
