@@ -413,10 +413,10 @@ object CorpusDrift {
     "q163_quality_drift",
     s"""WITH f AS (
        |  SELECT source,
-       |    CAST(len(t) AS BIGINT) AS nt,
-       |    (length(text) - length(regexp_replace(text, '\\p{P}', '', 'g'))) / length(text) AS punct_ratio,
-       |    (length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text) AS digit_ratio,
-       |    len(list_filter(t, x -> x IN ('the','a','an','and','of','to','is','in','it','on'))) / len(t) AS stop_ratio
+       |    ${TwinSql.nTokens("t")} AS nt,
+       |    ${TwinSql.punctRatio("text")} AS punct_ratio,
+       |    ${TwinSql.digitRatio("text")} AS digit_ratio,
+       |    ${TwinSql.stopRatio("t")} AS stop_ratio
        |  FROM (SELECT source, text, $duckToks AS t FROM documents)),
        |b AS (
        |  SELECT source,

@@ -237,16 +237,14 @@ object CurationOps {
     "q93_quality_quantile_filter",
     s"""WITH base AS (
        |  SELECT doc_id, lang,
-       |    CAST(len(t) AS BIGINT) AS n_tokens,
-       |    (length(text) - length(regexp_replace(text, '\\p{P}', '', 'g'))) / length(text) AS punct_ratio,
-       |    (length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text) AS digit_ratio,
-       |    len(list_filter(t, x -> x IN ('the','a','an','and','of','to','is','in','it','on'))) / len(t) AS stop_ratio
+       |    ${TwinSql.nTokens("t")} AS n_tokens,
+       |    ${TwinSql.punctRatio("text")} AS punct_ratio,
+       |    ${TwinSql.digitRatio("text")} AS digit_ratio,
+       |    ${TwinSql.stopRatio("t")} AS stop_ratio
        |  FROM (SELECT doc_id, lang, text, $duckToks AS t FROM documents)),
        |q AS (
        |  SELECT doc_id, lang,
-       |    (1.0 - punct_ratio) * (1.0 - digit_ratio)
-       |      * least(1.0, n_tokens / 64.0)
-       |      * (0.5 + stop_ratio) AS qscore
+       |    ${TwinSql.qscore("punct_ratio", "digit_ratio", "n_tokens", "stop_ratio")} AS qscore
        |  FROM base),
        |r AS (
        |  SELECT doc_id, lang, qscore,
@@ -1517,26 +1515,18 @@ object CurationOps {
     */
   def hostCurationRollup(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val stopsArr = array(TextAnalytics.probeStops.map(lit): _*)
+    import TextAnalytics.{digitRatio, gopherCounters, gopherPass, punctRatio}
     val url = concat(lit("https://www."), col("source"), pmod(col("doc_id"), lit(3)),
       lit(".example.com/docs/d"), col("doc_id"), lit(".html"))
     val base = docs
       .select(col("doc_id"), col("source"), col("text"), toks(col("text")).as("t"))
-      .select(col("doc_id"),
-        parse_url(url, lit("HOST")).as("host"),
-        when(col("t").isNotNull, size(col("t"))).cast("bigint").as("nt"),
-        aggregate(col("t"), lit(0L), (a, x) => a + length(x).cast("bigint")).as("sl"),
-        when(col("t").isNotNull, size(filter(col("t"), x => x.rlike("[A-Za-z]"))))
-          .cast("bigint").as("na"),
-        when(col("t").isNotNull, size(filter(col("t"), x => array_contains(stopsArr, x))))
-          .cast("bigint").as("ns"),
-        ((length(col("text")) - length(regexp_replace(col("text"), "\\p{P}", "")))
-          / length(col("text"))).as("punct_ratio"),
-        ((length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-          / length(col("text"))).as("digit_ratio"))
+      .select(Seq(col("doc_id"), parse_url(url, lit("HOST")).as("host")) ++
+        gopherCounters(col("t")) :+
+        punctRatio(col("text")).as("punct_ratio") :+
+        digitRatio(col("text")).as("digit_ratio"): _*)
     val flagged = base.select(col("doc_id"), col("host"),
-      when(TextAnalytics.gopherRuleFlags(col("nt"), col("sl"), col("na"), col("ns"))
-        .reduce(_ && _), 0L).otherwise(1L).as("gfail"),
+      when(gopherPass(col("nt"), col("sl"), col("na"), col("ns")), 0L)
+        .otherwise(1L).as("gfail"),
       when(col("nt") > 0 &&
         floor(TextAnalytics.rationalSigmoid(
           TextAnalytics.classifierZ(col("ns") / col("nt"), col("nt"),
@@ -1569,18 +1559,13 @@ object CurationOps {
        |    regexp_extract('https://www.' || source || ((doc_id % 3) + 3) % 3
        |        || '.example.com/docs/d' || doc_id || '.html',
        |      '^https://([^/]+)/', 1) AS host,
-       |    CAST(len(t) AS BIGINT) AS nt,
-       |    CAST(COALESCE(list_sum(list_transform(t, x -> length(x))), 0) AS BIGINT) AS sl,
-       |    CAST(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT) AS na,
-       |    CAST(len(list_filter(t, x -> x IN ('the','a','an','and','of','to','is','in','it','on'))) AS BIGINT) AS ns,
-       |    (length(text) - length(regexp_replace(text, '\\p{P}', '', 'g'))) / length(text) AS punct_ratio,
-       |    (length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text) AS digit_ratio
+       |    ${TwinSql.gopherCounters("t")},
+       |    ${TwinSql.punctRatio("text")} AS punct_ratio,
+       |    ${TwinSql.digitRatio("text")} AS digit_ratio
        |  FROM (SELECT doc_id, source, text, $duckToks AS t FROM documents)),
        |m AS (
        |  SELECT h.host,
-       |    CASE WHEN h.nt >= 50 AND h.nt <= 100000
-       |           AND 3 * h.nt <= h.sl AND h.sl <= 10 * h.nt
-       |           AND 10 * h.na >= 8 * h.nt AND h.ns >= 2
+       |    CASE WHEN ${TwinSql.gopherPass("h.nt", "h.sl", "h.na", "h.ns")}
        |      THEN 0 ELSE 1 END AS gfail,
        |    CASE WHEN h.nt > 0 AND
        |        CAST(floor((${TwinSql.rationalSigmoid(
@@ -1628,9 +1613,10 @@ object CurationOps {
     * Pure composition of single definitions on BOTH engines:
     * [[vNull]]/[[vLen]]/[[vLang]] + the q152 dup window,
     * [[graft.ops.Dedup.jaccardPairs]] + connectedComponents (the one
-    * cluster definition), [[TextAnalytics.gopherRuleFlags]], and the
+    * cluster definition), the quality features and
+    * [[TextAnalytics.gopherPass]], and the
     * [[TextAnalytics.classifierZ]]/[[TextAnalytics.rationalSigmoid]]
-    * pair, with the q179 feature formulas verbatim. Counts are exact
+    * pair (TwinSql's same-named fragments on the twin). Counts are exact
     * integers; survival_frac is one literal division.
     *
     * Stage conventions: a stage-k flag REQUIRES the stage-(k-1) flag,
@@ -1654,8 +1640,8 @@ object CurationOps {
     */
   def curationFunnel(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    import TextAnalytics.{classifierZ, gopherRuleFlags, probeStops, rationalSigmoid}
-    val stopsArr = array(probeStops.map(lit): _*)
+    import TextAnalytics.{classifierZ, digitRatio, gopherPass, nAlpha, nStop, nTokens,
+      punctRatio, rationalSigmoid, sumLen}
     val wid = Window.partitionBy(col("doc_id"))
     val wkey = Window.partitionBy(col("k2"))
     val flagged0 = docs
@@ -1681,24 +1667,15 @@ object CurationOps {
         when(col("p2") === 1 &&
           (col("component").isNull || col("component") === col("doc_id")), 1L)
           .otherwise(0L))
-      // the q179 feature formulas, verbatim
-      .withColumn("nt", when(col("t").isNotNull, size(col("t"))).cast("bigint"))
-      .withColumn("sl",
-        aggregate(col("t"), lit(0L), (a, x) => a + length(x).cast("bigint")))
-      .withColumn("na", when(col("t").isNotNull,
-        size(filter(col("t"), x => x.rlike("[A-Za-z]")))).cast("bigint"))
-      .withColumn("ns", when(col("t").isNotNull,
-        size(filter(col("t"), x => array_contains(stopsArr, x)))).cast("bigint"))
+      .withColumn("nt", nTokens(col("t")).cast("bigint"))
+      .withColumn("sl", sumLen(col("t")))
+      .withColumn("na", nAlpha(col("t")).cast("bigint"))
+      .withColumn("ns", nStop(col("t")).cast("bigint"))
       .withColumn("p4",
         when(col("p3") === 1 &&
-          gopherRuleFlags(col("nt"), col("sl"), col("na"), col("ns"))
-            .reduce(_ && _), 1L).otherwise(0L))
-      .withColumn("punct_ratio",
-        (length(col("text")) - length(regexp_replace(col("text"), "\\p{P}", "")))
-          / length(col("text")))
-      .withColumn("digit_ratio",
-        (length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-          / length(col("text")))
+          gopherPass(col("nt"), col("sl"), col("na"), col("ns")), 1L).otherwise(0L))
+      .withColumn("punct_ratio", punctRatio(col("text")))
+      .withColumn("digit_ratio", digitRatio(col("text")))
       .withColumn("p5",
         when(col("p4") === 1 &&
           rationalSigmoid(classifierZ(col("ns") / col("nt"), col("nt"),
@@ -1770,18 +1747,13 @@ object CurationOps {
        |  FROM c2 LEFT JOIN comp ON comp.doc_id = c2.doc_id),
        |g AS (
        |  SELECT f.*,
-       |    CAST(len(t) AS BIGINT) AS nt,
-       |    CAST(COALESCE(list_sum(list_transform(t, x -> length(x))), 0) AS BIGINT) AS sl,
-       |    CAST(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT) AS na,
-       |    CAST(len(list_filter(t, x -> x IN ('the','a','an','and','of','to','is','in','it','on'))) AS BIGINT) AS ns,
-       |    (length(text) - length(regexp_replace(text, '\\p{P}', '', 'g'))) / length(text) AS punct_ratio,
-       |    (length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text) AS digit_ratio
+       |    ${TwinSql.gopherCounters("t")},
+       |    ${TwinSql.punctRatio("text")} AS punct_ratio,
+       |    ${TwinSql.digitRatio("text")} AS digit_ratio
        |  FROM f),
        |h AS (
        |  SELECT g.*,
-       |    CASE WHEN p3 = 1 AND nt >= 50 AND nt <= 100000
-       |           AND 3 * nt <= sl AND sl <= 10 * nt
-       |           AND 10 * na >= 8 * nt AND ns >= 2
+       |    CASE WHEN p3 = 1 AND ${TwinSql.gopherPass("nt", "sl", "na", "ns")}
        |      THEN 1 ELSE 0 END AS p4
        |  FROM g),
        |i AS (
@@ -1859,18 +1831,13 @@ object CurationOps {
     */
   private[graft] def dsirBase(docs: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
-    val stopsArr = array(TextAnalytics.probeStops.map(lit): _*)
+    import TextAnalytics.{gopherCounters, gopherPass}
     docs
       .select(col("doc_id"), col("source"), toks(col("text")).as("t"))
-      .select(col("doc_id"), col("source"), col("t"),
-        size(col("t")).cast("bigint").as("nt"),
-        aggregate(col("t"), lit(0L), (a, x) => a + length(x).cast("bigint")).as("sl"),
-        size(filter(col("t"), x => x.rlike("[A-Za-z]"))).cast("bigint").as("na"),
-        size(filter(col("t"), x => array_contains(stopsArr, x))).cast("bigint").as("ns"))
+      .select(Seq(col("doc_id"), col("source"), col("t")) ++ gopherCounters(col("t")): _*)
       .filter(col("nt") >= 2)
       .withColumn("is_target",
-        when(TextAnalytics.gopherRuleFlags(col("nt"), col("sl"), col("na"), col("ns"))
-          .reduce(_ && _), 1L).otherwise(0L))
+        when(gopherPass(col("nt"), col("sl"), col("na"), col("ns")), 1L).otherwise(0L))
   }
 
   /** One bucket id per bigram OCCURRENCE: Karp-Rabin of "w1 w2" mod
@@ -1963,17 +1930,12 @@ object CurationOps {
     "q176_dsir_selection",
     s"""WITH f AS (
        |  SELECT doc_id, source, t,
-       |    CAST(len(t) AS BIGINT) AS nt,
-       |    CAST(COALESCE(list_sum(list_transform(t, x -> length(x))), 0) AS BIGINT) AS sl,
-       |    CAST(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT) AS na,
-       |    CAST(len(list_filter(t, x -> x IN ('the','a','an','and','of','to','is','in','it','on'))) AS BIGINT) AS ns
+       |    ${TwinSql.gopherCounters("t")}
        |  FROM (SELECT doc_id, source, $duckToks AS t FROM documents)
        |  WHERE len(t) >= 2),
        |b AS (
        |  SELECT doc_id, source, t, nt,
-       |    CAST(CASE WHEN nt >= 50 AND nt <= 100000
-       |               AND 3 * nt <= sl AND sl <= 10 * nt
-       |               AND 10 * na >= 8 * nt AND ns >= 2
+       |    CAST(CASE WHEN ${TwinSql.gopherPass("nt", "sl", "na", "ns")}
        |      THEN 1 ELSE 0 END AS BIGINT) AS is_target
        |  FROM f),
        |bg AS (
@@ -2041,8 +2003,7 @@ object CurationOps {
        |  SELECT doc_id, text, lang, source FROM (
        |    SELECT doc_id, text, lang, source,
        |      len($duckToks) AS nt,
-       |      (length(text) - length(regexp_replace(text, '\\p{P}', '', 'g')))
-       |        / greatest(length(text), 1) AS pr
+       |      ${TwinSql.punctChars("text")} / greatest(length(text), 1) AS pr
        |    FROM documents)
        |  WHERE nt >= 8 AND pr <= 0.2 AND lang IN ('en', 'fr', 'de')),
        |keep AS (SELECT min(doc_id) AS doc_id FROM q GROUP BY text),
@@ -2101,12 +2062,9 @@ object CurationOps {
     s"""WITH base AS (
        |  SELECT source, lang, doc_id,
        |    substring(text, 1, 30) AS dkey,
-       |    CAST(len($duckToks) AS BIGINT) AS nt,
-       |    (1.0 - (length(text) - length(regexp_replace(text, '\\p{P}', '', 'g'))) / length(text))
-       |      * (1.0 - (length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text))
-       |      * least(1.0, CAST(len($duckToks) AS BIGINT) / 64.0)
-       |      * (0.5 + len(list_filter($duckToks, x -> x IN ('the','a','an','and','of','to','is','in','it','on'))) / len($duckToks))
-       |      AS qscore
+       |    ${TwinSql.nTokens(duckToks)} AS nt,
+       |    ${TwinSql.qscore(TwinSql.punctRatio("text"), TwinSql.digitRatio("text"),
+              TwinSql.nTokens(duckToks), TwinSql.stopRatio(duckToks))} AS qscore
        |  FROM documents WHERE len($duckToks) > 0)
        |SELECT source,
        |  CAST(count(*) AS BIGINT) AS n_docs,
@@ -2509,10 +2467,10 @@ object CurationOps {
     s"""WITH $dupFracChainSql,
        |f AS (
        |  SELECT doc_id, source,
-       |    CAST(len(t) AS BIGINT) AS nt,
-       |    (length(text) - length(regexp_replace(text, '\\p{P}', '', 'g'))) / length(text) AS punct_ratio,
-       |    (length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text) AS digit_ratio,
-       |    len(list_filter(t, x -> x IN ('the','a','an','and','of','to','is','in','it','on'))) / len(t) AS stop_ratio
+       |    ${TwinSql.nTokens("t")} AS nt,
+       |    ${TwinSql.punctRatio("text")} AS punct_ratio,
+       |    ${TwinSql.digitRatio("text")} AS digit_ratio,
+       |    ${TwinSql.stopRatio("t")} AS stop_ratio
        |  FROM (SELECT doc_id, source, text, $duckToks AS t FROM documents)),
        |sc AS (
        |  SELECT doc_id, source,

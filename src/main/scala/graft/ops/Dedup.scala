@@ -2088,15 +2088,13 @@ object Dedup {
        |comp AS (SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v),
        |q AS (
        |  SELECT doc_id,
-       |    (1.0 - punct_ratio) * (1.0 - digit_ratio)
-       |      * least(1.0, n_tokens / 64.0)
-       |      * (0.5 + stop_ratio) AS qscore
+       |    ${TwinSql.qscore("punct_ratio", "digit_ratio", "n_tokens", "stop_ratio")} AS qscore
        |  FROM (
        |    SELECT doc_id,
-       |      CAST(len(t) AS BIGINT) AS n_tokens,
-       |      (length(text) - length(regexp_replace(text, '\\p{P}', '', 'g'))) / length(text) AS punct_ratio,
-       |      (length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text) AS digit_ratio,
-       |      len(list_filter(t, x -> x IN ('the','a','an','and','of','to','is','in','it','on'))) / len(t) AS stop_ratio
+       |      ${TwinSql.nTokens("t")} AS n_tokens,
+       |      ${TwinSql.punctRatio("text")} AS punct_ratio,
+       |      ${TwinSql.digitRatio("text")} AS digit_ratio,
+       |      ${TwinSql.stopRatio("t")} AS stop_ratio
        |    FROM (SELECT doc_id, text, $duckToks AS t FROM documents
        |          WHERE doc_id < 100))),
        |ranked AS (

@@ -27,12 +27,6 @@ object NonOracle {
     q45, q46, q47, q51, q52, q53, q57, q102, q105, q106, q128, q130, q153,
     q160, q170, q173, q177, q188, q196, q200, q204, q206, q212)
 
-  // the shared twin cosine fragments (single definition: TwinSql)
-  // every twin in this file SCORES vectors, so only the zero-norm
-  // guarded form is aliased (an unguarded alias here once invited a
-  // divide-by-zero pick-up by mistake)
-  private def cosSqlZ(a: String, b: String): String = TwinSql.cosZ(a, b)
-
   /** The q188/q200/q206 planted-eval operating point the REGISTERED oracle
     * twins are instantiated at; the Scala entry points default to the
     * same values, and the twin fragments interpolate whatever they
@@ -393,7 +387,7 @@ object NonOracle {
        |  FROM q JOIN bkt c USING (bucket) WHERE q.qid <> c.vec_id),
        |s AS (
        |  SELECT qid, cid,
-       |    ${cosSqlZ("qe.embedding", "ce.embedding")} AS score
+       |    ${TwinSql.cosZ("qe.embedding", "ce.embedding")} AS score
        |  FROM cand JOIN e qe ON cand.qid = qe.vec_id
        |            JOIN e ce ON cand.cid = ce.vec_id)
        |SELECT qid, cid, score, rnk FROM (
@@ -425,7 +419,7 @@ object NonOracle {
        |  FROM bkt a JOIN bkt b USING (bucket) WHERE a.vec_id < b.vec_id),
        |s AS (
        |  SELECT qid, cid,
-       |    ${cosSqlZ("qe.embedding", "ce.embedding")} AS score
+       |    ${TwinSql.cosZ("qe.embedding", "ce.embedding")} AS score
        |  FROM p JOIN e qe ON p.qid = qe.vec_id
        |         JOIN e ce ON p.cid = ce.vec_id),
        |dup AS (SELECT DISTINCT cid FROM s WHERE score >= 0.35)
@@ -506,7 +500,7 @@ object NonOracle {
        |  FROM pr JOIN asg USING (center_id) WHERE pr.qid <> asg.vec_id),
        |s AS (
        |  SELECT cand.qid, cand.cid,
-       |    ${cosSqlZ("qe.embedding", "ce.embedding")} AS score
+       |    ${TwinSql.cosZ("qe.embedding", "ce.embedding")} AS score
        |  FROM cand JOIN e qe ON cand.qid = qe.vec_id
        |            JOIN e ce ON cand.cid = ce.vec_id)
        |SELECT qid, cid, score, rnk FROM (
@@ -618,7 +612,7 @@ object NonOracle {
        |    FROM adc) WHERE arnk <= 24),
        |s AS (
        |  SELECT short.qid, short.cid,
-       |    ${cosSqlZ("qe.v", "ce.v")} AS score
+       |    ${TwinSql.cosZ("qe.v", "ce.v")} AS score
        |  FROM short JOIN e qe ON short.qid = qe.vec_id
        |             JOIN e ce ON short.cid = ce.vec_id)
        |SELECT qid, cid, score, rnk FROM (
@@ -1046,7 +1040,7 @@ object NonOracle {
        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < 10),
        |s AS (
        |  SELECT qid, e.vec_id AS cid,
-       |    ${cosSqlZ("qv", "v")} AS score
+       |    ${TwinSql.cosZ("qv", "v")} AS score
        |  FROM q CROSS JOIN e WHERE qid <> e.vec_id)
        |SELECT qid, cid, score, rnk FROM (
        |  SELECT qid, cid, score,
@@ -1331,7 +1325,7 @@ object NonOracle {
        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < $EvalNQ),
        |sden AS (
        |  SELECT qid, e.vec_id AS cid,
-       |    ${cosSqlZ("qv", "v")} AS score
+       |    ${TwinSql.cosZ("qv", "v")} AS score
        |  FROM q CROSS JOIN e WHERE qid <> e.vec_id),
        |darm AS (
        |  SELECT qid, cid, rd FROM (
@@ -1796,7 +1790,7 @@ object NonOracle {
        |q AS (SELECT vec_id AS qid, v AS qv FROM e WHERE vec_id < $EvalNQ),
        |sden AS (
        |  SELECT qid, e.vec_id AS cid,
-       |    ${cosSqlZ("qv", "v")} AS score
+       |    ${TwinSql.cosZ("qv", "v")} AS score
        |  FROM q CROSS JOIN e WHERE qid <> e.vec_id),
        |darm AS (
        |  SELECT qid, cid, rd FROM (
@@ -2019,10 +2013,10 @@ object NonOracle {
        |  GROUP BY vec_id),
        |anchors AS (SELECT vec_id AS qid, v AS qv FROM im WHERE vec_id < 20),
        |pos AS (
-       |  SELECT qid, ${cosSqlZ("qv", "ti.v")} AS pos_sim
+       |  SELECT qid, ${TwinSql.cosZ("qv", "ti.v")} AS pos_sim
        |  FROM anchors JOIN ti ON ti.vec_id = anchors.qid),
        |neg AS (
-       |  SELECT qid, ti.vec_id AS neg_id, ${cosSqlZ("qv", "ti.v")} AS neg_sim
+       |  SELECT qid, ti.vec_id AS neg_id, ${TwinSql.cosZ("qv", "ti.v")} AS neg_sim
        |  FROM anchors CROSS JOIN ti WHERE ti.vec_id <> qid),
        |rk AS (
        |  SELECT qid, neg_id, neg_sim,

@@ -25,10 +25,6 @@ object Similarity {
   def all: Seq[QueryDef] = Seq(q30, q31, q117, q120, q149, q150, q164, q165,
     q171, q174, q180, q181, q190, q208, q209, q210)
 
-  // the shared twin cosine fragments (single definition: TwinSql)
-  private def cosSqlZ(a: String, b: String): String = TwinSql.cosZ(a, b)
-  private def distSqlZ(a: String, b: String): String = TwinSql.distZ(a, b)
-
   /** Per-vector L2 norm (pinned fold order; identical formula in the
     * DuckDB twin so doubles are bit-identical).
     */
@@ -58,7 +54,7 @@ object Similarity {
       |c AS (SELECT vec_id AS cid, embedding AS ce FROM embeddings),
       |s AS (
       |  SELECT qid, cid,
-      |    ${cosSqlZ("qe", "ce")}
+      |    ${TwinSql.cosZ("qe", "ce")}
       |    AS score
       |  FROM q, c WHERE qid <> cid)
       |SELECT qid, cid, score, rnk FROM (
@@ -739,7 +735,7 @@ object Similarity {
        |  FROM e WHERE vec_id < 8),
        |ad AS (
        |  SELECT e.vec_id, ctr.center_id,
-       |    ${distSqlZ("e.embedding", "ctr.cv")} AS dist
+       |    ${TwinSql.distZ("e.embedding", "ctr.cv")} AS dist
        |  FROM e CROSS JOIN ctr),
        |asg AS (
        |  SELECT vec_id, center_id FROM (
@@ -761,7 +757,7 @@ object Similarity {
        |xrv AS (SELECT vec_id, list(xr ORDER BY dim) AS xr FROM dec GROUP BY vec_id),
        |pq2 AS (
        |  SELECT q.vec_id AS qid, ctr.center_id,
-       |    ${distSqlZ("q.embedding", "ctr.cv")} AS dist
+       |    ${TwinSql.distZ("q.embedding", "ctr.cv")} AS dist
        |  FROM e q CROSS JOIN ctr WHERE q.vec_id < 10),
        |pr AS (
        |  SELECT qid, center_id FROM (
@@ -773,7 +769,7 @@ object Similarity {
        |  FROM pr JOIN asg USING (center_id) WHERE pr.qid <> asg.vec_id),
        |ap AS (
        |  SELECT cand.qid, cand.cid,
-       |    ${cosSqlZ("qe.embedding", "xrv.xr")} AS approx
+       |    ${TwinSql.cosZ("qe.embedding", "xrv.xr")} AS approx
        |  FROM cand JOIN e qe ON cand.qid = qe.vec_id
        |            JOIN xrv ON cand.cid = xrv.vec_id),
        |short AS (
@@ -783,7 +779,7 @@ object Similarity {
        |    FROM ap) WHERE arnk <= 10),
        |s AS (
        |  SELECT short.qid, short.cid, short.approx,
-       |    ${cosSqlZ("qe.embedding", "ce.embedding")} AS score
+       |    ${TwinSql.cosZ("qe.embedding", "ce.embedding")} AS score
        |  FROM short JOIN e qe ON short.qid = qe.vec_id
        |             JOIN e ce ON short.cid = ce.vec_id)
        |SELECT qid, cid, approx, score, rnk FROM (
@@ -884,7 +880,7 @@ object Similarity {
     s"""WITH e AS (SELECT vec_id, label, embedding FROM embeddings WHERE vec_id < 200),
        |s AS (
        |  SELECT a.vec_id AS qid, a.label AS qlabel, b.vec_id AS cid, b.label AS clabel,
-       |    ${cosSqlZ("a.embedding", "b.embedding")} AS score
+       |    ${TwinSql.cosZ("a.embedding", "b.embedding")} AS score
        |  FROM e a, e b WHERE a.vec_id <> b.vec_id),
        |nn AS (
        |  SELECT qid, qlabel, clabel FROM (
@@ -2050,7 +2046,7 @@ object Similarity {
        |m AS (SELECT CAST(unnest([4, 8, 16, 31]) AS BIGINT) AS proj_dim),
        |sc AS (
        |  SELECT m.proj_dim, qp.vec_id AS qid, cp.vec_id AS cid,
-       |    ${cosSqlZ("list_slice(qp.proj, 1, m.proj_dim)",
+       |    ${TwinSql.cosZ("list_slice(qp.proj, 1, m.proj_dim)",
                       "list_slice(cp.proj, 1, m.proj_dim)")} AS score
        |  FROM p qp CROSS JOIN p cp CROSS JOIN m
        |  WHERE qp.vec_id < 10 AND qp.vec_id <> cp.vec_id),
@@ -2062,7 +2058,7 @@ object Similarity {
        |    FROM sc) WHERE rnk <= 10),
        |bsc AS (
        |  SELECT q.vec_id AS qid, c.vec_id AS cid,
-       |    ${cosSqlZ("q.embedding", "c.embedding")} AS score
+       |    ${TwinSql.cosZ("q.embedding", "c.embedding")} AS score
        |  FROM e q CROSS JOIN e c
        |  WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id),
        |bs AS (

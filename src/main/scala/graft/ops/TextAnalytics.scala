@@ -24,10 +24,43 @@ object TextAnalytics {
 
   private val duckToks = TwinSql.toksSql
 
-  /** Fixed stopword probe list for quality scoring (tiny; inlined as a
-    * literal array on both engines).
+  /** Fixed stopword probe list for quality scoring (tiny; a literal
+    * array here, the IN-list [[TwinSql]] renders for the twins).
     */
   private[ops] val probeStops = Seq("the", "a", "an", "and", "of", "to", "is", "in", "it", "on")
+
+  /** The document-quality features of a token array `t` ([[toks]]) or
+    * the raw `text` — ONE definition each; the DuckDB twins call the
+    * same-named fragments in [[TwinSql]]. Counters are null-guarded
+    * (null text yields NULL, as the twins' len(NULL) does, never
+    * size(null) = -1) and int; callers cast where they ship them.
+    */
+  private[ops] def nTokens(t: Column): Column = when(t.isNotNull, size(t))
+  private[ops] def sumLen(t: Column): Column =
+    aggregate(t, lit(0L), (a, x) => a + length(x).cast("bigint"))
+  private[ops] def nAlpha(t: Column): Column =
+    when(t.isNotNull, size(filter(t, x => x.rlike("[A-Za-z]"))))
+  private[ops] def nStop(t: Column): Column = {
+    val stopsArr = array(probeStops.map(lit): _*)
+    when(t.isNotNull, size(filter(t, x => array_contains(stopsArr, x))))
+  }
+  private[ops] def stopRatio(t: Column): Column = nStop(t) / nTokens(t)
+  private[graft] def punctChars(text: Column): Column =
+    length(text) - length(regexp_replace(text, "\\p{P}", ""))
+  private[ops] def punctRatio(text: Column): Column = punctChars(text) / length(text)
+  private[ops] def digitRatio(text: Column): Column =
+    (length(text) - length(regexp_replace(text, "[0-9]", ""))) / length(text)
+
+  /** The [[gopherRuleFlags]] inputs as bigint columns nt, sl, na, ns. */
+  private[ops] def gopherCounters(t: Column): Seq[Column] = Seq(
+    nTokens(t).cast("bigint").as("nt"), sumLen(t).as("sl"),
+    nAlpha(t).cast("bigint").as("na"), nStop(t).cast("bigint").as("ns"))
+
+  /** The q23 composite quality score over the ratio features. */
+  private[ops] def qscore(punct: Column, digit: Column, nTokens: Column,
+                          stop: Column): Column =
+    (lit(1.0) - punct) * (lit(1.0) - digit) * least(lit(1.0), nTokens / 64.0) *
+      (lit(0.5) + stop)
 
   /** The q109 linear-classifier logit — THE single definition of the
     * demo weights, consumed by q109 and the q158 calibration audit
@@ -49,7 +82,8 @@ object TextAnalytics {
 
   /** q126's four Gopher rules over the per-doc integer counters —
     * (count, wordlen, alpha, stop) in that order; single definition
-    * consumed by the q126 report and the q158 label proxy.
+    * consumed by the q126 report and, through [[gopherPass]], every
+    * Gopher label.
     */
   private[ops] def gopherRuleFlags(nt: Column, sl: Column,
                                    na: Column, ns: Column): Seq[Column] = Seq(
@@ -57,6 +91,10 @@ object TextAnalytics {
     lit(3L) * nt <= sl && sl <= lit(10L) * nt,
     lit(10L) * na >= lit(8L) * nt,
     ns >= 2L)
+
+  /** All four [[gopherRuleFlags]] hold. */
+  private[ops] def gopherPass(nt: Column, sl: Column, na: Column, ns: Column): Column =
+    gopherRuleFlags(nt, sl, na, ns).reduce(_ && _)
 
   /** The q163 quality-score DECILE of a raw text column — the same
     * ratio formulas qualityBase computes, squashed through the
@@ -70,12 +108,8 @@ object TextAnalytics {
     */
   private[graft] def qualityScoreDecile(text: Column): Column = {
     val t = toks(text)
-    val stopsArr = array(probeStops.map(lit): _*)
-    val stop = size(filter(t, x => array_contains(stopsArr, x))) / size(t)
-    val punct = (length(text) - length(regexp_replace(text, "\\p{P}", ""))) / length(text)
-    val digit = (length(text) - length(regexp_replace(text, "[0-9]", ""))) / length(text)
-    floor(rationalSigmoid(
-      classifierZ(stop, size(t).cast("bigint"), punct, digit)) * 10.0)
+    floor(rationalSigmoid(classifierZ(stopRatio(t), nTokens(t).cast("bigint"),
+      punctRatio(text), digitRatio(text))) * 10.0)
       .cast("bigint")
   }
 
@@ -129,11 +163,10 @@ object TextAnalytics {
 
   /** Per-doc quality base shared by q23 and the quantile filter (q93):
     * ratio columns plus the composite qscore, all narrow column
-    * arithmetic whose literal formula the DuckDB twins repeat verbatim
-    * so the doubles hash-match.
+    * arithmetic whose literal formula the DuckDB twins render through
+    * TwinSql's same-named fragments, so the doubles hash-match.
     */
   def qualityBase(docs: DataFrame, extra: Seq[String] = Nil): DataFrame = {
-    val stopsArr = array(probeStops.map(lit): _*)
     docs
       .select(Seq(col("doc_id"), col("lang"), col("source"), col("text"),
         toks(col("text")).as("t")) ++ extra.map(col): _*)
@@ -142,18 +175,12 @@ object TextAnalytics {
           // null text (loader junk row) must surface NULL counts, not
           // size(null) = -1 / a fake stop_ratio of (-1)/(-1) = 1.0 —
           // the twins' len(NULL) is NULL and NULL propagates to qscore
-          when(col("t").isNotNull, size(col("t"))).cast("bigint").as("n_tokens"),
-          ((length(col("text")) - length(regexp_replace(col("text"), "\\p{P}", "")))
-            / length(col("text"))).as("punct_ratio"),
-          ((length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-            / length(col("text"))).as("digit_ratio"),
-          (when(col("t").isNotNull,
-            size(filter(col("t"), x => array_contains(stopsArr, x))))
-            / when(col("t").isNotNull, size(col("t")))).as("stop_ratio")): _*)
-      .withColumn("qscore",
-        (lit(1.0) - col("punct_ratio")) * (lit(1.0) - col("digit_ratio"))
-          * least(lit(1.0), col("n_tokens") / 64.0)
-          * (lit(0.5) + col("stop_ratio")))
+          nTokens(col("t")).cast("bigint").as("n_tokens"),
+          punctRatio(col("text")).as("punct_ratio"),
+          digitRatio(col("text")).as("digit_ratio"),
+          stopRatio(col("t")).as("stop_ratio")): _*)
+      .withColumn("qscore", qscore(col("punct_ratio"), col("digit_ratio"),
+        col("n_tokens"), col("stop_ratio")))
   }
 
   /** Quality scoring: punctuation/digit/stopword ratios and a composite
@@ -163,15 +190,13 @@ object TextAnalytics {
   val q23: QueryDef = QueryDef.sql(
     "q23_quality_score",
     s"""SELECT doc_id, n_tokens, punct_ratio, digit_ratio, stop_ratio,
-       |  (1.0 - punct_ratio) * (1.0 - digit_ratio)
-       |    * least(1.0, n_tokens / 64.0)
-       |    * (0.5 + stop_ratio) AS qscore
+       |  ${TwinSql.qscore("punct_ratio", "digit_ratio", "n_tokens", "stop_ratio")} AS qscore
        |FROM (
        |  SELECT doc_id,
-       |    CAST(len(t) AS BIGINT) AS n_tokens,
-       |    (length(text) - length(regexp_replace(text, '\\p{P}', '', 'g'))) / length(text) AS punct_ratio,
-       |    (length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text) AS digit_ratio,
-       |    len(list_filter(t, x -> x IN ('the','a','an','and','of','to','is','in','it','on'))) / len(t) AS stop_ratio
+       |    ${TwinSql.nTokens("t")} AS n_tokens,
+       |    ${TwinSql.punctRatio("text")} AS punct_ratio,
+       |    ${TwinSql.digitRatio("text")} AS digit_ratio,
+       |    ${TwinSql.stopRatio("t")} AS stop_ratio
        |  FROM (SELECT doc_id, text, $duckToks AS t FROM documents))
        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
     qualityBase(Tables.documents(s, dir))
@@ -197,10 +222,10 @@ object TextAnalytics {
     "q109_quality_classifier",
     s"""WITH f AS (
        |  SELECT doc_id,
-       |    CAST(len(t) AS BIGINT) AS n_tokens,
-       |    (length(text) - length(regexp_replace(text, '\\p{P}', '', 'g'))) / length(text) AS punct_ratio,
-       |    (length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text) AS digit_ratio,
-       |    len(list_filter(t, x -> x IN ('the','a','an','and','of','to','is','in','it','on'))) / len(t) AS stop_ratio
+       |    ${TwinSql.nTokens("t")} AS n_tokens,
+       |    ${TwinSql.punctRatio("text")} AS punct_ratio,
+       |    ${TwinSql.digitRatio("text")} AS digit_ratio,
+       |    ${TwinSql.stopRatio("t")} AS stop_ratio
        |  FROM (SELECT doc_id, text, $duckToks AS t FROM documents)),
        |z AS (
        |  SELECT doc_id,
@@ -944,16 +969,10 @@ object TextAnalytics {
   def gopherRules(docs: DataFrame): DataFrame = {
     val d = docs
       .select(col("source"), toks(col("text")).as("t"))
-      .select(col("source"),
-        // null text yields NULL counters (rule flags NULL, counted as
-        // neither pass nor fail — the twin's CASE semantics), never
-        // size(null) = -1 counters that definitively FAIL three rules
-        when(col("t").isNotNull, size(col("t"))).cast("bigint").as("nt"),
-        aggregate(col("t"), lit(0L), (a, x) => a + length(x).cast("bigint")).as("sl"),
-        when(col("t").isNotNull, size(filter(col("t"), x => x.rlike("[A-Za-z]"))))
-          .cast("bigint").as("na"),
-        when(col("t").isNotNull, size(filter(col("t"), x => x.isin(probeStops: _*))))
-          .cast("bigint").as("ns"))
+      // null text yields NULL counters (rule flags NULL, counted as
+      // neither pass nor fail — the twin's CASE semantics), never
+      // size(null) = -1 counters that definitively FAIL three rules
+      .select(col("source") +: gopherCounters(col("t")): _*)
       .select(Seq(col("source")) ++
         gopherRuleFlags(col("nt"), col("sl"), col("na"), col("ns"))
           .zip(Seq("r_count", "r_wordlen", "r_alpha", "r_stop"))
@@ -973,17 +992,13 @@ object TextAnalytics {
     "q126_gopher_rules",
     s"""WITH d AS (
        |  SELECT source,
-       |    CAST(len(t) AS BIGINT) AS nt,
-       |    CAST(COALESCE(list_sum(list_transform(t, x -> length(x))), 0) AS BIGINT) AS sl,
-       |    CAST(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT) AS na,
-       |    CAST(len(list_filter(t, x -> x IN ('the','a','an','and','of','to','is','in','it','on'))) AS BIGINT) AS ns
+       |    ${TwinSql.gopherCounters("t")}
        |  FROM (SELECT source, $duckToks AS t FROM documents)),
        |r AS (
        |  SELECT source,
-       |    (nt >= 50 AND nt <= 100000) AS r_count,
-       |    (3 * nt <= sl AND sl <= 10 * nt) AS r_wordlen,
-       |    (10 * na >= 8 * nt) AS r_alpha,
-       |    (ns >= 2) AS r_stop
+       |    ${TwinSql.gopherRuleFlags("nt", "sl", "na", "ns")
+              .zip(Seq("r_count", "r_wordlen", "r_alpha", "r_stop"))
+              .map { case (f, n) => s"($f) AS $n" }.mkString(",\n    ")}
        |  FROM d)
        |SELECT source,
        |  CAST(count(*) AS BIGINT) AS n_docs,
@@ -1023,19 +1038,14 @@ object TextAnalytics {
     "q158_calibration_audit",
     s"""WITH f AS (
        |  SELECT doc_id,
-       |    CAST(len(t) AS BIGINT) AS nt,
-       |    CAST(COALESCE(list_sum(list_transform(t, x -> length(x))), 0) AS BIGINT) AS sl,
-       |    CAST(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT) AS na,
-       |    CAST(len(list_filter(t, x -> x IN ('the','a','an','and','of','to','is','in','it','on'))) AS BIGINT) AS ns,
-       |    (length(text) - length(regexp_replace(text, '\\p{P}', '', 'g'))) / length(text) AS punct_ratio,
-       |    (length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text) AS digit_ratio
+       |    ${TwinSql.gopherCounters("t")},
+       |    ${TwinSql.punctRatio("text")} AS punct_ratio,
+       |    ${TwinSql.digitRatio("text")} AS digit_ratio
        |  FROM (SELECT doc_id, text, $duckToks AS t FROM documents)),
        |z AS (
        |  SELECT doc_id,
        |    ${TwinSql.classifierZ("(ns / nt)", "nt", "punct_ratio", "digit_ratio")} AS z,
-       |    CAST(CASE WHEN nt >= 50 AND nt <= 100000
-       |               AND 3 * nt <= sl AND sl <= 10 * nt
-       |               AND 10 * na >= 8 * nt AND ns >= 2
+       |    CAST(CASE WHEN ${TwinSql.gopherPass("nt", "sl", "na", "ns")}
        |      THEN 1 ELSE 0 END AS BIGINT) AS pos
        |  FROM f WHERE nt > 0),
        |b AS (
@@ -1064,29 +1074,21 @@ object TextAnalytics {
        |SELECT bucket, n_docs, n_pos, conf_mid, pos_rate, abs_gap, ece
        |FROM t3, e
        |ORDER BY bucket""".stripMargin) { (s, dir) =>
-    val stopsArr = array(probeStops.map(lit): _*)
     // ONE pass: q109's features and q126's rule counters off the same
     // token array (each twin CTE re-derives them separately — oracles
     // need equivalence, not the scale shape)
     val base = Tables.documents(s, dir)
       .select(col("doc_id"), col("text"), toks(col("text")).as("t"))
-      .select(col("doc_id"),
-        size(col("t")).cast("bigint").as("nt"),
-        aggregate(col("t"), lit(0L), (a, x) => a + length(x).cast("bigint")).as("sl"),
-        size(filter(col("t"), x => x.rlike("[A-Za-z]"))).cast("bigint").as("na"),
-        size(filter(col("t"), x => array_contains(stopsArr, x))).cast("bigint").as("ns"),
-        ((length(col("text")) - length(regexp_replace(col("text"), "\\p{P}", "")))
-          / length(col("text"))).as("punct_ratio"),
-        ((length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-          / length(col("text"))).as("digit_ratio"))
+      .select(col("doc_id") +: gopherCounters(col("t")) :+
+        punctRatio(col("text")).as("punct_ratio") :+
+        digitRatio(col("text")).as("digit_ratio"): _*)
       .filter(col("nt") > 0)
     // the shared builders: q109's weights and q126's rules have ONE
     // definition each — the audit cannot drift from what it audits
     val zc = classifierZ(col("ns") / col("nt"), col("nt"),
       col("punct_ratio"), col("digit_ratio"))
-    val posc = when(
-      gopherRuleFlags(col("nt"), col("sl"), col("na"), col("ns"))
-        .reduce(_ && _), 1L).otherwise(0L)
+    val posc = when(gopherPass(col("nt"), col("sl"), col("na"), col("ns")), 1L)
+      .otherwise(0L)
     val sc = base.select(zc.as("z"), posc.as("pos"))
       .select(
         floor(rationalSigmoid(col("z")) * 10.0).cast("bigint").as("bucket"),
@@ -1165,36 +1167,26 @@ object TextAnalytics {
     * sort touches group rows, not documents.
     */
   def classifierDiscrimination(docs: DataFrame): DataFrame = {
-    val stopsArr = array(probeStops.map(lit): _*)
     val base = docs
       .select(col("source"), col("text"), toks(col("text")).as("t"))
-      .select(col("source"),
-        size(col("t")).cast("bigint").as("nt"),
-        aggregate(col("t"), lit(0L), (a, x) => a + length(x).cast("bigint")).as("sl"),
-        size(filter(col("t"), x => x.rlike("[A-Za-z]"))).cast("bigint").as("na"),
-        size(filter(col("t"), x => array_contains(stopsArr, x))).cast("bigint").as("ns"),
-        ((length(col("text")) - length(regexp_replace(col("text"), "\\p{P}", "")))
-          / length(col("text"))).as("punct_ratio"),
-        ((length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-          / length(col("text"))).as("digit_ratio"))
+      .select(col("source") +: gopherCounters(col("t")) :+
+        punctRatio(col("text")).as("punct_ratio") :+
+        digitRatio(col("text")).as("digit_ratio"): _*)
       .filter(col("nt") > 0)
     aucBySource(base.select(col("source"),
       rationalSigmoid(classifierZ(col("ns") / col("nt"), col("nt"),
         col("punct_ratio"), col("digit_ratio"))).as("score"),
-      when(gopherRuleFlags(col("nt"), col("sl"), col("na"), col("ns"))
-        .reduce(_ && _), 1L).otherwise(0L).as("pos")))
+      when(gopherPass(col("nt"), col("sl"), col("na"), col("ns")), 1L)
+        .otherwise(0L).as("pos")))
   }
 
   val q175: QueryDef = QueryDef.sql(
     "q175_discrimination_audit",
     s"""WITH f AS (
        |  SELECT source,
-       |    CAST(len(t) AS BIGINT) AS nt,
-       |    CAST(COALESCE(list_sum(list_transform(t, x -> length(x))), 0) AS BIGINT) AS sl,
-       |    CAST(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT) AS na,
-       |    CAST(len(list_filter(t, x -> x IN ('the','a','an','and','of','to','is','in','it','on'))) AS BIGINT) AS ns,
-       |    (length(text) - length(regexp_replace(text, '\\p{P}', '', 'g'))) / length(text) AS punct_ratio,
-       |    (length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text) AS digit_ratio
+       |    ${TwinSql.gopherCounters("t")},
+       |    ${TwinSql.punctRatio("text")} AS punct_ratio,
+       |    ${TwinSql.digitRatio("text")} AS digit_ratio
        |  FROM (SELECT source, text, ${TwinSql.toksSql} AS t FROM documents)),
        |sc AS (
        |  SELECT source,
@@ -1203,9 +1195,7 @@ object TextAnalytics {
        |  FROM (
        |    SELECT source,
        |      ${TwinSql.classifierZ("(ns / nt)", "nt", "punct_ratio", "digit_ratio")} AS z,
-       |      CAST(CASE WHEN nt >= 50 AND nt <= 100000
-       |                 AND 3 * nt <= sl AND sl <= 10 * nt
-       |                 AND 10 * na >= 8 * nt AND ns >= 2
+       |      CAST(CASE WHEN ${TwinSql.gopherPass("nt", "sl", "na", "ns")}
        |        THEN 1 ELSE 0 END AS BIGINT) AS pos
        |    FROM f WHERE nt > 0)),
        |${TwinSql.aucChain("sc", "")}
@@ -1251,24 +1241,15 @@ object TextAnalytics {
     * trainer (their parity is bit-exact only because both sides
     * featurize and label with these exact expressions).
     */
-  private[graft] def nbBase(docs: DataFrame): DataFrame = {
-    val stopsArr = array(probeStops.map(lit): _*)
+  private[graft] def nbBase(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), col("source"), col("text"), toks(col("text")).as("t"))
-      .select(col("doc_id"), col("source"), col("t"),
-        size(col("t")).cast("bigint").as("nt"),
-        aggregate(col("t"), lit(0L), (a, x) => a + length(x).cast("bigint")).as("sl"),
-        size(filter(col("t"), x => x.rlike("[A-Za-z]"))).cast("bigint").as("na"),
-        size(filter(col("t"), x => array_contains(stopsArr, x))).cast("bigint").as("ns"),
-        ((length(col("text")) - length(regexp_replace(col("text"), "\\p{P}", "")))
-          / length(col("text"))).as("punct_ratio"),
-        ((length(col("text")) - length(regexp_replace(col("text"), "[0-9]", "")))
-          / length(col("text"))).as("digit_ratio"))
+      .select(Seq(col("doc_id"), col("source"), col("t")) ++ gopherCounters(col("t")) :+
+        punctRatio(col("text")).as("punct_ratio") :+
+        digitRatio(col("text")).as("digit_ratio"): _*)
       .filter(col("nt") > 0)
       .withColumn("pos",
-        when(gopherRuleFlags(col("nt"), col("sl"), col("na"), col("ns"))
-          .reduce(_ && _), 1L).otherwise(0L))
-  }
+        when(gopherPass(col("nt"), col("sl"), col("na"), col("ns")), 1L).otherwise(0L))
 
   /** The (doc, label, token) occurrence stream of a base frame. */
   private[graft] def nbOccurrences(base: DataFrame): DataFrame =
@@ -1364,19 +1345,14 @@ object TextAnalytics {
   private def nbTwinChainSql: String =
     s"""f AS (
        |  SELECT doc_id, source, t,
-       |    CAST(len(t) AS BIGINT) AS nt,
-       |    CAST(COALESCE(list_sum(list_transform(t, x -> length(x))), 0) AS BIGINT) AS sl,
-       |    CAST(len(list_filter(t, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT) AS na,
-       |    CAST(len(list_filter(t, x -> x IN ('the','a','an','and','of','to','is','in','it','on'))) AS BIGINT) AS ns,
-       |    (length(text) - length(regexp_replace(text, '\\p{P}', '', 'g'))) / length(text) AS punct_ratio,
-       |    (length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text) AS digit_ratio
+       |    ${TwinSql.gopherCounters("t")},
+       |    ${TwinSql.punctRatio("text")} AS punct_ratio,
+       |    ${TwinSql.digitRatio("text")} AS digit_ratio
        |  FROM (SELECT doc_id, source, text, $duckToks AS t FROM documents)
        |  WHERE len(t) > 0),
        |lab AS (
        |  SELECT doc_id, source, t, nt, ns, punct_ratio, digit_ratio,
-       |    CAST(CASE WHEN nt >= 50 AND nt <= 100000
-       |               AND 3 * nt <= sl AND sl <= 10 * nt
-       |               AND 10 * na >= 8 * nt AND ns >= 2
+       |    CAST(CASE WHEN ${TwinSql.gopherPass("nt", "sl", "na", "ns")}
        |      THEN 1 ELSE 0 END AS BIGINT) AS pos
        |  FROM f),
        |occ AS (SELECT doc_id, pos, unnest(t) AS w FROM lab),

@@ -127,29 +127,25 @@ object TrainingData {
     */
   val q98: QueryDef = QueryDef.sql(
     "q98_source_quota",
-    """WITH base AS (
-      |  SELECT doc_id, source,
-      |    CAST(len(t) AS BIGINT) AS n_tokens,
-      |    (length(text) - length(regexp_replace(text, '\p{P}', '', 'g'))) / length(text) AS punct_ratio,
-      |    (length(text) - length(regexp_replace(text, '[0-9]', '', 'g'))) / length(text) AS digit_ratio,
-      |    len(list_filter(t, x -> x IN ('the','a','an','and','of','to','is','in','it','on'))) / len(t) AS stop_ratio
-      |  FROM (SELECT doc_id, source, text,
-      |          list_filter(string_split_regex(text, '[ \t\n\x0B\f\r]+'), x -> x <> '') AS t
-      |        FROM documents)),
-      |q AS (
-      |  SELECT doc_id, source,
-      |    (1.0 - punct_ratio) * (1.0 - digit_ratio)
-      |      * least(1.0, n_tokens / 64.0)
-      |      * (0.5 + stop_ratio) AS qscore
-      |  FROM base),
-      |r AS (
-      |  SELECT doc_id, source, qscore,
-      |    CAST(row_number() OVER (PARTITION BY source ORDER BY qscore DESC, doc_id)
-      |      AS BIGINT) AS rn
-      |  FROM q)
-      |SELECT source, rn, doc_id, qscore
-      |FROM r WHERE rn <= 15
-      |ORDER BY source, rn""".stripMargin) { (s, dir) =>
+    s"""WITH base AS (
+       |  SELECT doc_id, source,
+       |    ${TwinSql.nTokens("t")} AS n_tokens,
+       |    ${TwinSql.punctRatio("text")} AS punct_ratio,
+       |    ${TwinSql.digitRatio("text")} AS digit_ratio,
+       |    ${TwinSql.stopRatio("t")} AS stop_ratio
+       |  FROM (SELECT doc_id, source, text, $duckToks AS t FROM documents)),
+       |q AS (
+       |  SELECT doc_id, source,
+       |    ${TwinSql.qscore("punct_ratio", "digit_ratio", "n_tokens", "stop_ratio")} AS qscore
+       |  FROM base),
+       |r AS (
+       |  SELECT doc_id, source, qscore,
+       |    CAST(row_number() OVER (PARTITION BY source ORDER BY qscore DESC, doc_id)
+       |      AS BIGINT) AS rn
+       |  FROM q)
+       |SELECT source, rn, doc_id, qscore
+       |FROM r WHERE rn <= 15
+       |ORDER BY source, rn""".stripMargin) { (s, dir) =>
     val w = Window.partitionBy(col("source"))
       .orderBy(col("qscore").desc, col("doc_id"))
     TextAnalytics.qualityBase(Tables.documents(s, dir))

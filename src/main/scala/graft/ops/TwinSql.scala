@@ -78,6 +78,48 @@ private[ops] object TwinSql {
   def rationalSigmoid(z: String): String =
     s"0.5 + 0.5 * (($z) / (1.0 + abs($z)))"
 
+  /** The document-quality features in twin SQL — the SQL faces of
+    * the same-named TextAnalytics columns, ONE definition each. `t` is
+    * a token list ([[toksOf]]), `text` the raw text; a NULL text's
+    * len(t) is NULL, so every counter is NULL there, as on the engine.
+    * The probe IN-list is rendered from TextAnalytics.probeStops.
+    */
+  def nTokens(t: String): String = s"CAST(len($t) AS BIGINT)"
+  private def sumLen(t: String): String =
+    s"CAST(COALESCE(list_sum(list_transform($t, x -> length(x))), 0) AS BIGINT)"
+  private def nAlpha(t: String): String =
+    s"CAST(len(list_filter($t, x -> regexp_matches(x, '[A-Za-z]'))) AS BIGINT)"
+  private def stopHits(t: String): String =
+    s"len(list_filter($t, x -> x IN " +
+      TextAnalytics.probeStops.map(w => s"'$w'").mkString("(", ",", ")") + "))"
+  private def nStop(t: String): String = s"CAST(${stopHits(t)} AS BIGINT)"
+  def stopRatio(t: String): String = s"${stopHits(t)} / len($t)"
+  def punctChars(text: String): String =
+    s"(length($text) - length(regexp_replace($text, '\\p{P}', '', 'g')))"
+  def punctRatio(text: String): String = s"${punctChars(text)} / length($text)"
+  def digitRatio(text: String): String =
+    s"(length($text) - length(regexp_replace($text, '[0-9]', '', 'g'))) / length($text)"
+
+  /** The [[gopherRuleFlags]] inputs as columns nt, sl, na, ns. */
+  def gopherCounters(t: String): String =
+    s"${nTokens(t)} AS nt, ${sumLen(t)} AS sl, ${nAlpha(t)} AS na, ${nStop(t)} AS ns"
+
+  /** q126's four Gopher rules, (count, wordlen, alpha, stop) in that
+    * order, unparenthesized; [[gopherPass]] is their conjunction.
+    */
+  def gopherRuleFlags(nt: String, sl: String, na: String, ns: String): Seq[String] = Seq(
+    s"$nt >= 50 AND $nt <= 100000",
+    s"3 * $nt <= $sl AND $sl <= 10 * $nt",
+    s"10 * $na >= 8 * $nt",
+    s"$ns >= 2")
+
+  def gopherPass(nt: String, sl: String, na: String, ns: String): String =
+    gopherRuleFlags(nt, sl, na, ns).mkString(" AND ")
+
+  /** The q23 composite quality score over the ratio features. */
+  def qscore(punct: String, digit: String, nTokens: String, stop: String): String =
+    s"(1.0 - $punct) * (1.0 - $digit) * least(1.0, $nTokens / 64.0) * (0.5 + $stop)"
+
   /** The engine-neutral whitespace tokenizer in twin SQL — ONE
     * definition of the split the oracle-checked text queries replay
     * (the Spark side is TextAnalytics.toks). The class is spelled

@@ -61,8 +61,7 @@ object Curation {
     docs
       .withColumn("_n_tokens", size(toks))
       .withColumn("_punct_ratio",
-        (length(col("text")) - length(regexp_replace(col("text"), "\\p{P}", "")))
-          / greatest(length(col("text")), lit(1)))
+        TextAnalytics.punctChars(col("text")) / greatest(length(col("text")), lit(1)))
       .filter(col("_n_tokens") >= minTokens
         && col("_punct_ratio") <= maxPunctRatio)
       .drop("_n_tokens", "_punct_ratio")

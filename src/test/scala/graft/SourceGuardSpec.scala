@@ -11,7 +11,11 @@ import scala.jdk.CollectionConverters._
   *    the two newest snapshots, its guard against a torn newest write);
   *  - `Dedup` writes no session conf;
   *  - no main code lists files through Hadoop's `listFiles` or
-  *    `listLocatedStatus`.
+  *    `listLocatedStatus`;
+  *  - the document-quality features (token, word-length, alpha and
+  *    probe-stopword counters, punctuation/digit counts, the Gopher
+  *    rules) are spelled once per engine: `TextAnalytics` for Spark
+  *    columns, `TwinSql` for the DuckDB twins.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -55,15 +59,16 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 
+  private def mainFiles: List[Path] = {
+    val s = Files.walk(Paths.get("src/main"))
+    try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally s.close()
+  }
+
   test("no Hadoop listFiles or listLocatedStatus walk in src/main") {
-    val files = {
-      val s = Files.walk(Paths.get("src/main"))
-      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
-      finally s.close()
-    }
     // java.io.File#listFiles() takes no arguments and stays allowed
     val located = """listFiles\(\s*[^\s)]|listLocatedStatus\(""".r
-    val hits = files.flatMap { p =>
+    val hits = mainFiles.flatMap { p =>
       codeLines(p).collect {
         case (l, i) if located.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}"
       }
@@ -72,5 +77,36 @@ class SourceGuardSpec extends AnyFunSuite {
       "walk with FileSystem.listStatus instead: listFiles/listLocatedStatus build a " +
         "LocatedFileStatus per file, a per-file permission lookup on the local " +
         "filesystem\n" + hits.mkString("\n"))
+  }
+
+  test("quality-feature formulas are spelled only in TextAnalytics and TwinSql") {
+    // (owner, formula shapes only the owner may spell). The paper's
+    // punctuation strip (Normalize.stripPunct, PorterSql's token strip)
+    // is not a quality feature: it strips a column other than the
+    // document's `text` and stays allowed.
+    val owners = Seq(
+      "TwinSql.scala" -> Seq(
+        """'the','a','an'""",
+        """regexp_matches\(x, '\[A-Za-z\]'\)""",
+        """10 \* (\w+\.)?na >= 8 \* (\w+\.)?nt""",
+        """regexp_replace\(text, '(\\{1,2}p\{P\}|\[0-9\])'"""),
+      "TextAnalytics.scala" -> Seq(
+        """"the", "a", "an"""",
+        """rlike\("\[A-Za-z\]"\)""",
+        """probeStops\.map\(lit\)""",
+        """regexp_replace\(col\("text"\), "(\\\\p\{P\}|\[0-9\])""""))
+    val files = mainFiles
+    for ((owner, shapes) <- owners) {
+      assert(files.exists(_.getFileName.toString == owner))
+      val re = shapes.mkString("|").r
+      val hits = files.filterNot(_.getFileName.toString == owner).flatMap { p =>
+        codeLines(p).collect {
+          case (l, i) if re.findFirstIn(l).isDefined => s"$p:${i + 1}: ${l.trim}"
+        }
+      }
+      assert(hits.isEmpty,
+        s"call the quality-feature definitions in ${owner.stripSuffix(".scala")} " +
+          "instead of spelling the formula\n" + hits.mkString("\n"))
+    }
   }
 }

@@ -158,6 +158,51 @@ class JunkRowOpsSpec extends SparkSpec {
     assert(r.getAs[Long]("fail_stop") == 0L)
   }
 
+  // "the cat sat on the mat 42!": 7 tokens, summed length 20, 6 with a
+  // letter, 3 probe stopwords (the, on, the); "a b": 2, 2, 2, 1 ("a");
+  // "x": 1, 1, 1, 0
+  private def counterFixture = Seq(
+    (1L, "s", "the cat sat on the mat 42!"),
+    (2L, "s", null),
+    (3L, "s", "a b"),
+    (4L, "s", "x"))
+    .toDF("doc_id", "source", "text")
+
+  private def counters(df: org.apache.spark.sql.DataFrame): Map[Long, Seq[Long]] =
+    df.select("doc_id", "nt", "sl", "na", "ns").collect()
+      .map(r => r.getLong(0) -> Seq(r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+      .toMap
+
+  test("nbBase: a junk null-text doc is dropped, survivors carry exact counters") {
+    val base = TextAnalytics.nbBase(counterFixture)
+    assert(counters(base) == Map(
+      1L -> Seq(7L, 20L, 6L, 3L), 3L -> Seq(2L, 2L, 2L, 1L), 4L -> Seq(1L, 1L, 1L, 0L)))
+    val r1 = base.filter(col("doc_id") === 1L).collect().head
+    assert(r1.getAs[Double]("punct_ratio") == 1.0 / 26)
+    assert(r1.getAs[Double]("digit_ratio") == 2.0 / 26)
+  }
+
+  test("dsirBase: a junk null-text doc is dropped with the < 2-token docs") {
+    assert(counters(CurationOps.dsirBase(counterFixture)) == Map(
+      1L -> Seq(7L, 20L, 6L, 3L), 3L -> Seq(2L, 2L, 2L, 1L)))
+  }
+
+  test("classifierDiscrimination: a junk null-text doc leaves every per-source AUC row unchanged") {
+    // 56 tokens of mean length 4.5 with 7 probe stopwords: a Gopher pass
+    val good = ("the quick brown foxes jumped over lazy dogs " * 7).trim
+    val docs = Seq(
+      (1L, "a", good), (2L, "a", "buy now 123!"), (3L, "a", s"$good again"),
+      (4L, "a", "cheap pills"), (5L, "b", good), (6L, "b", "free $$$ money"))
+      .toDF("doc_id", "source", "text")
+    val junk = Seq((7L, "a", null), (8L, "b", null)).toDF("doc_id", "source", "text")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      TextAnalytics.classifierDiscrimination(df).orderBy(col("source")).collect().toSeq
+    val clean = rows(docs)
+    assert(clean.map(r => (r.getString(0), r.getLong(1), r.getLong(2))) ==
+      Seq(("a", 2L, 2L), ("b", 1L, 1L)))
+    assert(rows(docs.union(junk)) == clean)
+  }
+
   test("langId: null text predicts NULL, not 'en' at score -1") {
     val docs = Seq((1L, "en", "the cat and the dog"), (2L, "en", null))
       .toDF("doc_id", "lang", "text")
