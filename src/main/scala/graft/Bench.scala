@@ -1,4 +1,5 @@
 package graft
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, SparkSession}
 object Bench {
   type Query = (SparkSession, String) => DataFrame
@@ -63,16 +64,26 @@ object Bench {
     System.gc()
   }
 
-  /** `reps` isolated wall times (s) of one query at `dir`. A failing
-    * rep is passed to `onFail` and still timed (time-to-error).
+  /** Classes Janino has compiled in this JVM so far, for the driver
+    * and the local-mode executors alike: a delta around a call tells
+    * code generation apart from Catalyst and executor time.
+    */
+  def compiledClasses(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+  /** One timed rep: wall seconds and the classes compiled during it. */
+  final case class Rep(seconds: Double, compiles: Long)
+
+  /** `reps` isolated reps of one query at `dir`. A failing rep is
+    * passed to `onFail` and still timed (time-to-error).
     */
   def timeReps(spark: SparkSession, fn: Query, dir: String, reps: Int)
-              (onFail: Throwable => Unit): Seq[Double] =
+              (onFail: Throwable => Unit): Seq[Rep] =
     (1 to reps).map { _ =>
       isolate(spark)
+      val c0 = compiledClasses()
       val t0 = System.nanoTime()
       try run(spark, fn, dir) catch { case e: Throwable => onFail(e) }
-      (System.nanoTime() - t0) / 1e9
+      Rep((System.nanoTime() - t0) / 1e9, compiledClasses() - c0)
     }
 
   def median(ts: Seq[Double]): Double = ts.sorted.apply((ts.size - 1) / 2)
@@ -125,7 +136,7 @@ object Bench {
     // per-query max is kept (summed below, detail on stderr) so a real
     // tail regression stays visible instead of being median'd away.
     val reps = math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt)
-    val results: Seq[(String, Seq[Double])] =
+    val results: Seq[(String, Seq[Rep])] =
       selected.map { case (name, fn) =>
         name -> timeReps(spark, fn, sfDir, reps) { e =>
           if (failed.add(name))
@@ -137,10 +148,11 @@ object Bench {
     // faster; failed queries are excluded from the totals and the
     // per-query dict, and reported only through "errors"
     val ok = results.filterNot { case (n, _) => failed.contains(n) }
-    val medians = ok.map { case (n, ts) => n -> median(ts) }.toMap
-    results.foreach { case (n, ts) =>
+    val medians = ok.map { case (n, rs) => n -> median(rs.map(_.seconds)) }.toMap
+    results.foreach { case (n, rs) =>
       System.err.println(s"[bench] $n reps=" +
-        ts.map(t => f"$t%.2f").mkString(","))
+        rs.map(r => f"${r.seconds}%.2f").mkString(",") +
+        " compiles=" + rs.map(_.compiles).mkString(","))
     }
     // The driver parses the metric line out of a bounded tail buffer of
     // the sbt output (last ~2000 chars, with sbt's own epilogue after
@@ -182,7 +194,7 @@ object Bench {
     // sum of per-query WORST reps: total stays the robust number, but
     // a tail regression (one query 5x slower on every rep) still moves
     // max; per-query rep detail is on stderr above.
-    val maxTotal = ok.map { case (_, ts) => ts.max }.sum
+    val maxTotal = ok.map { case (_, rs) => rs.map(_.seconds).max }.sum
     val sfNum = "sf([0-9.]+)".r.findFirstMatchIn(sfDir)
       .map(_.group(1)).getOrElse("0")
     val loadEnd = loadavg()
@@ -211,9 +223,14 @@ object Bench {
     // warmup failures: not in the metric line or the totals (the timed
     // pass decides those), but recorded so a small-SF break is visible
     detail ++= warmupErrors.map(jstr).mkString("\"warmup_errors\":[", ",", "],")
-    detail ++= results.map { case (n, ts) =>
-      "\"" + n + "\":" + ts.map(fmt).mkString("[", ",", "]")
-    }.mkString("\"rep_times\":{", ",", "}}")
+    detail ++= results.map { case (n, rs) =>
+      "\"" + n + "\":" + rs.map(r => fmt(r.seconds)).mkString("[", ",", "]")
+    }.mkString("\"rep_times\":{", ",", "},")
+    // classes compiled in each timed rep: after the warmup, anything
+    // but 0 is Janino time inside the rep
+    detail ++= results.map { case (n, rs) =>
+      "\"" + n + "\":" + rs.map(_.compiles).mkString("[", ",", "]")
+    }.mkString("\"rep_compiles\":{", ",", "}}")
     try {
       val w = new java.io.PrintWriter("BENCH_DETAIL.json", "UTF-8")
       try w.println(detail.result()) finally w.close()

@@ -5,9 +5,11 @@ import org.apache.spark.scheduler._
 import scala.collection.mutable
 
 /** Dev profiler: times selected registry queries with graft.Bench's
-  * session, warmup, per-rep isolation and median, then prints a
-  * per-stage table (wall, tasks, summed executor run time and GC,
-  * shuffle read/write bytes) for each query's last rep.
+  * session, warmup, per-rep isolation and median, prints the classes
+  * Janino compiled in each rep (0 once the codegen cache holds the
+  * query's plan), then prints a per-stage table (wall, tasks, summed
+  * executor run time and GC, shuffle read/write bytes) for each
+  * query's last rep.
   *
   * Usage: runMain graft.tools.Profile <reps> <prefix...>
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1) and SPARK_GRAFT_CPUS, read
@@ -61,7 +63,7 @@ object Profile {
     val table = new StageTable
     spark.sparkContext.addSparkListener(table)
     picked.foreach { case (name, fn) =>
-      def timed(n: Int): Seq[Double] = Bench.timeReps(spark, fn, Bench.sfDir, n) { e =>
+      def timed(n: Int): Seq[Bench.Rep] = Bench.timeReps(spark, fn, Bench.sfDir, n) { e =>
         println(s"[profile] $name FAILED: ${e.getMessage}")
       }
       // listener events arrive asynchronously; let the bus drain so the
@@ -70,10 +72,11 @@ object Profile {
       val first = timed(reps - 1)
       drain()
       table.clear()
-      val ts = first ++ timed(1)
+      val rs = first ++ timed(1)
       drain()
-      println(f"[profile] $name%-28s reps=${ts.map(t => f"$t%.2f").mkString(",")} " +
-        f"median=${Bench.median(ts)}%.2f")
+      println(f"[profile] $name%-28s reps=${rs.map(r => f"${r.seconds}%.2f").mkString(",")} " +
+        f"median=${Bench.median(rs.map(_.seconds))}%.2f " +
+        s"compiles=${rs.map(_.compiles).mkString(",")}")
       table.rows.foreach { case (id, s) =>
         println(f"[profile]   stage=$id%4d wall=${(s.completed - s.submitted) / 1e3}%6.2fs " +
           f"tasks=${s.tasks}%4d run=${s.run / 1e3}%7.2fs gc=${s.gc / 1e3}%6.2fs " +

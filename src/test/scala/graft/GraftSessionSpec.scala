@@ -20,7 +20,8 @@ class GraftSessionSpec extends SparkSpec {
       "spark.ui.enabled" -> "false",
       "spark.shuffle.sort.bypassMergeThreshold" -> GraftSession.BypassMergeThreshold,
       "spark.sql.adaptive.coalescePartitions.minPartitionSize" ->
-        GraftSession.MinPartitionSize)
+        GraftSession.MinPartitionSize,
+      "spark.sql.codegen.cache.maxEntries" -> GraftSession.CodegenCacheEntries)
     expected.foreach { case (k, v) =>
       assert(conf.getOption(k).contains(v), s"$k")
       assert(spark.conf.get(k) == v, s"$k (session conf)")
