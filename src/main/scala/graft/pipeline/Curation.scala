@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, TextAnalytics}
 
@@ -33,8 +34,13 @@ object Curation {
     *        this many docs, chosen by the deterministic sampling hash
     *        (reproducible on any engine, no RNG) — the source-mix
     *        balancing stage of a training corpus
-    * @return (curated docs, per-stage report). The curated frame is
-    *         left persisted (the caller materializes it next); earlier
+    * @return (curated docs, per-stage report). The curated frame is a
+    *         local checkpoint, already materialized by the count that
+    *         reports its size: its plan is a single RDD scan, so a later
+    *         query over it neither recomputes nor re-renders the stages
+    *         that built it. `Dataset.unpersist()` does not free a
+    *         checkpoint — call [[release]] when done with the frame, or
+    *         its blocks stay until the RDD is garbage-collected. Earlier
     *         stage caches are released before returning.
     */
   // withColumn REPLACES same-named columns silently: a caller frame
@@ -136,9 +142,10 @@ object Curation {
     val quality = qualityStage(docs, minTokens, maxPunctRatio)
     val afterQuality = quality.count()
 
-    // 2. language allowlist (narrow)
+    // 2. language allowlist (narrow); an empty allowlist returns the
+    // quality frame itself, whose count is already known
     val langed = langStage(quality, keepLangs)
-    val afterLang = langed.count()
+    val afterLang = if (langed eq quality) afterQuality else langed.count()
 
     // 3. exact dedup (one exchange). Cache: stage 4's signature pass
     // and the final anti-join both reread this frame.
@@ -149,25 +156,46 @@ object Curation {
     // (estimated Jaccard), then drop the higher doc_id of each pair.
     // Signatures cached: the kernel runs once, not once per consumer.
     val sigs = Dedup.minhashSignatures(exact, nHashes).cache()
-    val deduped = exact
+    val nearDeduped = exact
       .join(nearDupIds(sigs, nHashes, minSigAgreement, bandSize),
         Seq("doc_id"), "left_anti")
-      .cache()
-    val afterNearDup = deduped.count() // pins the LSH stage: the balance
-    // stage and the caller's materialization must not recompute it
-    sigs.unpersist(blocking = false)
 
-    // 5. optional source balancing
-    val curated = balanceStage(deduped, maxPerSource).cache()
-    val afterBalance = curated.count()
+    // 5. optional source balancing. The returned frame is checkpointed,
+    // not cached: a cached frame keeps the plan that built it (with the
+    // nested `exact` and `sigs` caches), and every later query over it
+    // renders that whole tree again when its execution starts and on
+    // each adaptive-plan update. Each count pins its stage, so neither
+    // balancing nor the caller recomputes the LSH stage.
+    val (curated, afterNearDup, afterBalance) =
+      if (maxPerSource <= 0) {
+        val curated = nearDeduped.localCheckpoint(false)
+        val n = curated.count()
+        sigs.unpersist(blocking = false)
+        (curated, n, n)
+      } else {
+        val deduped = nearDeduped.cache()
+        val afterNearDup = deduped.count()
+        sigs.unpersist(blocking = false)
+        val curated = balanceStage(deduped, maxPerSource).localCheckpoint(false)
+        val afterBalance = curated.count()
+        deduped.unpersist(blocking = false)
+        (curated, afterNearDup, afterBalance)
+      }
     exact.unpersist(blocking = false)
-    // with maxPerSource=0, curated IS deduped — releasing it would
-    // break the "returned frame stays persisted" contract
-    if (!(curated eq deduped)) deduped.unpersist(blocking = false)
 
     (curated,
       Report(input, afterQuality, afterLang, afterExact, afterNearDup, afterBalance))
   }
+
+  /** Frees the blocks of a frame [[curate]] returned. A local checkpoint
+    * is a persisted RDD behind the frame's `LogicalRDD` leaf, which
+    * `Dataset.unpersist()` does not touch.
+    */
+  def release(curated: DataFrame, blocking: Boolean = false): Unit =
+    curated.queryExecution.logical.foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking)
+      case _ =>
+    }
 
   /** Benchmark decontamination: drop corpus documents sharing at least
     * `minShared` distinct word `n`-gram shingles with a held-out
@@ -248,6 +276,10 @@ object Curation {
       .join(nearDupIds(sigs, nHashes, minSigAgreement, bandSize),
         Seq("doc_id"), "left_anti")
       .observe(oNearDup, n)
+    // cached, not checkpointed like curate's result: the observe
+    // metrics ride the query that builds this cache. Behind a lazy
+    // checkpoint, CollectMetrics would run inside another query's RDD
+    // and the observations would never be fulfilled.
     val curated = balanceStage(deduped, maxPerSource)
       .observe(oBalance, n).cache()
 

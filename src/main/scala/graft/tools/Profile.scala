@@ -2,12 +2,17 @@ package graft.tools
 
 import graft.{Bench, GraftSession}
 import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate, SparkListenerSQLExecutionStart}
+import org.apache.spark.sql.graftshim.Shim
 import scala.collection.mutable
 
 /** Dev profiler: times selected registry queries with graft.Bench's
   * session, warmup, per-rep isolation and median, prints the classes
   * Janino compiled in each rep (0 once the codegen cache holds the
-  * query's plan), then prints a per-stage table (wall, tasks, summed
+  * query's plan) and the plan-description characters Spark rendered in
+  * each rep (Bench runs the final plan through `toRdd`, which starts no
+  * SQL execution, so these come from the jobs a query's builder runs),
+  * then prints a per-stage table (wall, tasks, summed
   * executor run time and GC, shuffle read/write bytes) for each
   * query's last rep.
   *
@@ -51,6 +56,24 @@ object Profile {
     def rows: Seq[(Int, Stage)] = synchronized(stages.toSeq.sortBy(_._1))
   }
 
+  /** Plan-description characters Spark rendered on the driver: the
+    * physical plan text carried by each SQL execution start and each
+    * adaptive plan update. A query over a frame whose plan nests other
+    * cached plans renders that whole lineage again on every one of
+    * these events.
+    */
+  final class PlanChars extends SparkListener {
+    private val chars = new java.util.concurrent.atomic.AtomicLong
+    override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+      case s: SparkListenerSQLExecutionStart =>
+        chars.addAndGet(s.physicalPlanDescription.length); ()
+      case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+        chars.addAndGet(u.physicalPlanDescription.length); ()
+      case _ =>
+    }
+    def total: Long = chars.get
+  }
+
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: Profile <reps> <prefix...>")
     val reps = args(0).toInt
@@ -61,22 +84,28 @@ object Profile {
     spark.sparkContext.setLogLevel("ERROR")
     Bench.warmup(spark, picked)
     val table = new StageTable
+    val planChars = new PlanChars
     spark.sparkContext.addSparkListener(table)
+    spark.sparkContext.addSparkListener(planChars)
+    // listener events arrive asynchronously; draining the bus around
+    // each rep gives exact per-rep plan characters, and the table
+    // (cleared before the last rep) exactly the last rep's stages
+    def drain(): Unit = Shim.drainListenerBus(spark.sparkContext)
     picked.foreach { case (name, fn) =>
-      def timed(n: Int): Seq[Bench.Rep] = Bench.timeReps(spark, fn, Bench.sfDir, n) { e =>
-        println(s"[profile] $name FAILED: ${e.getMessage}")
-      }
-      // listener events arrive asynchronously; let the bus drain so the
-      // table holds exactly the last rep's stages
-      def drain(): Unit = Thread.sleep(500)
-      val first = timed(reps - 1)
-      drain()
-      table.clear()
-      val rs = first ++ timed(1)
-      drain()
+      val (rs, chars) = (1 to reps).map { i =>
+        drain()
+        if (i == reps) table.clear()
+        val chars0 = planChars.total
+        val rep = Bench.timeReps(spark, fn, Bench.sfDir, 1) { e =>
+          println(s"[profile] $name FAILED: ${e.getMessage}")
+        }.head
+        drain()
+        (rep, planChars.total - chars0)
+      }.unzip
       println(f"[profile] $name%-28s reps=${rs.map(r => f"${r.seconds}%.2f").mkString(",")} " +
         f"median=${Bench.median(rs.map(_.seconds))}%.2f " +
-        s"compiles=${rs.map(_.compiles).mkString(",")}")
+        s"compiles=${rs.map(_.compiles).mkString(",")} " +
+        s"plan_chars=${chars.mkString(",")}")
       table.rows.foreach { case (id, s) =>
         println(f"[profile]   stage=$id%4d wall=${(s.completed - s.submitted) / 1e3}%6.2fs " +
           f"tasks=${s.tasks}%4d run=${s.run / 1e3}%7.2fs gc=${s.gc / 1e3}%6.2fs " +

@@ -96,7 +96,7 @@ class CurationSpec extends SparkSpec {
       Curation.curate(spark, docs, minTokens = 4,
         maxPunctRatio = 0.5, maxPerSource = 10)
     }
-    c1b.unpersist(blocking = false)
+    Curation.release(c1b)
     val ((c2, report), jobsObserved) = countJobs {
       val (c2, thunk) = Curation.curateObserved(spark, docs, minTokens = 4,
         maxPunctRatio = 0.5, maxPerSource = 10)
@@ -110,7 +110,7 @@ class CurationSpec extends SparkSpec {
     // MINUS the six standalone count() jobs and their recomputation
     assert(jobsObserved < jobsCounted,
       s"observed=$jobsObserved should undercut counted=$jobsCounted")
-    c1.unpersist(blocking = false)
+    Curation.release(c1)
     c2.unpersist(blocking = false)
   }
 }
