@@ -40,8 +40,9 @@ object Curation {
     *         query over it neither recomputes nor re-renders the stages
     *         that built it. `Dataset.unpersist()` does not free a
     *         checkpoint — call [[release]] when done with the frame, or
-    *         its blocks stay until the RDD is garbage-collected. Earlier
-    *         stage caches are released before returning.
+    *         its blocks stay until the RDD is garbage-collected; reading
+    *         the frame after [[release]] throws. Earlier stage caches
+    *         are released before returning.
     */
   // withColumn REPLACES same-named columns silently: a caller frame
   // that already carries one of the pipeline's internal temp columns
@@ -187,13 +188,16 @@ object Curation {
       Report(input, afterQuality, afterLang, afterExact, afterNearDup, afterBalance))
   }
 
-  /** Frees the blocks of a frame [[curate]] returned. A local checkpoint
-    * is a persisted RDD behind the frame's `LogicalRDD` leaf, which
-    * `Dataset.unpersist()` does not touch.
+  /** Frees the blocks of the frame [[curate]] returned: a local
+    * checkpoint is a persisted RDD behind the frame's `LogicalRDD` root,
+    * which `Dataset.unpersist()` does not touch. Pass curate's frame
+    * itself, not a frame derived from it (anything else is left alone).
+    * Reading the frame after release throws: a local checkpoint cannot
+    * be recomputed.
     */
-  def release(curated: DataFrame, blocking: Boolean = false): Unit =
-    curated.queryExecution.logical.foreach {
-      case r: LogicalRDD => r.rdd.unpersist(blocking)
+  def release(curated: DataFrame): Unit =
+    curated.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
       case _ =>
     }
 

@@ -41,7 +41,7 @@ class CodegenCacheSpec extends SparkSpec {
           Retrieval.searchBm25FromStats(stats, qdf, 10).collect()
         }
       } finally Seq(stats.tfdl, stats.idf, stats.avgdl).foreach(_.unpersist(blocking = true))
-    } finally Curation.release(curated, blocking = true)
+    } finally Curation.release(curated)
     Bench.compiledClasses() - c0
   }
 

@@ -81,7 +81,7 @@ class CuratedFrameSpec extends SparkSpec {
         assert(searchChars < SearchPlanCharsBound,
           s"one search rendered $searchChars plan characters")
       } finally Seq(stats.tfdl, stats.idf, stats.avgdl).foreach(_.unpersist(blocking = true))
-    } finally Curation.release(curated, blocking = true)
+    } finally Curation.release(curated)
   }
 
   private def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -98,7 +98,11 @@ class CuratedFrameSpec extends SparkSpec {
       assert((persistedRdds -- before).size == 1,
         "only the curated frame's blocks should stay persisted")
       assert(spark.sharedState.cacheManager.isEmpty)
-      Curation.release(curated, blocking = true)
+      // a frame derived from curate's is not curate's frame: its
+      // release must not free blocks that other frames may read
+      Curation.release(curated.select("doc_id"))
+      assert((persistedRdds -- before).size == 1)
+      Curation.release(curated)
       assert((persistedRdds -- before).isEmpty)
       assert(spark.sharedState.cacheManager.isEmpty)
     }
