@@ -91,7 +91,7 @@ object AuxArtifacts {
     // q132: MinHash signatures over the curation pipeline's
     // deterministic exact-dedup prefix (quality -> lang allowlist ->
     // min-doc_id exact dedup) — exactStage replays the identical
-    // stages curateObserved runs, and the q132 oracle SQL re-derives
+    // stages curate runs, and the q132 oracle SQL re-derives
     // that prefix itself, so a drift between the two is DETECTED (the
     // artifact would carry signatures for a different doc set than the
     // oracle's own exact set and the anti-join output would diverge)

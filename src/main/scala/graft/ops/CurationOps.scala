@@ -1978,7 +1978,7 @@ object CurationOps {
   }
 
   /** End-to-end curation pipeline (q132): the flagship
-    * [[graft.pipeline.Curation.curateObserved]] composition — quality
+    * [[graft.pipeline.Curation.curate]] composition — quality
     * floor -> language allowlist -> exact dedup -> MinHash-LSH
     * near-dup removal (signature-verified, Jaccard >= 0.7) -> per-
     * source balance cap — oracle-checked END TO END. TWO-STAGE
@@ -1986,7 +1986,7 @@ object CurationOps {
     * signature, so graft.Verify dumps the signature matrix computed
     * over the pipeline's deterministic exact-dedup prefix
     * (aux_cur_sig32, built by [[graft.pipeline.Curation.exactStage]]
-    * — the same stages `curateObserved` runs); DuckDB independently
+    * — the same stages `curate` runs); DuckDB independently
     * re-derives EVERY stage: the token/punctuation quality gate, the
     * lang filter, min-doc_id exact dedup (cross-checking that the
     * artifact's input set equals its own derivation), the 8x4 band
@@ -1996,6 +1996,8 @@ object CurationOps {
     * Scale: see the stage-by-stage notes on [[graft.pipeline.Curation]]
     * — narrow scans, one exchange per dedup stage, LSH banding instead
     * of all-pairs, and observe()-metrics instead of count() jobs.
+    * The builder runs curate's two materializations; the query reads
+    * the returned checkpoint.
     */
   val q132: QueryDef = QueryDef.sql(
     "q132_curation_pipeline",
@@ -2035,7 +2037,7 @@ object CurationOps {
        |  FROM nd)
        |SELECT doc_id, lang, source FROM bal WHERE rn <= 10
        |ORDER BY doc_id""".stripMargin) { (s, dir) =>
-    val (curated, _) = graft.pipeline.Curation.curateObserved(
+    val (curated, _) = graft.pipeline.Curation.curate(
       s, Tables.documents(s, dir),
       minTokens = 8, maxPunctRatio = 0.2, keepLangs = Seq("en", "fr", "de"),
       nHashes = 32, bandSize = 4, minSigAgreement = 0.7, maxPerSource = 10)

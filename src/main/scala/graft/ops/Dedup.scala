@@ -744,8 +744,8 @@ object Dedup {
     * band_sig) band frame — the one definition of the band equi-join,
     * shared by [[minhashCandidates]], the calibration audits, and
     * callers that already hold band keys (the curation pipeline
-    * derives them from a cached signature frame so the shingle kernel
-    * runs once, not once per join side). `keys` names extra columns
+    * derives them from a checkpointed signature frame so the shingle
+    * kernel runs once, not once per join side). `keys` names extra columns
     * that must ALSO match for two docs to share a bucket (positional,
     * matching [[bandsFromSignatures]]' `keep`) — the script-routed
     * chain passes `route` so word and char signatures live in
@@ -758,11 +758,16 @@ object Dedup {
     val expected = "doc_id" +: keys :+ "band" :+ "band_sig"
     require(bands.columns.toSeq == expected,
       s"candidatesFromBands expects columns $expected, got ${bands.columns.toSeq}")
-    val left = bands.toDF("d1" +: keys.map(_ + "_l") :+ "band" :+ "sig": _*)
+    // Both sides rename every column, so their plans match and they
+    // share one shuffle. Two shuffles of the same rows would race:
+    // adaptive execution builds its broadcast from whichever finishes
+    // first, a run-to-run choice of build side that changes the
+    // generated code and so recompiles it.
+    val left = bands.toDF("d1" +: keys.map(_ + "_l") :+ "band1" :+ "sig1": _*)
     val right = bands.toDF("d2" +: keys.map(_ + "_r") :+ "band2" :+ "sig2": _*)
     val cond = keys
       .map(k => col(k + "_l") === col(k + "_r"))
-      .foldLeft(col("band") === col("band2") && col("sig") === col("sig2") &&
+      .foldLeft(col("band1") === col("band2") && col("sig1") === col("sig2") &&
         col("d1") < col("d2"))(_ && _)
     left.join(right, cond).select(col("d1"), col("d2")).distinct()
   }

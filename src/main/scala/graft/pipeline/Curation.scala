@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.ops.{Dedup, TextAnalytics}
@@ -12,8 +12,10 @@ import graft.ops.{Dedup, TextAnalytics}
   *
   * Scale shape: stages 1-2 are narrow (scan speed); exact dedup is one
   * exchange on the text hash; near-dup is the narrow signature pass +
-  * one band equi-join. Nothing in the pipeline collects to the driver
-  * except the final stage-count aggregates.
+  * one band equi-join. A call runs two actions, each materializing a
+  * local checkpoint: the exact-dedup output and the returned frame.
+  * Per-stage counts are `observe` metrics of those two actions, so no
+  * stage pays a count job of its own.
   */
 object Curation {
 
@@ -35,14 +37,16 @@ object Curation {
     *        (reproducible on any engine, no RNG) — the source-mix
     *        balancing stage of a training corpus
     * @return (curated docs, per-stage report). The curated frame is a
-    *         local checkpoint, already materialized by the count that
-    *         reports its size: its plan is a single RDD scan, so a later
-    *         query over it neither recomputes nor re-renders the stages
-    *         that built it. `Dataset.unpersist()` does not free a
-    *         checkpoint — call [[release]] when done with the frame, or
-    *         its blocks stay until the RDD is garbage-collected; reading
-    *         the frame after [[release]] throws. Earlier stage caches
-    *         are released before returning.
+    *         local checkpoint, already materialized by the action whose
+    *         observed metrics report its size: its plan is a single RDD
+    *         scan, so a later query over it neither recomputes nor
+    *         re-renders the stages that built it. `Dataset.unpersist()`
+    *         does not free a checkpoint — call [[release]] when done
+    *         with the frame, or its blocks stay until the RDD is
+    *         garbage-collected; reading the frame after [[release]]
+    *         throws. The intermediate checkpoints are released before
+    *         returning, and the call adds no entry to the session's
+    *         cache manager, so concurrent calls share nothing.
     */
   // withColumn REPLACES same-named columns silently: a caller frame
   // that already carries one of the pipeline's internal temp columns
@@ -55,7 +59,7 @@ object Curation {
     val clash = docs.columns.toSet.intersect(reservedCols.toSet)
     require(clash.isEmpty,
       s"columns ${clash.mkString(", ")} are reserved by the curation " +
-        "pipeline; rename them before calling curate/curateObserved")
+        "pipeline; rename them before calling curate")
   }
 
   /** Stage-1 quality filter (narrow, scan speed). Exposed so the q132
@@ -75,9 +79,9 @@ object Curation {
   }
 
   /** Stage-3 exact dedup (keep lowest doc_id per exact text, one
-    * exchange) — the ONE definition of the keeper policy; a second
-    * copy in either curate variant could silently fork from the q132
-    * oracle prefix that [[exactStage]] exists to pin.
+    * exchange) — the ONE definition of the keeper policy, shared by
+    * [[curate]] and [[exactStage]]; a second copy could silently fork
+    * from the q132 oracle prefix that [[exactStage]] exists to pin.
     */
   private def exactDedup(langed: DataFrame): DataFrame = {
     val exactKeep = langed
@@ -113,8 +117,8 @@ object Curation {
     }
 
   /** Stage-4 verified near-dup strike set over the exact-deduped
-    * frame's SIGNATURES (cache them — the shingle+MinHash kernel is
-    * the pipeline's priciest narrow op and three consumers read the
+    * frame's SIGNATURES (checkpoint them — the shingle+MinHash kernel
+    * is the pipeline's priciest narrow op and three consumers read the
     * frame): the shared [[Dedup.verifiedPairs]] criterion, higher
     * doc_id of each verified pair returned distinct.
     */
@@ -137,55 +141,48 @@ object Curation {
              minSigAgreement: Double = 0.7,
              maxPerSource: Int = 0): (DataFrame, Report) = {
     requireNoReservedColumns(docs)
-    val input = docs.count()
+    // Stage counts are observe() metrics that ride the two
+    // materializations below: no count() job per stage. Names are
+    // unique per call: two calls in flight with the same observation
+    // names never finish.
+    val call = java.util.UUID.randomUUID()
+    val (oIn, oQuality, oLang, oExact, oNearDup, oBalance) = {
+      def o(stage: String) = Observation(s"curate_${stage}_$call")
+      (o("input"), o("quality"), o("lang"), o("exact"), o("neardup"), o("balance"))
+    }
+    val n = count(lit(1)).as("n")
 
-    // 1. quality: narrow per-doc metrics, no shuffle
-    val quality = qualityStage(docs, minTokens, maxPunctRatio)
-    val afterQuality = quality.count()
-
-    // 2. language allowlist (narrow); an empty allowlist returns the
-    // quality frame itself, whose count is already known
-    val langed = langStage(quality, keepLangs)
-    val afterLang = if (langed eq quality) afterQuality else langed.count()
-
-    // 3. exact dedup (one exchange). Cache: stage 4's signature pass
-    // and the final anti-join both reread this frame.
-    val exact = exactDedup(langed).cache()
-    val afterExact = exact.count()
+    // 1-3. quality (narrow), language allowlist (narrow), exact dedup
+    // (one exchange). Action 1 materializes the exact-dedup output: the
+    // signature pass and the final anti-join both reread it, and the
+    // first four observations fire on it.
+    val quality = qualityStage(docs.observe(oIn, n), minTokens, maxPunctRatio)
+      .observe(oQuality, n)
+    val langed = langStage(quality, keepLangs).observe(oLang, n)
+    val exact = exactDedup(langed).observe(oExact, n).localCheckpoint(true)
 
     // 4. near-dup: LSH candidates VERIFIED by signature agreement
     // (estimated Jaccard), then drop the higher doc_id of each pair.
-    // Signatures cached: the kernel runs once, not once per consumer.
-    val sigs = Dedup.minhashSignatures(exact, nHashes).cache()
+    // Signatures checkpointed lazily: the kernel runs once, inside
+    // action 2, not once per consumer.
+    val sigs = Dedup.minhashSignatures(exact, nHashes).localCheckpoint(false)
     val nearDeduped = exact
       .join(nearDupIds(sigs, nHashes, minSigAgreement, bandSize),
         Seq("doc_id"), "left_anti")
+      .observe(oNearDup, n)
 
-    // 5. optional source balancing. The returned frame is checkpointed,
-    // not cached: a cached frame keeps the plan that built it (with the
-    // nested `exact` and `sigs` caches), and every later query over it
-    // renders that whole tree again when its execution starts and on
-    // each adaptive-plan update. Each count pins its stage, so neither
-    // balancing nor the caller recomputes the LSH stage.
-    val (curated, afterNearDup, afterBalance) =
-      if (maxPerSource <= 0) {
-        val curated = nearDeduped.localCheckpoint(false)
-        val n = curated.count()
-        sigs.unpersist(blocking = false)
-        (curated, n, n)
-      } else {
-        val deduped = nearDeduped.cache()
-        val afterNearDup = deduped.count()
-        sigs.unpersist(blocking = false)
-        val curated = balanceStage(deduped, maxPerSource).localCheckpoint(false)
-        val afterBalance = curated.count()
-        deduped.unpersist(blocking = false)
-        (curated, afterNearDup, afterBalance)
-      }
-    exact.unpersist(blocking = false)
+    // 5. optional source balancing. Action 2 materializes the returned
+    // frame as a checkpoint, not a cache: a cached frame keeps the plan
+    // that built it, and every later query over it renders that whole
+    // tree again when its execution starts and on each adaptive-plan
+    // update. Observations are read only after both actions returned.
+    val curated =
+      try balanceStage(nearDeduped, maxPerSource).observe(oBalance, n).localCheckpoint(true)
+      finally { release(sigs); release(exact) }
 
-    (curated,
-      Report(input, afterQuality, afterLang, afterExact, afterNearDup, afterBalance))
+    def metric(o: Observation): Long = o.get("n").asInstanceOf[Long]
+    (curated, Report(metric(oIn), metric(oQuality), metric(oLang),
+      metric(oExact), metric(oNearDup), metric(oBalance)))
   }
 
   /** Frees the blocks of the frame [[curate]] returned: a local
@@ -227,69 +224,5 @@ object Curation {
       .filter(col("n_shared") >= minShared)
       .select(col("doc_id"))
     corpus.join(broadcast(contaminated), Seq("doc_id"), "left_anti")
-  }
-
-  /** [[curate]] with ZERO bookkeeping actions: stage counts ride as
-    * `observe` metrics computed DURING the caller's one materialization
-    * instead of six standalone count() jobs. At 100 TB each count() in
-    * [[curate]] is a full pass over a stage's input — the observed
-    * variant's accounting is free (a running aggregate inside the
-    * already-executing plan).
-    *
-    * Same stages and policies as [[curate]] (quality -> language ->
-    * exact dedup -> verified near-dup -> optional balance; the exact
-    * and final frames are cached, earlier caches released by the
-    * caller via the returned frame's lifecycle).
-    *
-    * @return (curated frame, report thunk). The thunk BLOCKS until an
-    *         action has run over the returned frame (e.g.
-    *         `curated.count()` or the caller's write) — call it after
-    *         materializing, not before.
-    */
-  def curateObserved(spark: SparkSession, docs: DataFrame,
-                     minTokens: Int = 8, maxPunctRatio: Double = 0.2,
-                     keepLangs: Seq[String] = Nil,
-                     nHashes: Int = 32, bandSize: Int = 4,
-                     minSigAgreement: Double = 0.7,
-                     maxPerSource: Int = 0): (DataFrame, () => Report) = {
-    requireNoReservedColumns(docs)
-    import org.apache.spark.sql.Observation
-    val oIn = Observation("curate_input")
-    val oQuality = Observation("curate_quality")
-    val oLang = Observation("curate_lang")
-    val oExact = Observation("curate_exact")
-    val oNearDup = Observation("curate_neardup")
-    val oBalance = Observation("curate_balance")
-    val n = count(lit(1)).as("n")
-
-    // the SAME stage definitions curate/exactStage run — observe nodes
-    // wrap them rather than re-spelling their bodies (a drifted inline
-    // copy here once tripled the places a stage fix had to land)
-    val quality = qualityStage(docs.observe(oIn, n), minTokens, maxPunctRatio)
-      .observe(oQuality, n)
-    val langed = langStage(quality, keepLangs).observe(oLang, n)
-    // cache ABOVE the observe: the consumers (signature pass, final
-    // anti-join) share one computation, so each stage metric fires
-    // exactly once — on the cache build
-    val exact = exactDedup(langed).observe(oExact, n).cache()
-    // signatures cached lazily (curateObserved runs ZERO bookkeeping
-    // actions — an eager checkpoint here would break that contract);
-    // lifecycle rides the returned frame's, like `exact`
-    val sigs = Dedup.minhashSignatures(exact, nHashes).cache()
-    val deduped = exact
-      .join(nearDupIds(sigs, nHashes, minSigAgreement, bandSize),
-        Seq("doc_id"), "left_anti")
-      .observe(oNearDup, n)
-    // cached, not checkpointed like curate's result: the observe
-    // metrics ride the query that builds this cache. Behind a lazy
-    // checkpoint, CollectMetrics would run inside another query's RDD
-    // and the observations would never be fulfilled.
-    val curated = balanceStage(deduped, maxPerSource)
-      .observe(oBalance, n).cache()
-
-    def metric(o: Observation): Long =
-      o.get.get("n").map(_.asInstanceOf[Long]).getOrElse(0L)
-    (curated, () => Report(metric(oIn), metric(oQuality), metric(oLang),
-      metric(oExact), metric(oNearDup), metric(oBalance)))
   }
 }

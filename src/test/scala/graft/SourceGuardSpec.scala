@@ -15,7 +15,10 @@ import scala.jdk.CollectionConverters._
   *  - the document-quality features (token, word-length, alpha and
   *    probe-stopword counters, punctuation/digit counts, the Gopher
   *    rules) are spelled once per engine: `TextAnalytics` for Spark
-  *    columns, `TwinSql` for the DuckDB twins.
+  *    columns, `TwinSql` for the DuckDB twins;
+  *  - `Curation.curate` is the one curation pipeline: its stage counts
+  *    are observed metrics, not count jobs, and it caches nothing in
+  *    the session-wide cache manager.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -108,5 +111,22 @@ class SourceGuardSpec extends AnyFunSuite {
         s"call the quality-feature definitions in ${owner.stripSuffix(".scala")} " +
           "instead of spelling the formula\n" + hits.mkString("\n"))
     }
+  }
+
+  test("curate is the one curation pipeline and runs no count or cache") {
+    val p = Paths.get("src/main/scala/graft/pipeline/Curation.scala")
+    val hits = codeLines(p).collect {
+      case (l, i) if l.contains(".count()") || l.contains(".cache()") =>
+        s"$p:${i + 1}: ${l.trim}"
+    }
+    assert(hits.isEmpty,
+      "observe the stage count on an existing materialization and " +
+        "checkpoint instead of caching\n" + hits.mkString("\n"))
+    val forks = mainFiles.flatMap { p =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (l, i) if l.contains("curateObserved") => s"$p:${i + 1}: ${l.trim}"
+      }
+    }
+    assert(forks.isEmpty, forks.mkString("\n"))
   }
 }

@@ -1,5 +1,15 @@
 package graft.pipeline
 
+import java.util.concurrent.{ConcurrentHashMap, Executors}
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions.{col, least, lit}
+import org.apache.spark.sql.graftshim.Shim
+
 import graft.SparkSpec
 
 class CurationSpec extends SparkSpec {
@@ -75,42 +85,99 @@ class CurationSpec extends SparkSpec {
       again.select("doc_id").as[Long].collect().sorted.toSeq)
   }
 
-  test("curateObserved: observed stage counts equal curate's, with far fewer jobs") {
-    val docs = graft.ops.Tables.documents(spark, sfDir)
-    val (c1, r1) = Curation.curate(spark, docs, minTokens = 4,
-      maxPunctRatio = 0.5, maxPerSource = 10)
-    def countJobs[T](f: => T): (T, Int) = {
-      val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          jobs.incrementAndGet(); ()
-        }
+  /** Runs `body` and returns its value with the distinct SQL root
+    * executions its jobs ran under (a job outside any SQL execution
+    * counts as its own) and the number of jobs. */
+  private def actionsAndJobs[T](body: => T): (T, Int, Int) = {
+    val roots = ConcurrentHashMap.newKeySet[String]()
+    val jobs = new AtomicInteger(0)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit = {
+        val p = Option(j.properties)
+        roots.add(p.flatMap(p => Option(p.getProperty("spark.sql.execution.root.id")))
+          .orElse(p.flatMap(p => Option(p.getProperty("spark.sql.execution.id"))))
+          .getOrElse(s"job ${j.jobId}"))
+        jobs.incrementAndGet(); ()
       }
-      spark.sparkContext.addSparkListener(listener)
-      val out = try f finally spark.sparkContext.removeSparkListener(listener)
-      (out, jobs.get())
     }
-    // same params as c1 above — fresh frames, so a fair job-count race
-    val ((c1b, _), jobsCounted) = countJobs {
-      Curation.curate(spark, docs, minTokens = 4,
-        maxPunctRatio = 0.5, maxPerSource = 10)
+    val sc = spark.sparkContext
+    Shim.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    val out = try {
+      val out = body
+      Shim.drainListenerBus(sc)
+      out
+    } finally sc.removeSparkListener(listener)
+    (out, roots.size, jobs.get())
+  }
+
+  test("curate's report equals independent stage counts, from two actions") {
+    val fixture = graft.ops.Tables.documents(spark, sfDir)
+    val langs = Seq("en", "fr", "de")
+    // the fixture passes every quality check and holds no exact
+    // duplicate: plant five docs the quality floor drops and five exact
+    // copies (higher doc_id, so the copies go) of docs that survive to
+    // the exact stage, so each field differs from its neighbours'
+    val docs = fixture
+      .unionByName(fixture.orderBy("doc_id").limit(5)
+        .withColumn("doc_id", col("doc_id") + 1000000L)
+        .withColumn("text", lit("too short")))
+      .unionByName(Curation.exactStage(fixture, 4, 0.5, langs).orderBy("doc_id").limit(5)
+        .withColumn("doc_id", col("doc_id") + 2000000L))
+    val quality = Curation.qualityStage(docs, 4, 0.5)
+    val (unbalanced, _) = Curation.curate(spark, docs, minTokens = 4,
+      maxPunctRatio = 0.5, keepLangs = langs)
+    val expected = Curation.Report(
+      input = docs.count(),
+      afterQuality = quality.count(),
+      afterLang = quality.filter(col("lang").isin(langs: _*)).count(),
+      afterExact = Curation.exactStage(docs, 4, 0.5, langs).count(),
+      afterNearDup = unbalanced.count(),
+      afterBalance = unbalanced.groupBy("source").count()
+        .select(least(col("count"), lit(10L))).as[Long].collect().sum)
+    val unbalancedIds = unbalanced.select("doc_id").as[Long].collect().toSet
+    Curation.release(unbalanced)
+
+    val ((curated, report), actions, jobs) = actionsAndJobs {
+      Curation.curate(spark, docs, minTokens = 4, maxPunctRatio = 0.5,
+        keepLangs = langs, maxPerSource = 10)
     }
-    Curation.release(c1b)
-    val ((c2, report), jobsObserved) = countJobs {
-      val (c2, thunk) = Curation.curateObserved(spark, docs, minTokens = 4,
-        maxPunctRatio = 0.5, maxPerSource = 10)
-      c2.count() // the single materialization every observation rides
-      (c2, thunk())
-    }
-    assert(report == r1)
-    assert(c2.select("doc_id").as[Long].collect().sorted.toSeq ==
-      c1.select("doc_id").as[Long].collect().sorted.toSeq)
-    // the observed variant does the same pipeline work (AQE stages)
-    // MINUS the six standalone count() jobs and their recomputation
-    assert(jobsObserved < jobsCounted,
-      s"observed=$jobsObserved should undercut counted=$jobsCounted")
-    Curation.release(c1)
-    c2.unpersist(blocking = false)
+    info(s"curate ran $jobs jobs under $actions actions; $report")
+    assert(report == expected)
+    assert(expected.productIterator.toSeq.distinct.size == 6, expected)
+    val ids = curated.select("doc_id").as[Long].collect()
+    assert(ids.length == expected.afterBalance)
+    assert(ids.toSet.subsetOf(unbalancedIds))
+    // the two materializations are the only actions: no stage pays a
+    // count job of its own
+    assert(actions == 2, s"curate ran $jobs jobs under $actions actions")
+    Curation.release(curated)
+  }
+
+  test("two concurrent curate calls on one session return the serial report") {
+    val docs = graft.ops.Tables.documents(spark, sfDir)
+    def run() = Curation.curate(spark, docs, minTokens = 4,
+      maxPunctRatio = 0.5, maxPerSource = 10)
+    val (serial, serialReport) = run()
+    val serialIds = serial.select("doc_id").as[Long].collect().sorted.toSeq
+    Curation.release(serial)
+    spark.catalog.clearCache()
+
+    val pool = Executors.newFixedThreadPool(2, (r: Runnable) => {
+      val t = new Thread(r, "concurrent-curate")
+      t.setDaemon(true) // a hung call must not keep the JVM alive
+      t
+    })
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    try {
+      val calls = Seq.fill(2)(Future(run()))
+      val results = calls.map(Await.result(_, 120.seconds))
+      for ((curated, report) <- results) {
+        assert(report == serialReport)
+        assert(curated.select("doc_id").as[Long].collect().sorted.toSeq == serialIds)
+        Curation.release(curated)
+      }
+      assert(spark.sharedState.cacheManager.isEmpty)
+    } finally pool.shutdownNow()
   }
 }
