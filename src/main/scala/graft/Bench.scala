@@ -57,10 +57,14 @@ object Bench {
     * a full run vs 0.55s isolated, same code). Dropping leftover
     * cached RDDs and forcing collection BETWEEN queries charges each
     * query its own work, the way a per-query cluster job would be.
+    * The cache manager is cleared too: a builder that `.cache()`s a
+    * plan would otherwise find the previous rep's entry and time its
+    * reps 2+ warm.
     */
   def isolate(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
+    spark.catalog.clearCache()
     System.gc()
   }
 

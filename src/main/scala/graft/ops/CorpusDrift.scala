@@ -425,23 +425,7 @@ object CorpusDrift {
        |    SELECT source,
        |      ${TwinSql.classifierZ("stop_ratio", "nt", "punct_ratio", "digit_ratio")} AS z
        |    FROM f WHERE nt > 0)),
-       |cb AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM b GROUP BY bucket),
-       |sb AS (SELECT source, bucket, CAST(count(*) AS BIGINT) AS o
-       |       FROM b GROUP BY source, bucket),
-       |ns AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-       |       FROM b GROUP BY source),
-       |tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM b),
-       |spine AS (SELECT ns.source, ns.n_docs, cb.bucket, cb.c, tot.n
-       |          FROM ns CROSS JOIN cb CROSS JOIN tot),
-       |terms AS (
-       |  SELECT source, n_docs, bucket,
-       |    (CAST(COALESCE(sb.o, 0) AS DOUBLE)
-       |       - CAST(spine.n_docs AS DOUBLE) * CAST(spine.c AS DOUBLE) / CAST(spine.n AS DOUBLE))
-       |    * (CAST(COALESCE(sb.o, 0) AS DOUBLE)
-       |       - CAST(spine.n_docs AS DOUBLE) * CAST(spine.c AS DOUBLE) / CAST(spine.n AS DOUBLE))
-       |    / (CAST(spine.n_docs AS DOUBLE) * CAST(spine.c AS DOUBLE) / CAST(spine.n AS DOUBLE))
-       |      AS term
-       |  FROM spine LEFT JOIN sb USING (source, bucket))
+       |${TwinSql.chiSquareSql}
        |SELECT source, n_docs,
        |  CAST((SELECT count(*) FROM cb) - 1 AS BIGINT) AS dof,
        |  list_sum(list(term ORDER BY bucket)) AS chi2
@@ -469,23 +453,7 @@ object CorpusDrift {
     s"""WITH b AS (
        |  SELECT source, n_chars // 200 AS bucket FROM documents
        |  WHERE n_chars >= 0),
-       |cb AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM b GROUP BY bucket),
-       |sb AS (SELECT source, bucket, CAST(count(*) AS BIGINT) AS o
-       |       FROM b GROUP BY source, bucket),
-       |ns AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-       |       FROM b GROUP BY source),
-       |tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM b),
-       |spine AS (SELECT ns.source, ns.n_docs, cb.bucket, cb.c, tot.n
-       |          FROM ns CROSS JOIN cb CROSS JOIN tot),
-       |terms AS (
-       |  SELECT source, n_docs, bucket,
-       |    (CAST(COALESCE(sb.o, 0) AS DOUBLE)
-       |       - CAST(spine.n_docs AS DOUBLE) * CAST(spine.c AS DOUBLE) / CAST(spine.n AS DOUBLE))
-       |    * (CAST(COALESCE(sb.o, 0) AS DOUBLE)
-       |       - CAST(spine.n_docs AS DOUBLE) * CAST(spine.c AS DOUBLE) / CAST(spine.n AS DOUBLE))
-       |    / (CAST(spine.n_docs AS DOUBLE) * CAST(spine.c AS DOUBLE) / CAST(spine.n AS DOUBLE))
-       |      AS term
-       |  FROM spine LEFT JOIN sb USING (source, bucket))
+       |${TwinSql.chiSquareSql}
        |SELECT source, n_docs,
        |  CAST((SELECT count(*) FROM cb) - 1 AS BIGINT) AS dof,
        |  list_sum(list(term ORDER BY bucket)) AS chi2
@@ -714,23 +682,7 @@ object CorpusDrift {
        |  SELECT CASE WHEN vec_id % 10 < 8 THEN 'ref' ELSE 'cur' END AS source,
        |    CAST(center_id AS BIGINT) AS bucket
        |  FROM asg),
-       |cb AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM b GROUP BY bucket),
-       |sb AS (SELECT source, bucket, CAST(count(*) AS BIGINT) AS o
-       |       FROM b GROUP BY source, bucket),
-       |ns AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-       |       FROM b GROUP BY source),
-       |tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM b),
-       |spine AS (SELECT ns.source, ns.n_docs, cb.bucket, cb.c, tot.n
-       |          FROM ns CROSS JOIN cb CROSS JOIN tot),
-       |terms AS (
-       |  SELECT source, n_docs, bucket,
-       |    (CAST(COALESCE(sb.o, 0) AS DOUBLE)
-       |       - CAST(spine.n_docs AS DOUBLE) * CAST(spine.c AS DOUBLE) / CAST(spine.n AS DOUBLE))
-       |    * (CAST(COALESCE(sb.o, 0) AS DOUBLE)
-       |       - CAST(spine.n_docs AS DOUBLE) * CAST(spine.c AS DOUBLE) / CAST(spine.n AS DOUBLE))
-       |    / (CAST(spine.n_docs AS DOUBLE) * CAST(spine.c AS DOUBLE) / CAST(spine.n AS DOUBLE))
-       |      AS term
-       |  FROM spine LEFT JOIN sb USING (source, bucket))
+       |${TwinSql.chiSquareSql}
        |SELECT source AS win, n_docs AS n_vecs,
        |  CAST((SELECT count(*) FROM cb) - 1 AS BIGINT) AS dof,
        |  list_sum(list(term ORDER BY bucket)) AS chi2

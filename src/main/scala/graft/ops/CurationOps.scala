@@ -611,6 +611,34 @@ object CurationOps {
     * identical running-max window, and a second copy could drift.
     * Per-document window: doc-sized groups, never a corpus-wide sort.
     */
+  /** One row per `n`-token window of a tokenized frame `d`(doc_id, t,
+    * nt): (doc_id, start, t) for every start of a document with at
+    * least `n` tokens.
+    */
+  private def windowStarts(d: org.apache.spark.sql.DataFrame, n: Int)
+      : org.apache.spark.sql.DataFrame =
+    d.filter(col("nt") >= n)
+      .select(col("doc_id"),
+        explode(sequence(lit(0L), col("nt") - n)).as("start"),
+        col("t"))
+
+  /** The `n` tokens of the window at `start`, joined \u0001-separated
+    * so token boundaries can't alias.
+    */
+  private def windowText(n: Int): org.apache.spark.sql.Column =
+    concat_ws("\u0001", slice(col("t"), (col("start") + 1).cast("int"), lit(n)))
+
+  /** The token n-gram occurrence frame (doc_id, start, g) of a
+    * tokenized frame `d`(doc_id, t, nt), g the xxhash64 of the window
+    * text — ONE definition under the span dedup, duplicate-fraction,
+    * exact-substring and memorization operators. Each caller builds
+    * its own `d`: their `nt` null guards differ on purpose.
+    */
+  private def ngramOccurrences(d: org.apache.spark.sql.DataFrame, n: Int)
+      : org.apache.spark.sql.DataFrame =
+    windowStarts(d, n)
+      .select(col("doc_id"), col("start"), xxhash64(windowText(n)).as("g"))
+
   private def mergeSpanIntervals(marked: org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame = {
     val wd = Window.partitionBy(col("doc_id")).orderBy(col("start"))
@@ -635,18 +663,10 @@ object CurationOps {
       // unlike the nt >= n sites the junk row's nt IS emitted
       .withColumn("nt",
         when(col("t").isNotNull, size(col("t"))).cast("bigint"))
-    // one row per window position; the key hashes the joined tokens
-    // (\u0001-separated so token boundaries can't alias). The oracle
-    // groups the RAW joined string where we equi-join its xxhash64 —
-    // identical modulo a 64-bit collision, which the compare would
-    // surface, not mask (the q45 argument).
-    val occ = d.filter(col("nt") >= n)
-      .select(col("doc_id"),
-        explode(sequence(lit(0L), col("nt") - n)).as("start"),
-        col("t"))
-      .select(col("doc_id"), col("start"),
-        xxhash64(concat_ws("\u0001",
-          slice(col("t"), (col("start") + 1).cast("int"), lit(n)))).as("g"))
+    // The oracle groups the RAW joined window string where we
+    // equi-join its xxhash64 — identical modulo a 64-bit collision,
+    // which the compare would surface, not mask (the q45 argument).
+    val occ = ngramOccurrences(d, n)
     val wg = Window.partitionBy(col("g"))
     val marked = occ
       .withColumn("rn", row_number().over(wg.orderBy(col("doc_id"), col("start"))))
@@ -750,13 +770,7 @@ object CurationOps {
       .select(col("doc_id"), toks(col("text")).as("t"))
       .withColumn("nt",
         when(col("t").isNotNull, size(col("t"))).cast("bigint"))
-    val occ = d.filter(col("nt") >= n)
-      .select(col("doc_id"),
-        explode(sequence(lit(0L), col("nt") - n)).as("start"),
-        col("t"))
-      .select(col("doc_id"), col("start"),
-        xxhash64(concat_ws("\u0001",
-          slice(col("t"), (col("start") + 1).cast("int"), lit(n)))).as("g"))
+    val occ = ngramOccurrences(d, n)
     val wg = Window.partitionBy(col("g"))
     val marked = occ
       .withColumn("cnt", count(lit(1)).over(wg))
@@ -876,13 +890,7 @@ object CurationOps {
     val d = docs
       .select(col("doc_id"), toks(col("text")).as("t"))
       .withColumn("nt", size(col("t")).cast("bigint"))
-    val occ = d.filter(col("nt") >= n)
-      .select(col("doc_id"),
-        explode(sequence(lit(0L), col("nt") - n)).as("start"),
-        col("t"))
-      .select(col("doc_id"), col("start"),
-        xxhash64(concat_ws("\u0001",
-          slice(col("t"), (col("start") + 1).cast("int"), lit(n)))).as("g"))
+    val occ = ngramOccurrences(d, n)
     // canonical source per gram: the globally-first occurrence (min
     // struct orders by (doc_id, start) lexicographically); unordered
     // frame = whole partition, so every row of the gram sees it
@@ -992,13 +1000,7 @@ object CurationOps {
     val d = docs
       .select(col("doc_id"), toks(col("text")).as("t"))
       .withColumn("nt", size(col("t")).cast("bigint"))
-    val occ = d.filter(col("nt") >= n)
-      .select(col("doc_id"),
-        explode(sequence(lit(0L), col("nt") - n)).as("start"),
-        col("t"))
-      .select(col("doc_id"), col("start"),
-        xxhash64(concat_ws("\u0001",
-          slice(col("t"), (col("start") + 1).cast("int"), lit(n)))).as("g"))
+    val occ = ngramOccurrences(d, n)
       // the one exchange: both aggregates below cluster on prefixes of
       // (g, doc_id), so they run partition-local on this partitioning
       .repartition(col("g"))
@@ -1297,11 +1299,6 @@ object CurationOps {
       .withColumn("nt", size(col("t")).cast("bigint"))
       .filter(col("nt") >= 1)
       .localCheckpoint(false)
-    def winCol(len: Int) =
-      concat_ws("\u0001", slice(col("t"), (col("start") + 1).cast("int"), lit(len)))
-    def occs(len: Int) = d.filter(col("nt") >= len)
-      .select(col("doc_id"),
-        explode(sequence(lit(0L), col("nt") - len)).as("start"), col("t"))
     // hash probe: the codegen rolling-hash kernel emits ALL window
     // hashes of a doc in O(token bytes + n) — the per-window
     // slice+concat+xxhash64 formulation re-reads len tokens per
@@ -1311,7 +1308,7 @@ object CurationOps {
     // and the walk-down verifies on raw strings.
     def hasDup(len: Int, exact: Boolean): Boolean = {
       val probe =
-        if (exact) occs(len).select(winCol(len).as("g"))
+        if (exact) windowStarts(d, len).select(windowText(len).as("g"))
         else d.filter(col("nt") >= len).select(
           explode(graft.functions.functions.rolling_window_hashes(col("t"), len))
             .as("g"))
@@ -1370,7 +1367,8 @@ object CurationOps {
     // hash collisions only overstate: walk down to the true maximum
     while (lo > 1 && !hasDup(lo, exact = true)) lo -= 1
     val L = lo
-    val sub = occs(L).select(col("doc_id"), col("start"), winCol(L).as("s"))
+    val sub = windowStarts(d, L)
+      .select(col("doc_id"), col("start"), windowText(L).as("s"))
     val winner = broadcast(
       sub.groupBy(col("s")).agg(count(lit(1)).as("c"))
         .filter(col("c") >= 2)
@@ -1721,28 +1719,13 @@ object CurationOps {
        |tt AS (
        |  SELECT DISTINCT doc_id, term FROM (
        |    SELECT doc_id, unnest(t) AS term FROM c2 WHERE p2 = 1)),
-       |sz AS (SELECT doc_id, count(*) AS n FROM tt GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_common
-       |  FROM tt a JOIN tt b ON a.term = b.term AND a.doc_id < b.doc_id
-       |  GROUP BY d1, d2),
-       |pairs AS (
-       |  SELECT d1, d2 FROM inter
-       |  JOIN sz s1 ON s1.doc_id = d1
-       |  JOIN sz s2 ON s2.doc_id = d2
-       |  WHERE n_common / (s1.n + s2.n - n_common) >= 0.7),
-       |edges AS (
-       |  SELECT d1 AS a, d2 AS b FROM pairs
-       |  UNION SELECT d2 AS a, d1 AS b FROM pairs),
-       |reach(v, r) AS (
-       |  SELECT DISTINCT a, a FROM edges
-       |  UNION
-       |  SELECT e.a, re.r FROM edges e JOIN reach re ON re.v = e.b),
-       |comp AS (SELECT v AS doc_id, min(r) AS component FROM reach GROUP BY v),
+       |${TwinSql.overlapSql("tt", "term")},
+       |${TwinSql.jaccPairsSql()},
+       |${TwinSql.componentsSql},
        |f AS (
-       |  SELECT c2.*, comp.component,
-       |    CASE WHEN p2 = 1 AND (comp.component IS NULL
-       |        OR comp.component = c2.doc_id)
+       |  SELECT c2.*, comp.cluster_id,
+       |    CASE WHEN p2 = 1 AND (comp.cluster_id IS NULL
+       |        OR comp.cluster_id = c2.doc_id)
        |      THEN 1 ELSE 0 END AS p3
        |  FROM c2 LEFT JOIN comp ON comp.doc_id = c2.doc_id),
        |g AS (
@@ -2010,17 +1993,7 @@ object CurationOps {
        |  WHERE nt >= 8 AND pr <= 0.2 AND lang IN ('en', 'fr', 'de')),
        |keep AS (SELECT min(doc_id) AS doc_id FROM q GROUP BY text),
        |e AS (SELECT q.* FROM q JOIN keep USING (doc_id)),
-       |s AS (SELECT doc_id, list(h ORDER BY pos) AS mh
-       |      FROM read_parquet('__GRAFT_OUT__/aux_cur_sig32/*.parquet')
-       |      GROUP BY doc_id),
-       |b AS (
-       |  SELECT doc_id, g.b AS band, list_slice(mh, g.b*4 + 1, g.b*4 + 4) AS key
-       |  FROM s CROSS JOIN (SELECT unnest(range(8)) AS b) g),
-       |cand AS (
-       |  SELECT a.doc_id AS d1, c.doc_id AS d2
-       |  FROM b a JOIN b c ON a.band = c.band AND a.key = c.key
-       |    AND a.doc_id < c.doc_id
-       |  GROUP BY d1, d2),
+       |${TwinSql.bandCandidatesSql("aux_cur_sig32")},
        |dup AS (
        |  SELECT DISTINCT d2 AS doc_id
        |  FROM cand

@@ -23,6 +23,7 @@ import graft.functions.functions.simhash64
 object Dedup {
 
   import TextAnalytics.toks
+  import TwinSql.{charPairChainSql, componentsSql, jaccPairChainSql, overlapSql}
 
   private val duckToks = TwinSql.toksSql
 
@@ -56,15 +57,8 @@ object Dedup {
     */
   val q26: QueryDef = QueryDef.sql(
     "q26_jaccard_pairs",
-    s"""WITH t AS (
-       |  SELECT DISTINCT doc_id, term FROM (
-       |    SELECT doc_id, unnest($duckToks) AS term
-       |    FROM documents WHERE doc_id < 100)),
-       |sz AS (SELECT doc_id, count(*) AS n FROM t GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_common
-       |  FROM t a JOIN t b ON a.term = b.term AND a.doc_id < b.doc_id
-       |  GROUP BY d1, d2)
+    s"""WITH ${TwinSql.termSetSql("t", "documents WHERE doc_id < 100")},
+       |${overlapSql("t", "term")}
        |SELECT d1, d2, n_common,
        |  n_common / (s1.n + s2.n - n_common) AS jaccard
        |FROM inter
@@ -76,15 +70,8 @@ object Dedup {
       .filter(col("doc_id") < 100)
       .select(col("doc_id"), explode(toks(col("text"))).as("term"))
       .distinct()
-    val sz = t.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = t.toDF("d1", "term")
-      .join(t.toDF("d2", "term2"), col("term") === col("term2") && col("d1") < col("d2"))
-      .groupBy(col("d1"), col("d2"))
-      .agg(count(lit(1)).as("n_common"))
     val jac = col("n_common") / (col("n1") + col("n2") - col("n_common"))
-    inter
-      .join(sz.toDF("dk1", "n1"), col("dk1") === col("d1"))
-      .join(sz.toDF("dk2", "n2"), col("dk2") === col("d2"))
+    overlapCounts(t)
       .select(col("d1"), col("d2"), col("n_common"), jac.as("jaccard"))
       .filter(jac >= 0.5)
       .orderBy(col("d1"), col("d2"))
@@ -111,11 +98,7 @@ object Dedup {
        |        i -> array_to_string(t[i+1:i+2], ' ')),
        |      s -> s <> '')) AS sh
        |    FROM d)),
-       |sz AS (SELECT doc_id, count(*) AS n FROM t GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_common
-       |  FROM t a JOIN t b ON a.sh = b.sh AND a.doc_id < b.doc_id
-       |  GROUP BY d1, d2)
+       |${overlapSql("t", "sh")}
        |SELECT d1, d2, n_common,
        |  n_common / (s1.n + s2.n - n_common) AS jaccard
        |FROM inter
@@ -127,15 +110,8 @@ object Dedup {
       .filter(col("doc_id") < 100)
       .select(col("doc_id"), explode(shingles(col("text"), 2)).as("sh"))
       .distinct()
-    val sz = t.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = t.toDF("d1", "sh")
-      .join(t.toDF("d2", "sh2"), col("sh") === col("sh2") && col("d1") < col("d2"))
-      .groupBy(col("d1"), col("d2"))
-      .agg(count(lit(1)).as("n_common"))
     val jac = col("n_common") / (col("n1") + col("n2") - col("n_common"))
-    inter
-      .join(sz.toDF("dk1", "n1"), col("dk1") === col("d1"))
-      .join(sz.toDF("dk2", "n2"), col("dk2") === col("d2"))
+    overlapCounts(t)
       .select(col("d1"), col("d2"), col("n_common"), jac.as("jaccard"))
       .filter(jac >= 0.1)
       .orderBy(col("d1"), col("d2"))
@@ -582,10 +558,7 @@ object Dedup {
 
   val q27: QueryDef = QueryDef.sql(
     "q27_minhash_signatures",
-    s"""WITH t AS (
-       |  SELECT DISTINCT doc_id, term FROM (
-       |    SELECT doc_id, unnest($duckToks) AS term
-       |    FROM documents WHERE doc_id < 200)),
+    s"""WITH ${TwinSql.termSetSql("t", "documents WHERE doc_id < 200")},
        |d AS (SELECT doc_id, $duckTid AS tid FROM t),
        |mh AS (
        |  SELECT d.doc_id, g.j,
@@ -607,10 +580,7 @@ object Dedup {
     */
   val q28: QueryDef = QueryDef.sql(
     "q28_lsh_candidates",
-    s"""WITH t AS (
-       |  SELECT DISTINCT doc_id, term FROM (
-       |    SELECT doc_id, unnest($duckToks) AS term
-       |    FROM documents WHERE doc_id < 200)),
+    s"""WITH ${TwinSql.termSetSql("t", "documents WHERE doc_id < 200")},
        |d AS (SELECT doc_id, $duckTid AS tid FROM t),
        |mh AS (
        |  SELECT d.doc_id, g.j,
@@ -645,10 +615,7 @@ object Dedup {
     */
   val q29: QueryDef = QueryDef.sql(
     "q29_simhash_signatures",
-    s"""WITH t AS (
-       |  SELECT DISTINCT doc_id, term FROM (
-       |    SELECT doc_id, unnest($duckToks) AS term
-       |    FROM documents WHERE doc_id < 200)),
+    s"""WITH ${TwinSql.termSetSql("t", "documents WHERE doc_id < 200")},
        |d AS (SELECT doc_id, $duckTid AS tid FROM t),
        |bits AS (
        |  SELECT d.doc_id, g.j,
@@ -715,7 +682,8 @@ object Dedup {
     * one definition of band derivation (slice → xxhash64), shared by
     * [[bandSignatures]] and callers that materialize signatures once
     * and reuse them (q153's calibration audit). The band formula must
-    * never fork from the q45 twin's `list_slice(mh, b*4+1, b*4+4)`.
+    * never fork from the twins' `TwinSql.bandCandidatesSql`
+    * (`list_slice(mh, b*4+1, b*4+4)`).
     */
   def bandsFromSignatures(sig: DataFrame, nHashes: Int = 32,
                           bandSize: Int = 4,
@@ -944,28 +912,8 @@ object Dedup {
        |    CASE WHEN doc_id < 80 AND doc_id % 20 = 0 THEN text || ' v2'
        |         ELSE text END AS text
        |  FROM documents WHERE doc_id < 100),
-       |t AS (
-       |  SELECT DISTINCT doc_id, term FROM (
-       |    SELECT doc_id, unnest($duckToks) AS term FROM md)),
-       |sz AS (SELECT doc_id, count(*) AS n FROM t GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_common
-       |  FROM t a JOIN t b ON a.term = b.term AND a.doc_id < b.doc_id
-       |  GROUP BY d1, d2),
-       |pairs AS (
-       |  SELECT d1, d2 FROM inter
-       |  JOIN sz s1 ON s1.doc_id = d1
-       |  JOIN sz s2 ON s2.doc_id = d2
-       |  WHERE n_common / (s1.n + s2.n - n_common) >= 0.7),
-       |edges AS (
-       |  SELECT d1 AS a, d2 AS b FROM pairs
-       |  UNION ALL
-       |  SELECT d2, d1 FROM pairs),
-       |reach(v, r) AS (
-       |  SELECT DISTINCT a, a FROM edges
-       |  UNION
-       |  SELECT e.a, re.r FROM edges e JOIN reach re ON re.v = e.b),
-       |comp AS (SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v)
+       |${jaccPairChainSql("md")},
+       |$componentsSql
        |SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members,
        |  string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS members
        |FROM comp GROUP BY cluster_id ORDER BY cluster_id""".stripMargin) { (s, dir) =>
@@ -1253,29 +1201,44 @@ object Dedup {
     * Exact all-pairs — bounded audit slices only (q85's reasoning);
     * the corpus-scale routed path is
     * [[scriptRoutedSignatures]]/[[scriptRoutedCandidates]].
+    *
+    * `keys` are per-document columns (q214: a script `tag`) carried to
+    * the rollup, one row per (keys, route), so a mixed-script audit
+    * corpus reports WHICH script each route served. Pairs are charged
+    * to d1's keys (the q207 rule; plants share their original's keys
+    * by construction), and the pair arms still run on the route-wide
+    * doc sets — cross-tag pairs are structurally possible in the char
+    * arm but never materialize for transliterated audit corpora
+    * because the target alphabets are disjoint codepoint sets.
     */
   def routedPairReport(docs: DataFrame, n: Int = 4,
                        cjkDensity: Double = 0.3,
-                       plantedOffset: Long = 100000L): DataFrame = {
+                       plantedOffset: Long = 100000L,
+                       keys: Seq[String] = Nil): DataFrame = {
     val routed = docs
-      .select(col("doc_id"), col("text"), routeCol(cjkDensity).as("route"))
+      .select(col("doc_id") +: keys.map(col) :+ col("text") :+
+        routeCol(cjkDensity).as("route"): _*)
       .localCheckpoint(false) // both pair arms + the doc rollup read it
     def arm(route: String) =
       routed.filter(col("route") === route).select(col("doc_id"), col("text"))
-    val pairs = jaccardPairs(arm("word")).withColumn("route", lit("word"))
+    val armPairs = jaccardPairs(arm("word")).withColumn("route", lit("word"))
       .unionByName(charJaccardPairs(arm("char"), n)
         .withColumn("route", lit("char")))
-    val nd = routed.groupBy(col("route"))
+    val pairs = if (keys.isEmpty) armPairs
+      else armPairs.join(
+        routed.select(col("doc_id").as("d1") +: keys.map(col): _*), Seq("d1"))
+    val by = keys :+ "route"
+    val nd = routed.groupBy(by.map(col): _*)
       .agg(count(lit(1)).cast("bigint").as("n_docs"))
-    val np = pairs.groupBy(col("route"))
+    val np = pairs.groupBy(by.map(col): _*)
       .agg(count(lit(1)).cast("bigint").as("n_pairs"),
         sum(when(col("d2") === col("d1") + plantedOffset, 1L).otherwise(0L))
           .cast("bigint").as("n_planted"))
-    nd.join(np, Seq("route"), "left")
-      .select(col("route"), col("n_docs"),
+    nd.join(np, by, "left")
+      .select(by.map(col) ++ Seq(col("n_docs"),
         coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-        coalesce(col("n_planted"), lit(0L)).as("n_planted"))
-      .orderBy(col("route"))
+        coalesce(col("n_planted"), lit(0L)).as("n_planted")): _*)
+      .orderBy(by.map(col): _*)
   }
 
   /** The 36-char deterministic ASCII -> CJK transliteration the q213
@@ -1369,46 +1332,8 @@ object Dedup {
     routedPairReport(corpus)
   }
 
-  /** [[routedPairReport]] with a per-document script TAG carried to
-    * the rollup — one row per (tag, route) so a mixed-script audit
-    * corpus reports WHICH script each route served (q213 could only
-    * say "the char route recovered N plants"; with three space-free
-    * scripts in one corpus that number no longer localizes a blind
-    * spot). Pairs are charged to d1's tag (the q207 rule; plants are
-    * same-tag by construction), and the pair arms still run on the
-    * route-wide doc sets — cross-tag pairs are structurally possible
-    * in the char arm but never materialize for transliterated audit
-    * corpora because the target alphabets are disjoint codepoint
-    * sets.
-    */
-  def routedPairReportBy(docs: DataFrame, n: Int = 4,
-                         cjkDensity: Double = 0.3,
-                         plantedOffset: Long = 100000L): DataFrame = {
-    val routed = docs
-      .select(col("doc_id"), col("tag"), col("text"),
-        routeCol(cjkDensity).as("route"))
-      .localCheckpoint(false) // both pair arms + the doc rollup read it
-    def arm(route: String) =
-      routed.filter(col("route") === route).select(col("doc_id"), col("text"))
-    val pairs = jaccardPairs(arm("word")).withColumn("route", lit("word"))
-      .unionByName(charJaccardPairs(arm("char"), n)
-        .withColumn("route", lit("char")))
-      .join(routed.select(col("doc_id").as("d1"), col("tag")), Seq("d1"))
-    val nd = routed.groupBy(col("tag"), col("route"))
-      .agg(count(lit(1)).cast("bigint").as("n_docs"))
-    val np = pairs.groupBy(col("tag"), col("route"))
-      .agg(count(lit(1)).cast("bigint").as("n_pairs"),
-        sum(when(col("d2") === col("d1") + plantedOffset, 1L).otherwise(0L))
-          .cast("bigint").as("n_planted"))
-    nd.join(np, Seq("tag", "route"), "left")
-      .select(col("tag"), col("route"), col("n_docs"),
-        coalesce(col("n_pairs"), lit(0L)).as("n_pairs"),
-        coalesce(col("n_planted"), lit(0L)).as("n_planted"))
-      .orderBy(col("tag"), col("route"))
-  }
-
-  /** q214: [[routedPairReportBy]] over a FOUR-SCRIPT audit corpus —
-    * the q213 proof extended to the scripts the widened
+  /** q214: [[routedPairReport]] by script tag over a FOUR-SCRIPT
+    * audit corpus — the q213 proof extended to the scripts the widened
     * [[SpaceFreeClass]] router newly serves: the en slice raw
     * (spaced ASCII), and the de/fr/zh slices space-free and
     * transliterated into Thai ([[Thai36]]), hiragana ([[Kana36]]),
@@ -1492,7 +1417,7 @@ object Dedup {
             expr("substring(text, 1, greatest(length(text) - 10, 1))")
               .as("text")))
       .localCheckpoint(false)
-    routedPairReportBy(corpus)
+    routedPairReport(corpus, keys = Seq("tag"))
   }
 
   /** Exact codepoint-n-gram Jaccard pairs at `threshold` — the
@@ -1502,22 +1427,13 @@ object Dedup {
     * at scale; exact all-pairs only on bounded slices (q211).
     */
   def charJaccardPairs(docs: DataFrame, n: Int = 4,
-                       threshold: Double = 0.7): DataFrame = {
-    val t = docs
-      .select(col("doc_id"), explode(charShingles(col("text"), n)).as("gram"))
-      .distinct()
-    val sz = t.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    t.toDF("d1", "gram")
-      .join(t.toDF("d2", "gram2"),
-        col("gram") === col("gram2") && col("d1") < col("d2"))
-      .groupBy(col("d1"), col("d2"))
-      .agg(count(lit(1)).as("n_common"))
-      .join(sz.toDF("dk1", "n1"), col("dk1") === col("d1"))
-      .join(sz.toDF("dk2", "n2"), col("dk2") === col("d2"))
+                       threshold: Double = 0.7): DataFrame =
+    overlapCounts(docs
+        .select(col("doc_id"), explode(charShingles(col("text"), n)).as("gram"))
+        .distinct())
       .filter(col("n_common") /
         (col("n1") + col("n2") - col("n_common")) >= threshold)
       .select(col("d1"), col("d2"))
-  }
 
   /** SimHash near-dup pairs via the codegen'd simhash64 expression over
     * xxhash64 term ids; pairs within `maxHamming` bits.
@@ -1676,10 +1592,14 @@ object Dedup {
     * same doubling trick as the classic MR large-star/small-star
     * algorithm. A 20-hop chain resolves in ~5 rounds.
     *
-    * Scale: each round is one join against the (pre-shuffled, cached)
-    * symmetric edge list + one label self-join + a min-aggregate — all
-    * hash-partitioned on vertex id. Label frames are localCheckpoint'd
-    * per round to truncate the growing plan lineage.
+    * Scale: each round is one join against the cached symmetric edge
+    * list + one label self-join + a min-aggregate. Label frames are
+    * localCheckpoint'd per round to truncate the growing plan lineage.
+    * The checkpoints keep no partitioning: their scans report
+    * UnknownPartitioning(0), so with broadcast joins off every round
+    * exchanges the label side on vertex id again (seen in the plan of
+    * the distributed path, localEdgeLimit = 0). ROADMAP item 4 tracks
+    * a checkpoint that states its partitioning.
     *
     * Small edge lists skip the loop entirely: the materialized edges
     * are union-found on the driver (O(E α(E)), path compression) and
@@ -1844,35 +1764,36 @@ object Dedup {
     spk.createDataFrame(rows, schema)
   }
 
-  /** Verified token-set Jaccard pairs at `threshold` — THE single
-    * definition of the exact pair chain (distinct (doc, term), size
-    * table, term self-join, Jaccard filter) consumed by q85, q135,
-    * the q155 leakage-safe split, and the q162 impact report; a
-    * second copy could silently drift the cluster definition between
-    * the dedup run and the reports about it. At corpus scale the
-    * candidate step is [[minhashCandidates]]; this exact form is the
-    * verifier that runs on candidates (and on bounded slices here).
+  /** The exact set-overlap chain over a DISTINCT (doc_id, unit) frame
+    * — the unit column keeps its name: the size table, the unit
+    * self-join over d1 < d2, and the per-pair intersection count joined
+    * to both sizes, as (d1, d2, n_common, dk1, n1, dk2, n2). ONE
+    * definition under the token, shingle and char-gram Jaccard and
+    * containment verifiers; the twin face is TwinSql.overlapSql.
     */
+  private[ops] def overlapCounts(units: DataFrame): DataFrame = {
+    val u = units.columns(1)
+    val sz = units.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
+    units.toDF("d1", u)
+      .join(units.toDF("d2", u + "2"), col(u) === col(u + "2") && col("d1") < col("d2"))
+      .groupBy(col("d1"), col("d2"))
+      .agg(count(lit(1)).as("n_common"))
+      .join(sz.toDF("dk1", "n1"), col("dk1") === col("d1"))
+      .join(sz.toDF("dk2", "n2"), col("dk2") === col("d2"))
+  }
+
   /** The integer core of [[jaccardPairs]]: every co-occurring pair
     * with its EXACT intersection and union sizes (d1, d2, n_common,
     * uni) — no threshold, no division. Consumed by jaccardPairs (the
     * shipped 0.7 double-compare gate) and the q195 threshold sweep
     * (whose cuts are the exact rational 10·n_common ≥ k·uni).
     */
-  private[ops] def jaccardScoredPairs(docs: DataFrame): DataFrame = {
-    val t = docs
-      .select(col("doc_id"), explode(toks(col("text"))).as("term"))
-      .distinct()
-    val sz = t.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    t.toDF("d1", "term")
-      .join(t.toDF("d2", "term2"), col("term") === col("term2") && col("d1") < col("d2"))
-      .groupBy(col("d1"), col("d2"))
-      .agg(count(lit(1)).as("n_common"))
-      .join(sz.toDF("dk1", "n1"), col("dk1") === col("d1"))
-      .join(sz.toDF("dk2", "n2"), col("dk2") === col("d2"))
+  private[ops] def jaccardScoredPairs(docs: DataFrame): DataFrame =
+    overlapCounts(docs
+        .select(col("doc_id"), explode(toks(col("text"))).as("term"))
+        .distinct())
       .select(col("d1"), col("d2"), col("n_common"),
         (col("n1") + col("n2") - col("n_common")).as("uni"))
-  }
 
   /** Exact-Jaccard pairs of [[jaccardPairs]] RESTRICTED to pairs with
     * at least one endpoint in `ids` — computed delta-sided, never as
@@ -1911,6 +1832,15 @@ object Dedup {
       .select(col("d1"), col("d2"))
   }
 
+  /** Verified token-set Jaccard pairs at `threshold` — THE single
+    * definition of the exact pair chain (distinct (doc, term), size
+    * table, term self-join, Jaccard filter) consumed by q85, q135,
+    * the q155 leakage-safe split, and the q162 impact report; a
+    * second copy could silently drift the cluster definition between
+    * the dedup run and the reports about it. At corpus scale the
+    * candidate step is [[minhashCandidates]]; this exact form is the
+    * verifier that runs on candidates (and on bounded slices here).
+    */
   def jaccardPairs(docs: DataFrame, threshold: Double = 0.7): DataFrame =
     jaccardScoredPairs(docs)
       .filter(col("n_common") / col("uni") >= threshold)
@@ -1927,14 +1857,7 @@ object Dedup {
   val q85: QueryDef = QueryDef.sql(
     "q85_dedup_clusters",
     s"""WITH RECURSIVE ${jaccPairChainSql("documents WHERE doc_id < 100")},
-       |edges AS (
-       |  SELECT d1 AS a, d2 AS b FROM pairs
-       |  UNION SELECT d2 AS a, d1 AS b FROM pairs),
-       |reach(v, r) AS (
-       |  SELECT DISTINCT a, a FROM edges
-       |  UNION
-       |  SELECT e.a, re.r FROM edges e JOIN reach re ON re.v = e.b),
-       |comp AS (SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v)
+       |$componentsSql
        |SELECT cluster_id, CAST(count(*) AS BIGINT) AS n_members,
        |  string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS members
        |FROM comp GROUP BY cluster_id ORDER BY cluster_id""".stripMargin) { (s, dir) =>
@@ -2041,15 +1964,8 @@ object Dedup {
       }.mkString(",\n")
       val unions = sweepTenths.map(k => s"SELECT * FROM row$k")
         .mkString("\nUNION ALL ")
-      s"""WITH RECURSIVE t AS (
-         |  SELECT DISTINCT doc_id, term FROM (
-         |    SELECT doc_id, unnest($duckToks) AS term
-         |    FROM documents WHERE doc_id < 100)),
-         |sz AS (SELECT doc_id, count(*) AS n FROM t GROUP BY doc_id),
-         |inter AS (
-         |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_common
-         |  FROM t a JOIN t b ON a.term = b.term AND a.doc_id < b.doc_id
-         |  GROUP BY d1, d2),
+      s"""WITH RECURSIVE ${TwinSql.termSetSql("t", "documents WHERE doc_id < 100")},
+         |${overlapSql("t", "term")},
          |sc AS (
          |  SELECT d1, d2, n_common, s1.n + s2.n - n_common AS uni
          |  FROM inter
@@ -2083,14 +1999,7 @@ object Dedup {
   val q135: QueryDef = QueryDef.sql(
     "q135_cluster_representative",
     s"""WITH RECURSIVE ${jaccPairChainSql("documents WHERE doc_id < 100")},
-       |edges AS (
-       |  SELECT d1 AS a, d2 AS b FROM pairs
-       |  UNION SELECT d2 AS a, d1 AS b FROM pairs),
-       |reach(v, r) AS (
-       |  SELECT DISTINCT a, a FROM edges
-       |  UNION
-       |  SELECT e.a, re.r FROM edges e JOIN reach re ON re.v = e.b),
-       |comp AS (SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v),
+       |$componentsSql,
        |q AS (
        |  SELECT doc_id,
        |    ${TwinSql.qscore("punct_ratio", "digit_ratio", "n_tokens", "stop_ratio")} AS qscore
@@ -2183,14 +2092,7 @@ object Dedup {
   val q162: QueryDef = QueryDef.sql(
     "q162_dedup_impact",
     s"""WITH RECURSIVE ${jaccPairChainSql("documents WHERE doc_id < 100")},
-       |edges AS (
-       |  SELECT d1 AS a, d2 AS b FROM pairs
-       |  UNION SELECT d2 AS a, d1 AS b FROM pairs),
-       |reach(v, r) AS (
-       |  SELECT DISTINCT a, a FROM edges
-       |  UNION
-       |  SELECT e.a, re.r FROM edges e JOIN reach re ON re.v = e.b),
-       |comp AS (SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v),
+       |$componentsSql,
        |b AS (
        |  SELECT doc_id, source, CAST(len($duckToks) AS BIGINT) AS nt
        |  FROM documents WHERE doc_id < 100),
@@ -2217,29 +2119,6 @@ object Dedup {
     dedupImpact(Tables.documents(s, dir).filter(col("doc_id") < 100))
       .orderBy(col("source"))
   }
-
-  /** The exact-Jaccard-0.7 pair chain in twin SQL (t → sz → inter →
-    * pairs), parameterized by the doc relation and a CTE-name suffix —
-    * ONE generator shared by the q85/q162 cluster oracles and BOTH
-    * arms of the q207 raw-vs-normalized comparison (a drifted copy of
-    * the threshold or the distinct-token sets in any of them would
-    * verify different pairs than the engine strikes).
-    */
-  private def jaccPairChainSql(from: String, sfx: String = ""): String =
-    s"""t$sfx AS (
-       |  SELECT DISTINCT doc_id, term FROM (
-       |    SELECT doc_id, unnest(${TwinSql.toksOf("text")}) AS term
-       |    FROM $from)),
-       |sz$sfx AS (SELECT doc_id, count(*) AS n FROM t$sfx GROUP BY doc_id),
-       |inter$sfx AS (
-       |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_common
-       |  FROM t$sfx a JOIN t$sfx b ON a.term = b.term AND a.doc_id < b.doc_id
-       |  GROUP BY d1, d2),
-       |pairs$sfx AS (
-       |  SELECT d1, d2 FROM inter$sfx
-       |  JOIN sz$sfx s1 ON s1.doc_id = d1
-       |  JOIN sz$sfx s2 ON s2.doc_id = d2
-       |  WHERE n_common / (s1.n + s2.n - n_common) >= 0.7)""".stripMargin
 
   /** The q207 pre-shingle normalization transform — THE one
     * definition of "fold the text column" ([[graft.text.Fold]] via
@@ -2382,43 +2261,6 @@ object Dedup {
       .orderBy(col("source"))
   }
 
-  /** The exact codepoint-n-gram Jaccard pair chain in twin SQL — the
-    * char-level [[jaccPairChainSql]] (same distinct/size/inter/pairs
-    * shape over substring grams; DuckDB's substring and length count
-    * characters, matching the engine's codepoint semantics). Shared
-    * by both arms a char-gram oracle needs; the gram <> '' filter is
-    * the engine column's empty-gram drop (only empty text produces
-    * one).
-    */
-  /** The distinct codepoint-n-gram CTE in twin SQL — ONE definition of
-    * the gram derivation (substring windows, min-1-window bound,
-    * empty-gram drop) consumed by [[charPairChainSql]] (q211's arms)
-    * AND q212's exact-intersection side: a drifted copy would have
-    * the two char oracles re-deriving DIFFERENT gram sets from the
-    * same corpus.
-    */
-  private[ops] def charGramCteSql(from: String, name: String, n: Int): String =
-    s"""$name AS (
-       |  SELECT DISTINCT doc_id, gram FROM (
-       |    SELECT doc_id, substring(text, i + 1, $n) AS gram FROM (
-       |      SELECT doc_id, text,
-       |        unnest(range(0, greatest(length(text) - $n, 0) + 1)) AS i
-       |      FROM $from))
-       |  WHERE gram <> '')""".stripMargin
-
-  private def charPairChainSql(from: String, sfx: String, n: Int): String =
-    s"""${charGramCteSql(from, s"t$sfx", n)},
-       |sz$sfx AS (SELECT doc_id, count(*) AS n FROM t$sfx GROUP BY doc_id),
-       |inter$sfx AS (
-       |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_common
-       |  FROM t$sfx a JOIN t$sfx b ON a.gram = b.gram AND a.doc_id < b.doc_id
-       |  GROUP BY d1, d2),
-       |pairs$sfx AS (
-       |  SELECT d1, d2 FROM inter$sfx
-       |  JOIN sz$sfx s1 ON s1.doc_id = d1
-       |  JOIN sz$sfx s2 ON s2.doc_id = d2
-       |  WHERE n_common / (s1.n + s2.n - n_common) >= 0.7)""".stripMargin
-
   /** q211: [[charShingleImpact]] over a SPACE-FREE corpus — the zh
     * slice (doc_id < 400) with whitespace removed, standing in for
     * the CJK/Thai documents a multilingual 100 TB corpus carries
@@ -2531,11 +2373,7 @@ object Dedup {
        |  SELECT DISTINCT doc_id, array_to_string(t[i + 1 : i + 3], ' ') AS sh
        |  FROM (SELECT doc_id, t,
        |          unnest(range(0, greatest(n - 3, 0) + 1)) AS i FROM dd)),
-       |sz AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_common
-       |  FROM sh a JOIN sh b ON a.sh = b.sh AND a.doc_id < b.doc_id
-       |  GROUP BY d1, d2)
+       |${overlapSql("sh", "sh")}
        |SELECT d1, d2, CAST(n_common AS BIGINT) AS n_common,
        |  CAST(n_common AS DOUBLE) / CAST(s1.n AS DOUBLE) AS containment_1,
        |  CAST(n_common AS DOUBLE) / CAST(s2.n AS DOUBLE) AS containment_2
@@ -2555,16 +2393,9 @@ object Dedup {
     val sh = docs
       .select(col("doc_id"), explode(array_distinct(shingles(col("text"), n)))
         .as("sh"))
-    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val inter = sh.toDF("d1", "sh")
-      .join(sh.toDF("d2", "sh2"), col("sh") === col("sh2") && col("d1") < col("d2"))
-      .groupBy(col("d1"), col("d2"))
-      .agg(count(lit(1)).as("n_common"))
     val c1 = col("n_common").cast("double") / col("n1").cast("double")
     val c2 = col("n_common").cast("double") / col("n2").cast("double")
-    inter
-      .join(sz.toDF("dk1", "n1"), col("dk1") === col("d1"))
-      .join(sz.toDF("dk2", "n2"), col("dk2") === col("d2"))
+    overlapCounts(sh)
       .filter(c1 >= threshold || c2 >= threshold)
       .select(col("d1"), col("d2"), col("n_common").cast("bigint").as("n_common"),
         c1.as("containment_1"), c2.as("containment_2"))

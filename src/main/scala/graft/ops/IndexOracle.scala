@@ -89,9 +89,9 @@ object IndexOracle {
     */
   val q115: QueryDef = QueryDef.sql(
     "q115_bm25_retrieval",
-    """WITH tk AS (
+    s"""WITH tk AS (
       |  SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(text, '[ \t\n\x0B\f\r]+'), x -> x <> '')) AS term
+      |    unnest(${TwinSql.toksSql}) AS term
       |  FROM documents),
       |n AS (SELECT count(*) AS n FROM documents),
       |top8 AS (
@@ -100,26 +100,10 @@ object IndexOracle {
       |qs AS (SELECT CAST(r // 2 AS BIGINT) AS qid, term FROM top8),
       |tf AS (SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf
       |       FROM tk GROUP BY term, doc_id),
-      |tfdl AS (SELECT term, doc_id, tf,
-      |         CAST(sum(tf) OVER (PARTITION BY doc_id) AS BIGINT) AS dl
-      |         FROM tf),
       |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
       |       FROM tk GROUP BY term),
-      |idf AS (
-      |  SELECT term,
-      |    round(ln((CAST(n.n AS DOUBLE) - CAST(df AS DOUBLE) + 0.5)
-      |      / (CAST(df AS DOUBLE) + 0.5) + 1.0), 9) AS idf
-      |  FROM df CROSS JOIN n),
-      |ad AS (
-      |  SELECT CAST(sum(dl0) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
-      |  FROM (SELECT doc_id, count(*) AS dl0 FROM tk GROUP BY doc_id)),
-      |w AS (
-      |  SELECT tfdl.term, tfdl.doc_id,
-      |    idf.idf * (CAST(tf AS DOUBLE) * 2.2
-      |      / (CAST(tf AS DOUBLE)
-      |         + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))) AS w
-      |  FROM tfdl JOIN idf USING (term) CROSS JOIN ad),
-      |m AS (SELECT qs.qid, w.doc_id, w.term, w.w FROM w JOIN qs USING (term)),
+      |${TwinSql.bm25StatsSql},
+      |${TwinSql.bm25WeightSql("", 1.2, 0.75)},
       |agg AS (
       |  SELECT qid, doc_id,
       |    list_sum(list(w ORDER BY term)) AS score,

@@ -52,17 +52,9 @@ object NonOracle {
     */
   val q45 = QueryDef.sql(
     "q45_minhash_lsh_prod",
-    """WITH s AS (
-      |  SELECT doc_id, list(h ORDER BY pos) AS mh
-      |  FROM read_parquet('__GRAFT_OUT__/aux_minhash_sig32/*.parquet')
-      |  GROUP BY doc_id),
-      |b AS (
-      |  SELECT doc_id, g.b AS band, list_slice(mh, g.b*4 + 1, g.b*4 + 4) AS key
-      |  FROM s CROSS JOIN (SELECT unnest(range(8)) AS b) g)
-      |SELECT a.doc_id AS d1, c.doc_id AS d2
-      |FROM b a JOIN b c ON a.band = c.band AND a.key = c.key AND a.doc_id < c.doc_id
-      |GROUP BY d1, d2
-      |ORDER BY d1, d2""".stripMargin) { (s, dir) =>
+    s"""WITH ${TwinSql.bandCandidatesSql("aux_minhash_sig32")}
+       |SELECT d1, d2 FROM cand
+       |ORDER BY d1, d2""".stripMargin) { (s, dir) =>
     Dedup.minhashCandidates(Tables.documents(s, dir).filter(col("doc_id") < 500))
       .orderBy(col("d1"), col("d2"))
   }
@@ -90,27 +82,12 @@ object NonOracle {
     */
   val q153 = QueryDef.sql(
     "q153_minhash_calibration",
-    """WITH s AS (
-       |  SELECT doc_id, list(h ORDER BY pos) AS mh
-       |  FROM read_parquet('__GRAFT_OUT__/aux_minhash_sig32/*.parquet')
-       |  GROUP BY doc_id),
-       |b AS (
-       |  SELECT doc_id, g.b AS band, list_slice(mh, g.b*4 + 1, g.b*4 + 4) AS key
-       |  FROM s CROSS JOIN (SELECT unnest(range(8)) AS b) g),
-       |cand AS (
-       |  SELECT a.doc_id AS d1, c.doc_id AS d2
-       |  FROM b a JOIN b c ON a.band = c.band AND a.key = c.key AND a.doc_id < c.doc_id
-       |  GROUP BY d1, d2),
-       |m AS (
-       |  SELECT cand.d1, cand.d2,
-       |    CAST(len(list_filter(range(1, 33), i -> s1.mh[i] = s2.mh[i])) AS BIGINT)
-       |      AS n_match
-       |  FROM cand JOIN s s1 ON s1.doc_id = cand.d1
-       |            JOIN s s2 ON s2.doc_id = cand.d2),
+    s"""WITH ${TwinSql.bandCandidatesSql("aux_minhash_sig32")},
+       |${TwinSql.slotMatchSql},
        |d AS (
        |  SELECT doc_id, t, len(t) AS n
        |  FROM (SELECT doc_id,
-       |          list_filter(string_split_regex(text, '[ \t\n\x0B\f\r]+'), x -> x <> '') AS t
+       |          ${TwinSql.toksOf("text")} AS t
        |        FROM documents WHERE doc_id < 500)
        |  WHERE len(t) > 0),
        |sh AS (
@@ -229,26 +206,10 @@ object NonOracle {
     */
   val q212 = QueryDef.sql(
     "q212_char_minhash_calibration",
-    s"""WITH s AS (
-       |  SELECT doc_id, list(h ORDER BY pos) AS mh
-       |  FROM read_parquet('__GRAFT_OUT__/aux_char_sig32/*.parquet')
-       |  GROUP BY doc_id),
-       |b AS (
-       |  SELECT doc_id, g.b AS band, list_slice(mh, g.b*4 + 1, g.b*4 + 4) AS key
-       |  FROM s CROSS JOIN (SELECT unnest(range(8)) AS b) g),
-       |cand AS (
-       |  SELECT a.doc_id AS d1, c2.doc_id AS d2
-       |  FROM b a JOIN b c2 ON a.band = c2.band AND a.key = c2.key
-       |    AND a.doc_id < c2.doc_id
-       |  GROUP BY d1, d2),
-       |m AS (
-       |  SELECT cand.d1, cand.d2,
-       |    CAST(len(list_filter(range(1, 33), i -> s1.mh[i] = s2.mh[i])) AS BIGINT)
-       |      AS n_match
-       |  FROM cand JOIN s s1 ON s1.doc_id = cand.d1
-       |            JOIN s s2 ON s2.doc_id = cand.d2),
+    s"""WITH ${TwinSql.bandCandidatesSql("aux_char_sig32")},
+       |${TwinSql.slotMatchSql},
        |${graft.ops.Dedup.spaceFreeZhCorpusSql},
-       |${graft.ops.Dedup.charGramCteSql("c", "sh", 4)},
+       |${TwinSql.charGramCteSql("c", "sh", 4)},
        |cnt AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS c FROM sh GROUP BY doc_id),
        |iv AS (
        |  SELECT m2.d1, m2.d2, CAST(count(*) AS BIGINT) AS inter
@@ -390,11 +351,7 @@ object NonOracle {
        |    ${TwinSql.cosZ("qe.embedding", "ce.embedding")} AS score
        |  FROM cand JOIN e qe ON cand.qid = qe.vec_id
        |            JOIN e ce ON cand.cid = ce.vec_id)
-       |SELECT qid, cid, score, rnk FROM (
-       |  SELECT qid, cid, score,
-       |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk
-       |  FROM s)
-       |WHERE rnk <= 3 ORDER BY qid, rnk""".stripMargin) { (s, dir) =>
+       |${TwinSql.topKSql("s", 3)}""".stripMargin) { (s, dir) =>
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     Similarity.lshKnn(s, emb, emb.filter(col("vec_id") < 10), k = 3, nPlanes = 6)
@@ -503,11 +460,7 @@ object NonOracle {
        |    ${TwinSql.cosZ("qe.embedding", "ce.embedding")} AS score
        |  FROM cand JOIN e qe ON cand.qid = qe.vec_id
        |            JOIN e ce ON cand.cid = ce.vec_id)
-       |SELECT qid, cid, score, rnk FROM (
-       |  SELECT qid, cid, score,
-       |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk
-       |  FROM s)
-       |WHERE rnk <= 3 ORDER BY qid, rnk""".stripMargin) { (s, dir) =>
+       |${TwinSql.topKSql("s", 3)}""".stripMargin) { (s, dir) =>
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     Similarity.ivfKnn(s, emb, emb.filter(col("vec_id") < 10), k = 3,
@@ -615,11 +568,7 @@ object NonOracle {
        |    ${TwinSql.cosZ("qe.v", "ce.v")} AS score
        |  FROM short JOIN e qe ON short.qid = qe.vec_id
        |             JOIN e ce ON short.cid = ce.vec_id)
-       |SELECT qid, cid, score, rnk FROM (
-       |  SELECT qid, cid, score,
-       |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk
-       |  FROM s)
-       |WHERE rnk <= 3 ORDER BY qid, rnk""".stripMargin) { (s, dir) =>
+       |${TwinSql.topKSql("s", 3)}""".stripMargin) { (s, dir) =>
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     Pq.ivfPqKnn(s, emb, emb.filter(col("vec_id") < 10), k = 3,
@@ -986,23 +935,8 @@ object NonOracle {
 
   val q173 = QueryDef.sql(
     "q173_syndication_matrix",
-    """WITH s AS (
-      |  SELECT doc_id, list(h ORDER BY pos) AS mh
-      |  FROM read_parquet('__GRAFT_OUT__/aux_minhash_sig32/*.parquet')
-      |  GROUP BY doc_id),
-      |b AS (
-      |  SELECT doc_id, g.b AS band, list_slice(mh, g.b*4 + 1, g.b*4 + 4) AS key
-      |  FROM s CROSS JOIN (SELECT unnest(range(8)) AS b) g),
-      |cand AS (
-      |  SELECT a.doc_id AS d1, c.doc_id AS d2
-      |  FROM b a JOIN b c ON a.band = c.band AND a.key = c.key AND a.doc_id < c.doc_id
-      |  GROUP BY d1, d2),
-      |m AS (
-      |  SELECT cand.d1, cand.d2,
-      |    CAST(len(list_filter(range(1, 33), i -> s1.mh[i] = s2.mh[i])) AS BIGINT)
-      |      AS n_match
-      |  FROM cand JOIN s s1 ON s1.doc_id = cand.d1
-      |            JOIN s s2 ON s2.doc_id = cand.d2),
+    s"""WITH ${TwinSql.bandCandidatesSql("aux_minhash_sig32")},
+      |${TwinSql.slotMatchSql},
       |p AS (SELECT d1, d2 FROM m WHERE CAST(n_match AS DOUBLE) / 32.0 >= 0.7),
       |ps AS (
       |  SELECT least(da.source, dc.source) AS s1,
@@ -1042,11 +976,7 @@ object NonOracle {
        |  SELECT qid, e.vec_id AS cid,
        |    ${TwinSql.cosZ("qv", "v")} AS score
        |  FROM q CROSS JOIN e WHERE qid <> e.vec_id)
-       |SELECT qid, cid, score, rnk FROM (
-       |  SELECT qid, cid, score,
-       |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk
-       |  FROM s)
-       |WHERE rnk <= 3 ORDER BY qid, rnk""".stripMargin) { (s, dir) =>
+       |${TwinSql.topKSql("s", 3)}""".stripMargin) { (s, dir) =>
     val emb = Multimodal.embedStub(s,
       Multimodal.attachMedia(Tables.documents(s, dir)))
       .toDF("vec_id", "v")
@@ -1269,55 +1199,9 @@ object NonOracle {
 
   val q188 = QueryDef.sql(
     "q188_hybrid_rrf_retrieval",
-    s"""WITH tk AS (
-       |  SELECT doc_id,
-       |    unnest(${TwinSql.toksSql}) AS term
-       |  FROM documents),
-       |n AS (SELECT count(*) AS n FROM documents),
-       |tf AS (SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf
-       |       FROM tk GROUP BY term, doc_id),
-       |qs AS (
-       |  SELECT qid, term FROM (
-       |    SELECT doc_id AS qid, term,
-       |      row_number() OVER (PARTITION BY doc_id ORDER BY tf DESC, term) AS r
-       |    FROM tf WHERE doc_id < $EvalNQ)
-       |  WHERE r <= $EvalNTerms),
-       |tfdl AS (SELECT term, doc_id, tf,
-       |         CAST(sum(tf) OVER (PARTITION BY doc_id) AS BIGINT) AS dl
-       |         FROM tf),
-       |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-       |       FROM tk GROUP BY term),
-       |idf AS (
-       |  SELECT term,
-       |    round(ln((CAST(n.n AS DOUBLE) - CAST(df AS DOUBLE) + 0.5)
-       |      / (CAST(df AS DOUBLE) + 0.5) + 1.0), 9) AS idf
-       |  FROM df CROSS JOIN n),
-       |ad AS (
-       |  SELECT CAST(sum(dl0) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
-       |  FROM (SELECT doc_id, count(*) AS dl0 FROM tk GROUP BY doc_id)),
-       |w AS (
-       |  SELECT tfdl.term, tfdl.doc_id,
-       |    idf.idf * (CAST(tf AS DOUBLE) * 2.2
-       |      / (CAST(tf AS DOUBLE)
-       |         + 1.2 * (0.25 + 0.75 * CAST(dl AS DOUBLE) / avgdl))) AS w
-       |  FROM tfdl JOIN idf USING (term) CROSS JOIN ad),
-       |m AS (SELECT qs.qid, w.doc_id, w.term, w.w FROM w JOIN qs USING (term)),
-       |agg AS (
-       |  SELECT qid, doc_id,
-       |    list_sum(list(w ORDER BY term)) AS score
-       |  FROM m GROUP BY qid, doc_id),
-       |scut AS (
-       |  SELECT qid, doc_id, score FROM (
-       |    SELECT qid, doc_id, score,
-       |      row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS r0
-       |    FROM agg)
-       |  WHERE r0 <= ${EvalK + 1}),
-       |sarm AS (
-       |  SELECT qid, cid, rs FROM (
-       |    SELECT qid, doc_id AS cid,
-       |      row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rs
-       |    FROM scut WHERE doc_id <> qid)
-       |  WHERE rs <= $EvalK),
+    s"""WITH ${evalHeadSql(EvalNQ)},
+       |${TwinSql.bm25StatsSql},
+       |${TwinSql.bm25ArmSql("bm25", "", 1.2, 0.75, EvalK)},
        |e AS (
        |  SELECT vec_id, list(x ORDER BY pos) AS v
        |  FROM read_parquet('__GRAFT_OUT__/aux_mm_embed/*.parquet')
@@ -1335,10 +1219,10 @@ object NonOracle {
        |  WHERE rd <= $EvalK),
        |fu AS (
        |  SELECT COALESCE(s.qid, d.qid) AS qid, COALESCE(s.cid, d.cid) AS cid,
-       |    s.rs, d.rd,
-       |    COALESCE(1.0 / (60.0 + CAST(s.rs AS DOUBLE)), 0.0)
+       |    s.rk AS rs, d.rd,
+       |    COALESCE(1.0 / (60.0 + CAST(s.rk AS DOUBLE)), 0.0)
        |      + COALESCE(1.0 / (60.0 + CAST(d.rd AS DOUBLE)), 0.0) AS rrf
-       |  FROM sarm s FULL OUTER JOIN darm d
+       |  FROM arm s FULL OUTER JOIN darm d
        |    ON s.qid = d.qid AND s.cid = d.cid)
        |SELECT qid, cid, rs, rd, rrf, rnk FROM (
        |  SELECT qid, cid, rs, rd, rrf,
@@ -1404,23 +1288,8 @@ object NonOracle {
 
   val q196 = QueryDef.sql(
     "q196_crossmodal_consistency",
-    """WITH s AS (
-      |  SELECT doc_id, list(h ORDER BY pos) AS mh
-      |  FROM read_parquet('__GRAFT_OUT__/aux_minhash_sig32/*.parquet')
-      |  GROUP BY doc_id),
-      |b AS (
-      |  SELECT doc_id, g.b AS band, list_slice(mh, g.b*4 + 1, g.b*4 + 4) AS key
-      |  FROM s CROSS JOIN (SELECT unnest(range(8)) AS b) g),
-      |cand AS (
-      |  SELECT a.doc_id AS d1, c.doc_id AS d2
-      |  FROM b a JOIN b c ON a.band = c.band AND a.key = c.key AND a.doc_id < c.doc_id
-      |  GROUP BY d1, d2),
-      |m AS (
-      |  SELECT cand.d1, cand.d2,
-      |    CAST(len(list_filter(range(1, 33), i -> s1.mh[i] = s2.mh[i])) AS BIGINT)
-      |      AS n_match
-      |  FROM cand JOIN s s1 ON s1.doc_id = cand.d1
-      |            JOIN s s2 ON s2.doc_id = cand.d2),
+    s"""WITH ${TwinSql.bandCandidatesSql("aux_minhash_sig32")},
+      |${TwinSql.slotMatchSql},
       |tp AS (SELECT d1, d2 FROM m WHERE CAST(n_match AS DOUBLE) / 32.0 >= 0.7),
       |ph AS (
       |  SELECT doc_id, sig
@@ -1637,14 +1506,11 @@ object NonOracle {
           .otherwise(lit(0.0)).as("ndcg"))
   }
 
-  /** q200/q206 shared twin fragments — the corpus/query head, the
-    * BM25 sufficient statistics, the parameterized BM25 scoring arm,
-    * and the relevance+metrics tail. Extracted so the q206 sweep's
-    * twin is the SAME chain at other (k1, b) points, not a copy that
-    * could drift (the knChainSql argument). `bm25ArmSql` interpolates
-    * the driver-folded doubles (k1+1, 1-b) exactly as the Scala side
-    * folds them — Double.toString round-trips, so both engines embed
-    * the identical literal.
+  /** q188/q200/q206 shared twin fragments — the corpus/query head
+    * and the relevance+metrics tail, around TwinSql's BM25 statistics
+    * and scoring arm. Extracted so the q206 sweep's twin is the SAME
+    * chain at other (k1, b) points, not a copy that could drift (the
+    * knChainSql argument).
     */
   private def evalHeadSql(nQ: Int): String =
     s"""tk AS (
@@ -1662,48 +1528,6 @@ object NonOracle {
        |  WHERE r <= $EvalNTerms),
        |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
        |       FROM tk GROUP BY term)""".stripMargin
-
-  private val bm25StatsSql: String =
-    """tfdl AS (SELECT term, doc_id, tf,
-      |         CAST(sum(tf) OVER (PARTITION BY doc_id) AS BIGINT) AS dl
-      |         FROM tf),
-      |idf AS (
-      |  SELECT term,
-      |    round(ln((CAST(n.n AS DOUBLE) - CAST(df AS DOUBLE) + 0.5)
-      |      / (CAST(df AS DOUBLE) + 0.5) + 1.0), 9) AS idf
-      |  FROM df CROSS JOIN n),
-      |ad AS (
-      |  SELECT CAST(sum(dl0) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
-      |  FROM (SELECT doc_id, count(*) AS dl0 FROM tk GROUP BY doc_id))""".stripMargin
-
-  /** One BM25 scoring arm at (k1, b): CTEs w$sfx..arm$sfx emitting
-    * (system, qid, cid, rk) rows named `sys`.
-    */
-  private def bm25ArmSql(sys: String, sfx: String, k1: Double,
-                         b: Double, k: Int = EvalK): String =
-    s"""w$sfx AS (
-       |  SELECT tfdl.term, tfdl.doc_id,
-       |    idf.idf * (CAST(tf AS DOUBLE) * ${k1 + 1.0}
-       |      / (CAST(tf AS DOUBLE)
-       |         + $k1 * (${1.0 - b} + $b * CAST(dl AS DOUBLE) / avgdl))) AS w
-       |  FROM tfdl JOIN idf USING (term) CROSS JOIN ad),
-       |m$sfx AS (SELECT qs.qid, w$sfx.doc_id, w$sfx.term, w$sfx.w
-       |          FROM w$sfx JOIN qs USING (term)),
-       |agg$sfx AS (
-       |  SELECT qid, doc_id, list_sum(list(w ORDER BY term)) AS score
-       |  FROM m$sfx GROUP BY qid, doc_id),
-       |scut$sfx AS (
-       |  SELECT qid, doc_id, score FROM (
-       |    SELECT qid, doc_id, score,
-       |      row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS r0
-       |    FROM agg$sfx)
-       |  WHERE r0 <= ${k + 1}),
-       |arm$sfx AS (
-       |  SELECT '$sys' AS system, qid, cid, rk FROM (
-       |    SELECT qid, doc_id AS cid,
-       |      row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rk
-       |    FROM scut$sfx WHERE doc_id <> qid)
-       |  WHERE rk <= $k)""".stripMargin
 
   private def evalMetricsCtes(nQ: Int, k: Int): String =
     s"""dt AS (SELECT DISTINCT doc_id, term FROM tk),
@@ -1781,8 +1605,8 @@ object NonOracle {
        |      row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rk
        |    FROM tcut WHERE doc_id <> qid)
        |  WHERE rk <= $EvalK),
-       |$bm25StatsSql,
-       |${bm25ArmSql("bm25", "b", 1.2, 0.75, EvalK)},
+       |${TwinSql.bm25StatsSql},
+       |${TwinSql.bm25ArmSql("bm25", "b", 1.2, 0.75, EvalK)},
        |e AS (
        |  SELECT vec_id, list(x ORDER BY pos) AS v
        |  FROM read_parquet('__GRAFT_OUT__/aux_mm_embed/*.parquet')
@@ -1850,7 +1674,7 @@ object NonOracle {
     * grid point one posting-sized reweight + the query-bounded
     * broadcast join — the grid multiplies only the cheap arm, never
     * the index build. FULL-REPLAY ORACLE: the shared twin fragments
-    * (evalHeadSql / bm25StatsSql / bm25ArmSql / evalMetricsSql — the
+    * (evalHeadSql / TwinSql.bm25StatsSql / bm25ArmSql / evalMetricsSql — the
     * exact q200 chain) instantiated at every grid point.
     */
   def bm25TuningCurve(s: org.apache.spark.sql.SparkSession, dir: String,
@@ -1934,9 +1758,9 @@ object NonOracle {
   val q206 = QueryDef.sql(
     "q206_bm25_tuning_curve",
     s"""WITH ${evalHeadSql(EvalNQ)},
-       |$bm25StatsSql,
+       |${TwinSql.bm25StatsSql},
        |${bm25Grid.zipWithIndex.map { case ((k1, b), i) =>
-           bm25ArmSql(bm25SysName(k1, b), s"g$i", k1, b)
+           TwinSql.bm25ArmSql(bm25SysName(k1, b), s"g$i", k1, b, EvalK)
          }.mkString(",\n")},
        |ranked AS (
        |  ${bm25Grid.indices.map(i => s"SELECT * FROM armg$i")

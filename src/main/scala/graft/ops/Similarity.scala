@@ -57,12 +57,7 @@ object Similarity {
       |    ${TwinSql.cosZ("qe", "ce")}
       |    AS score
       |  FROM q, c WHERE qid <> cid)
-      |SELECT qid, cid, score, rnk FROM (
-      |  SELECT qid, cid, score,
-      |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk
-      |  FROM s)
-      |WHERE rnk <= 5
-      |ORDER BY qid, rnk""".stripMargin) { (s, dir) =>
+      |${TwinSql.topKSql("s", 5)}""".stripMargin) { (s, dir) =>
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     bruteForceKnn(emb.filter(col("vec_id") < 10).toDF("qid", "qv"), emb, 5)
@@ -1178,11 +1173,7 @@ object Similarity {
        |    ${TwinSql.cosZ("qe.embedding", "ce.embedding")} AS score
        |  FROM cand JOIN e qe ON cand.qid = qe.vec_id
        |            JOIN e ce ON cand.cid = ce.vec_id)
-       |SELECT qid, cid, score, rnk FROM (
-       |  SELECT qid, cid, score,
-       |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk
-       |  FROM sc)
-       |WHERE rnk <= 5 ORDER BY qid, rnk""".stripMargin) { (s, dir) =>
+       |${TwinSql.topKSql("sc", 5)}""".stripMargin) { (s, dir) =>
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
       .filter(col("v").isNotNull)
@@ -1652,13 +1643,8 @@ object Similarity {
             |      FROM ad)
             |    WHERE arn = 1 AND center_id = $GraphStruckCell
             |      AND vec_id % 2 = 0)""".stripMargin)}
-       |SELECT qid, cid, score, rnk FROM (
-       |  SELECT s.qid, s.cid, s.score,
-       |    row_number() OVER (PARTITION BY s.qid
-       |      ORDER BY s.score DESC, s.cid) AS rnk
-       |  FROM s$GraphHops JOIN qsc s USING (qid, cid)
-       |  WHERE s.cid <> s.qid)
-       |WHERE rnk <= 10 ORDER BY qid, rnk""".stripMargin) { (s, dir) =>
+       |${TwinSql.topKSql(
+         s"s$GraphHops JOIN qsc s USING (qid, cid) WHERE s.cid <> s.qid", 10)}""".stripMargin) { (s, dir) =>
     import graft.cluster.KMeansAssign
     val emb = Tables.embeddings(s, dir)
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
@@ -1719,20 +1705,18 @@ object Similarity {
       .withColumn("qrn", row_number().over(wQ)).filter(col("qrn") === 1)
       .join(hubs, Seq("center_id"))
       .select(col("qid"), col("hub").as("cid"))
-    // Corpus-side state partitioned ONCE for the whole walk (r15,
+    // Corpus-side state partitioned once for the whole walk (r15,
     // guide §2.4 "remove shuffles outright"): every hop joins the
     // frontier against the edge table (on src) and the node table (on
-    // cid); un-partitioned, each hop's sort-merge join re-exchanged
-    // and re-sorted BOTH corpus-sized tables while the frontier side
-    // is bounded by queries x beam. localCheckpoint preserves the
-    // physical partitioning and ordering (LogicalRDD carries both),
-    // so after this one exchange + sort each, every hop's join
-    // shuffles ONLY frontier-sized rows — at serving scale the edge
-    // table is the corpus-sized side, so this is hops x |edges| of
-    // shuffle bytes removed, the exact per-hop cost the r14 broadcast
-    // attempt (blocking driver-side builds, measured worse) failed to
-    // remove. (The r15 plan files show the per-hop Exchange on
-    // src/cid gone.)
+    // cid), and the frontier side is bounded by queries x beam. The
+    // intent was that each hop's join shuffles only frontier-sized
+    // rows. It does not: the checkpoint keeps neither the
+    // partitioning nor the ordering. Its scan reports
+    // UnknownPartitioning(0), and a hop's sort-merge join still
+    // exchanges it on cid (plans/r15/q208_graph_ann_recall_after.txt:
+    // 232 and 240), or broadcasts it when it is small (q208 at
+    // sf0.01). ROADMAP item 4 tracks a checkpoint that states its
+    // partitioning.
     val edgesP = edges.select(col("src"), col("dst"))
       .repartition(col("src")).sortWithinPartitions(col("src"))
       .localCheckpoint(false)

@@ -272,28 +272,8 @@ object TrainingData {
     */
   val q155: QueryDef = QueryDef.sql(
     "q155_leakage_safe_split",
-    s"""WITH RECURSIVE t AS (
-       |  SELECT DISTINCT doc_id, term FROM (
-       |    SELECT doc_id, unnest($duckToks) AS term
-       |    FROM documents WHERE doc_id < 100)),
-       |sz AS (SELECT doc_id, count(*) AS n FROM t GROUP BY doc_id),
-       |inter AS (
-       |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_common
-       |  FROM t a JOIN t b ON a.term = b.term AND a.doc_id < b.doc_id
-       |  GROUP BY d1, d2),
-       |pairs AS (
-       |  SELECT d1, d2 FROM inter
-       |  JOIN sz s1 ON s1.doc_id = d1
-       |  JOIN sz s2 ON s2.doc_id = d2
-       |  WHERE n_common / (s1.n + s2.n - n_common) >= 0.7),
-       |edges AS (
-       |  SELECT d1 AS a, d2 AS b FROM pairs
-       |  UNION SELECT d2 AS a, d1 AS b FROM pairs),
-       |reach(v, r) AS (
-       |  SELECT DISTINCT a, a FROM edges
-       |  UNION
-       |  SELECT e.a, re.r FROM edges e JOIN reach re ON re.v = e.b),
-       |comp AS (SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v),
+    s"""WITH RECURSIVE ${TwinSql.jaccPairChainSql("documents WHERE doc_id < 100")},
+       |${TwinSql.componentsSql},
        |mem AS (
        |  SELECT d.doc_id, COALESCE(comp.cluster_id, d.doc_id) AS cluster_id
        |  FROM (SELECT doc_id FROM documents WHERE doc_id < 100) d

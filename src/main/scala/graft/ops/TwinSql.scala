@@ -11,6 +11,15 @@ package graft.ops
   * empty list is NULL in DuckDB, so the guard coalesces to 0). One
   * definition, consumed by every twin that scores vectors — a future
   * change lands everywhere or nowhere.
+  *
+  * The same holds for every CTE chain two or more twins spell: the
+  * set-overlap core and its Jaccard pairs, connected components, the
+  * MinHash band chain, the per-source chi-square spine, BM25 and the
+  * kNN top-k tail are rendered here, each from the source relation, a
+  * CTE suffix and a threshold or `k` only where their consumers
+  * differ. Every twin stays independent DuckDB SQL; nothing here is
+  * rendered from Spark code. SourceGuardSpec fails when a chain is
+  * spelled outside its generator.
   */
 private[ops] object TwinSql {
 
@@ -191,4 +200,225 @@ private[ops] object TwinSql {
        |               AS DOUBLE)
        |      / (2.0 * CAST($nPos AS DOUBLE) * CAST($nNeg AS DOUBLE)), 9)
        |    ELSE 0.0 END""".stripMargin
+
+  /** The distinct whitespace-token set CTE `$name`(doc_id, term) over
+    * the `text` column of `from` — the unit relation of every
+    * token-set overlap twin.
+    */
+  def termSetSql(name: String, from: String): String =
+    s"""$name AS (
+       |  SELECT DISTINCT doc_id, term FROM (
+       |    SELECT doc_id, unnest(${toksOf("text")}) AS term
+       |    FROM $from))""".stripMargin
+
+  /** The distinct codepoint-n-gram CTE `$name`(doc_id, gram) — ONE
+    * definition of the gram derivation (substring windows, min-1-window
+    * bound, empty-gram drop) consumed by [[charPairChainSql]] (q211's
+    * arms) AND q212's exact-intersection side: a drifted copy would
+    * have the two char oracles re-deriving DIFFERENT gram sets from
+    * the same corpus. DuckDB's substring and length count characters,
+    * matching the engine's codepoint semantics; the gram <> '' filter
+    * is the engine column's empty-gram drop (only empty text produces
+    * one).
+    */
+  def charGramCteSql(from: String, name: String, n: Int): String =
+    s"""$name AS (
+       |  SELECT DISTINCT doc_id, gram FROM (
+       |    SELECT doc_id, substring(text, i + 1, $n) AS gram FROM (
+       |      SELECT doc_id, text,
+       |        unnest(range(0, greatest(length(text) - $n, 0) + 1)) AS i
+       |      FROM $from))
+       |  WHERE gram <> '')""".stripMargin
+
+  /** The exact set-overlap core over a DISTINCT (doc_id, `unit`)
+    * relation `units`: CTEs `sz$sfx`(doc_id, n), the per-document set
+    * size, and `inter$sfx`(d1, d2, n_common) over d1 < d2 — the SQL
+    * face of Dedup.overlapCounts. ONE definition under every Jaccard,
+    * containment and cluster twin, token, shingle and char-gram alike.
+    */
+  def overlapSql(units: String, unit: String, sfx: String = ""): String =
+    s"""sz$sfx AS (SELECT doc_id, count(*) AS n FROM $units GROUP BY doc_id),
+       |inter$sfx AS (
+       |  SELECT a.doc_id AS d1, b.doc_id AS d2, count(*) AS n_common
+       |  FROM $units a JOIN $units b ON a.$unit = b.$unit AND a.doc_id < b.doc_id
+       |  GROUP BY d1, d2)""".stripMargin
+
+  /** The shipped 0.7 Jaccard gate over an [[overlapSql]] chain: CTE
+    * `pairs$sfx`(d1, d2), the same division form the engine's
+    * jaccardPairs compares.
+    */
+  def jaccPairsSql(sfx: String = ""): String =
+    s"""pairs$sfx AS (
+       |  SELECT d1, d2 FROM inter$sfx
+       |  JOIN sz$sfx s1 ON s1.doc_id = d1
+       |  JOIN sz$sfx s2 ON s2.doc_id = d2
+       |  WHERE n_common / (s1.n + s2.n - n_common) >= 0.7)""".stripMargin
+
+  /** The exact-Jaccard-0.7 token pair chain (t → sz → inter → pairs)
+    * over the `text` of `from`, CTE names suffixed by `sfx` — shared by
+    * the q85/q135/q155/q162/q198 cluster oracles, both arms of the q207
+    * raw-vs-normalized comparison and the word arms of q211/q213/q214
+    * (a drifted copy of the threshold or the distinct-token sets in any
+    * of them would verify different pairs than the engine strikes).
+    */
+  def jaccPairChainSql(from: String, sfx: String = ""): String =
+    s"""${termSetSql(s"t$sfx", from)},
+       |${overlapSql(s"t$sfx", "term", sfx)},
+       |${jaccPairsSql(sfx)}""".stripMargin
+
+  /** The char-level [[jaccPairChainSql]]: the same chain over
+    * [[charGramCteSql]] n-grams.
+    */
+  def charPairChainSql(from: String, sfx: String, n: Int): String =
+    s"""${charGramCteSql(from, s"t$sfx", n)},
+       |${overlapSql(s"t$sfx", "gram", sfx)},
+       |${jaccPairsSql(sfx)}""".stripMargin
+
+  /** Connected components of the undirected graph over a `pairs`(d1,
+    * d2) CTE: CTEs `edges`, the recursive min-reachable-vertex
+    * `reach`(v, r) and `comp`(doc_id, cluster_id) — the twin of
+    * Dedup.connectedComponents, whose component label is the minimum
+    * member id. The query must open with WITH RECURSIVE.
+    */
+  val componentsSql: String =
+    """edges AS (
+      |  SELECT d1 AS a, d2 AS b FROM pairs
+      |  UNION SELECT d2 AS a, d1 AS b FROM pairs),
+      |reach(v, r) AS (
+      |  SELECT DISTINCT a, a FROM edges
+      |  UNION
+      |  SELECT e.a, re.r FROM edges e JOIN reach re ON re.v = e.b),
+      |comp AS (SELECT v AS doc_id, min(r) AS cluster_id FROM reach GROUP BY v)""".stripMargin
+
+  /** The MinHash band chain over an aux signature dump `sigDump`
+    * (rows doc_id, pos, h): CTEs `s`(doc_id, mh), the 8 bands of 4
+    * slots `b`(doc_id, band, key) and the banded candidate pairs
+    * `cand`(d1, d2) — the twin of Dedup.bandsFromSignatures and
+    * candidatesFromBands at their 32-hash, 4-row operating point,
+    * grouping the RAW slot slice where the engine equi-joins its
+    * xxhash64.
+    */
+  def bandCandidatesSql(sigDump: String): String =
+    s"""s AS (
+       |  SELECT doc_id, list(h ORDER BY pos) AS mh
+       |  FROM read_parquet('__GRAFT_OUT__/$sigDump/*.parquet')
+       |  GROUP BY doc_id),
+       |b AS (
+       |  SELECT doc_id, g.b AS band, list_slice(mh, g.b*4 + 1, g.b*4 + 4) AS key
+       |  FROM s CROSS JOIN (SELECT unnest(range(8)) AS b) g),
+       |cand AS (
+       |  SELECT a.doc_id AS d1, c.doc_id AS d2
+       |  FROM b a JOIN b c ON a.band = c.band AND a.key = c.key AND a.doc_id < c.doc_id
+       |  GROUP BY d1, d2)""".stripMargin
+
+  /** The per-candidate MinHash slot agreement over a
+    * [[bandCandidatesSql]] chain: CTE `m`(d1, d2, n_match) over the 32
+    * signature slots.
+    */
+  val slotMatchSql: String =
+    """m AS (
+      |  SELECT cand.d1, cand.d2,
+      |    CAST(len(list_filter(range(1, 33), i -> s1.mh[i] = s2.mh[i])) AS BIGINT)
+      |      AS n_match
+      |  FROM cand JOIN s s1 ON s1.doc_id = cand.d1
+      |            JOIN s s2 ON s2.doc_id = cand.d2)""".stripMargin
+
+  /** The per-source χ² over buckets in twin SQL — the SQL face of
+    * CorpusDrift.chiSquareByBucket. Over a CTE `b`(source, bucket)
+    * emits `cb` (bucket totals), `sb` (observed per source and bucket),
+    * `ns`, `tot`, the source × bucket `spine` and `terms`(source,
+    * n_docs, bucket, term): one (O - E)²/E double per cell with the
+    * literal division order the engine folds, so summing `terms` in
+    * bucket order reproduces its chi² bit for bit.
+    */
+  val chiSquareSql: String =
+    """cb AS (SELECT bucket, CAST(count(*) AS BIGINT) AS c FROM b GROUP BY bucket),
+      |sb AS (SELECT source, bucket, CAST(count(*) AS BIGINT) AS o
+      |       FROM b GROUP BY source, bucket),
+      |ns AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs
+      |       FROM b GROUP BY source),
+      |tot AS (SELECT CAST(count(*) AS BIGINT) AS n FROM b),
+      |spine AS (SELECT ns.source, ns.n_docs, cb.bucket, cb.c, tot.n
+      |          FROM ns CROSS JOIN cb CROSS JOIN tot),
+      |terms AS (
+      |  SELECT source, n_docs, bucket,
+      |    (CAST(COALESCE(sb.o, 0) AS DOUBLE)
+      |       - CAST(spine.n_docs AS DOUBLE) * CAST(spine.c AS DOUBLE) / CAST(spine.n AS DOUBLE))
+      |    * (CAST(COALESCE(sb.o, 0) AS DOUBLE)
+      |       - CAST(spine.n_docs AS DOUBLE) * CAST(spine.c AS DOUBLE) / CAST(spine.n AS DOUBLE))
+      |    / (CAST(spine.n_docs AS DOUBLE) * CAST(spine.c AS DOUBLE) / CAST(spine.n AS DOUBLE))
+      |      AS term
+      |  FROM spine LEFT JOIN sb USING (source, bucket))""".stripMargin
+
+  /** The BM25 sufficient statistics over the eval head's `tk`(doc_id,
+    * term), `tf`, `df` and `n` CTEs: `tfdl` (tf with the document
+    * length), the Lucene non-negative `idf` rounded to 9 places (the
+    * only transcendental) and the corpus-mean length `ad` — the SQL
+    * face of graft.index.Retrieval's BM25 build.
+    */
+  val bm25StatsSql: String =
+    """tfdl AS (SELECT term, doc_id, tf,
+      |         CAST(sum(tf) OVER (PARTITION BY doc_id) AS BIGINT) AS dl
+      |         FROM tf),
+      |idf AS (
+      |  SELECT term,
+      |    round(ln((CAST(n.n AS DOUBLE) - CAST(df AS DOUBLE) + 0.5)
+      |      / (CAST(df AS DOUBLE) + 0.5) + 1.0), 9) AS idf
+      |  FROM df CROSS JOIN n),
+      |ad AS (
+      |  SELECT CAST(sum(dl0) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS avgdl
+      |  FROM (SELECT doc_id, count(*) AS dl0 FROM tk GROUP BY doc_id))""".stripMargin
+
+  /** The BM25 term weights at (k1, b) over [[bm25StatsSql]], matched to
+    * the query terms `qs`(qid, term): CTEs `w$sfx`(term, doc_id, w) and
+    * `m$sfx`(qid, doc_id, term, w). The driver-folded doubles (k1 + 1,
+    * 1 - b) are interpolated exactly as the Scala side folds them —
+    * Double.toString round-trips, so both engines embed the identical
+    * literal (at k1 = 1.2, b = 0.75: 2.2 and 0.25).
+    */
+  def bm25WeightSql(sfx: String, k1: Double, b: Double): String =
+    s"""w$sfx AS (
+       |  SELECT tfdl.term, tfdl.doc_id,
+       |    idf.idf * (CAST(tf AS DOUBLE) * ${k1 + 1.0}
+       |      / (CAST(tf AS DOUBLE)
+       |         + $k1 * (${1.0 - b} + $b * CAST(dl AS DOUBLE) / avgdl))) AS w
+       |  FROM tfdl JOIN idf USING (term) CROSS JOIN ad),
+       |m$sfx AS (SELECT qs.qid, w$sfx.doc_id, w$sfx.term, w$sfx.w
+       |          FROM w$sfx JOIN qs USING (term))""".stripMargin
+
+  /** One BM25 scoring arm at (k1, b): [[bm25WeightSql]], the per-query
+    * score fold in sorted term order, then CTE `arm$sfx`(system, qid,
+    * cid, rk) — the top `k` candidates other than the query document,
+    * rows named `sys`.
+    */
+  def bm25ArmSql(sys: String, sfx: String, k1: Double, b: Double,
+                 k: Int): String =
+    s"""${bm25WeightSql(sfx, k1, b)},
+       |agg$sfx AS (
+       |  SELECT qid, doc_id, list_sum(list(w ORDER BY term)) AS score
+       |  FROM m$sfx GROUP BY qid, doc_id),
+       |scut$sfx AS (
+       |  SELECT qid, doc_id, score FROM (
+       |    SELECT qid, doc_id, score,
+       |      row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS r0
+       |    FROM agg$sfx)
+       |  WHERE r0 <= ${k + 1}),
+       |arm$sfx AS (
+       |  SELECT '$sys' AS system, qid, cid, rk FROM (
+       |    SELECT qid, doc_id AS cid,
+       |      row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rk
+       |    FROM scut$sfx WHERE doc_id <> qid)
+       |  WHERE rk <= $k)""".stripMargin
+
+  /** The top-`k` tail of a kNN twin: rows (qid, cid, score) of `from`
+    * ranked per query by score descending, cid ascending, cut at `k`
+    * and totally ordered — the engine's row_number window and tie
+    * break.
+    */
+  def topKSql(from: String, k: Int): String =
+    s"""SELECT qid, cid, score, rnk FROM (
+       |  SELECT qid, cid, score,
+       |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, cid) AS rnk
+       |  FROM $from)
+       |WHERE rnk <= $k ORDER BY qid, rnk""".stripMargin
 }

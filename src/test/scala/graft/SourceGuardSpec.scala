@@ -18,7 +18,11 @@ import scala.jdk.CollectionConverters._
   *    columns, `TwinSql` for the DuckDB twins;
   *  - `Curation.curate` is the one curation pipeline: its stage counts
   *    are observed metrics, not count jobs, and it caches nothing in
-  *    the session-wide cache manager.
+  *    the session-wide cache manager;
+  *  - each verification chain two or more queries share is spelled
+  *    once: the DuckDB-twin chains in `TwinSql`, the Spark exact
+  *    set-overlap chain in `Dedup.overlapCounts` and the token n-gram
+  *    window text in `CurationOps.windowText`.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -128,5 +132,37 @@ class SourceGuardSpec extends AnyFunSuite {
       }
     }
     assert(forks.isEmpty, forks.mkString("\n"))
+  }
+
+  test("each verification chain is spelled once in src/main") {
+    // (a line only the chain spells, the one file allowed to, its owner)
+    val chains = Seq(
+      ("count(*) AS n_common", "TwinSql.scala", "TwinSql.overlapSql"),
+      ("JOIN reach re ON re.v = e.b", "TwinSql.scala", "TwinSql.componentsSql"),
+      ("list_slice(mh, g.b*4 + 1", "TwinSql.scala", "TwinSql.bandCandidatesSql"),
+      ("spine AS (SELECT ns.source", "TwinSql.scala", "TwinSql.chiSquareSql"),
+      ("tfdl AS (SELECT term, doc_id, tf", "TwinSql.scala", "TwinSql.bm25StatsSql"),
+      ("SELECT qid, cid, score, rnk FROM (", "TwinSql.scala", "TwinSql.topKSql"),
+      ("concat_ws(\"\\u0001\", slice(", "CurationOps.scala", "CurationOps.windowText"))
+    val files = mainFiles
+    for ((marker, owner, name) <- chains) {
+      val hits = files.flatMap { p =>
+        codeLines(p).collect {
+          case (l, i) if l.contains(marker) =>
+            p.getFileName.toString -> s"$p:${i + 1}: ${l.trim}"
+        }
+      }
+      assert(hits.map(_._1) == Seq(owner),
+        s"call $name instead of spelling its chain\n" + hits.map(_._2).mkString("\n"))
+    }
+    // the Spark overlap chain: the helper, plus jaccardPairsTouching's
+    // own delta-sided join
+    val dedup = Paths.get("src/main/scala/graft/ops/Dedup.scala")
+    val overlap = codeLines(dedup).collect {
+      case (l, i) if l.contains(".as(\"n_common\"))") => s"$dedup:${i + 1}: ${l.trim}"
+    }
+    assert(overlap.size == 2,
+      "call Dedup.overlapCounts instead of spelling the overlap chain\n" +
+        overlap.mkString("\n"))
   }
 }
