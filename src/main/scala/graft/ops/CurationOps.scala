@@ -584,25 +584,6 @@ object CurationOps {
       .orderBy(col("source"))
   }
 
-  /** Sliding-window exact-substring dedup (q113) — the true Lee et al.
-    * shape that q107's fixed-chunk pass approximates: EVERY n-token
-    * window that occurs more than once in the corpus (across documents
-    * or within one, at ANY offset) is a duplicated span; all
-    * occurrences except the globally first (lowest (doc_id, start))
-    * are removed, with overlapping marked windows merged into maximal
-    * intervals so a long shared passage is cut once, not per-window.
-    * Returns (doc_id, n_tokens, removed_tokens, clean_text).
-    *
-    * Scale: the gram table is O(corpus tokens) rows (same class as
-    * every shingle operator here) keyed by xxhash64 of the window —
-    * ONE content-keyed exchange; the keep/strike decision is a window
-    * over each gram's occurrence list (duplicate-count-sized groups,
-    * q107's adjudicated pattern). Interval merging is a per-document
-    * running-max window (doc-sized groups), and reassembly is
-    * ARRAY-LOCAL: the merged intervals ride back to the doc row as one
-    * array and tokens are filtered in place — no per-token explode,
-    * no re-aggregation exchange on the corpus.
-    */
   /** Classic interval union over (doc_id, start, e) span rows — a row
     * opens a new group iff it starts past the running max end of
     * everything before it; groups collapse to maximal [s, e) intervals.
@@ -611,6 +592,20 @@ object CurationOps {
     * identical running-max window, and a second copy could drift.
     * Per-document window: doc-sized groups, never a corpus-wide sort.
     */
+  private def mergeSpanIntervals(marked: org.apache.spark.sql.DataFrame)
+      : org.apache.spark.sql.DataFrame = {
+    val wd = Window.partitionBy(col("doc_id")).orderBy(col("start"))
+    marked
+      .withColumn("mpe",
+        max(col("e")).over(wd.rowsBetween(Window.unboundedPreceding, -1)))
+      .withColumn("newGrp",
+        (col("mpe").isNull || col("start") > col("mpe")).cast("int"))
+      .withColumn("grp",
+        sum(col("newGrp")).over(wd.rowsBetween(Window.unboundedPreceding, 0)))
+      .groupBy(col("doc_id"), col("grp"))
+      .agg(min(col("start")).as("s"), max(col("e")).as("e"))
+  }
+
   /** One row per `n`-token window of a tokenized frame `d`(doc_id, t,
     * nt): (doc_id, start, t) for every start of a document with at
     * least `n` tokens.
@@ -639,20 +634,25 @@ object CurationOps {
     windowStarts(d, n)
       .select(col("doc_id"), col("start"), xxhash64(windowText(n)).as("g"))
 
-  private def mergeSpanIntervals(marked: org.apache.spark.sql.DataFrame)
-      : org.apache.spark.sql.DataFrame = {
-    val wd = Window.partitionBy(col("doc_id")).orderBy(col("start"))
-    marked
-      .withColumn("mpe",
-        max(col("e")).over(wd.rowsBetween(Window.unboundedPreceding, -1)))
-      .withColumn("newGrp",
-        (col("mpe").isNull || col("start") > col("mpe")).cast("int"))
-      .withColumn("grp",
-        sum(col("newGrp")).over(wd.rowsBetween(Window.unboundedPreceding, 0)))
-      .groupBy(col("doc_id"), col("grp"))
-      .agg(min(col("start")).as("s"), max(col("e")).as("e"))
-  }
-
+  /** Sliding-window exact-substring dedup (q113) — the true Lee et al.
+    * shape that q107's fixed-chunk pass approximates: EVERY n-token
+    * window that occurs more than once in the corpus (across documents
+    * or within one, at ANY offset) is a duplicated span; all
+    * occurrences except the globally first (lowest (doc_id, start))
+    * are removed, with overlapping marked windows merged into maximal
+    * intervals so a long shared passage is cut once, not per-window.
+    * Returns (doc_id, n_tokens, removed_tokens, clean_text).
+    *
+    * Scale: the gram table is O(corpus tokens) rows (same class as
+    * every shingle operator here) keyed by xxhash64 of the window —
+    * ONE content-keyed exchange; the keep/strike decision is a window
+    * over each gram's occurrence list (duplicate-count-sized groups,
+    * q107's adjudicated pattern). Interval merging is a per-document
+    * running-max window (doc-sized groups), and reassembly is
+    * ARRAY-LOCAL: the merged intervals ride back to the doc row as one
+    * array and tokens are filtered in place — no per-token explode,
+    * no re-aggregation exchange on the corpus.
+    */
   def slidingSpanDedup(docs: org.apache.spark.sql.DataFrame,
                        n: Int = 8): org.apache.spark.sql.DataFrame = {
     require(n >= 1, s"window size must be >= 1, got $n")

@@ -23,7 +23,8 @@ import graft.functions.functions.simhash64
 object Dedup {
 
   import TextAnalytics.toks
-  import TwinSql.{charPairChainSql, componentsSql, jaccPairChainSql, overlapSql}
+  import TwinSql.{charPairChainSql, componentsSql, jaccPairChainSql, overlapSql,
+    termSetSql}
 
   private val duckToks = TwinSql.toksSql
 
@@ -57,7 +58,7 @@ object Dedup {
     */
   val q26: QueryDef = QueryDef.sql(
     "q26_jaccard_pairs",
-    s"""WITH ${TwinSql.termSetSql("t", "documents WHERE doc_id < 100")},
+    s"""WITH ${termSetSql("documents WHERE doc_id < 100", "t")},
        |${overlapSql("t", "term")}
        |SELECT d1, d2, n_common,
        |  n_common / (s1.n + s2.n - n_common) AS jaccard
@@ -558,7 +559,7 @@ object Dedup {
 
   val q27: QueryDef = QueryDef.sql(
     "q27_minhash_signatures",
-    s"""WITH ${TwinSql.termSetSql("t", "documents WHERE doc_id < 200")},
+    s"""WITH ${termSetSql("documents WHERE doc_id < 200", "t")},
        |d AS (SELECT doc_id, $duckTid AS tid FROM t),
        |mh AS (
        |  SELECT d.doc_id, g.j,
@@ -580,7 +581,7 @@ object Dedup {
     */
   val q28: QueryDef = QueryDef.sql(
     "q28_lsh_candidates",
-    s"""WITH ${TwinSql.termSetSql("t", "documents WHERE doc_id < 200")},
+    s"""WITH ${termSetSql("documents WHERE doc_id < 200", "t")},
        |d AS (SELECT doc_id, $duckTid AS tid FROM t),
        |mh AS (
        |  SELECT d.doc_id, g.j,
@@ -615,7 +616,7 @@ object Dedup {
     */
   val q29: QueryDef = QueryDef.sql(
     "q29_simhash_signatures",
-    s"""WITH ${TwinSql.termSetSql("t", "documents WHERE doc_id < 200")},
+    s"""WITH ${termSetSql("documents WHERE doc_id < 200", "t")},
        |d AS (SELECT doc_id, $duckTid AS tid FROM t),
        |bits AS (
        |  SELECT d.doc_id, g.j,
@@ -1964,7 +1965,7 @@ object Dedup {
       }.mkString(",\n")
       val unions = sweepTenths.map(k => s"SELECT * FROM row$k")
         .mkString("\nUNION ALL ")
-      s"""WITH RECURSIVE ${TwinSql.termSetSql("t", "documents WHERE doc_id < 100")},
+      s"""WITH RECURSIVE ${termSetSql("documents WHERE doc_id < 100", "t")},
          |${overlapSql("t", "term")},
          |sc AS (
          |  SELECT d1, d2, n_common, s1.n + s2.n - n_common AS uni

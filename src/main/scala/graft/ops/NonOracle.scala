@@ -1674,8 +1674,8 @@ object NonOracle {
     * grid point one posting-sized reweight + the query-bounded
     * broadcast join — the grid multiplies only the cheap arm, never
     * the index build. FULL-REPLAY ORACLE: the shared twin fragments
-    * (evalHeadSql / TwinSql.bm25StatsSql / bm25ArmSql / evalMetricsSql — the
-    * exact q200 chain) instantiated at every grid point.
+    * (evalHeadSql, TwinSql's BM25 statistics and arm, evalMetricsSql —
+    * the exact q200 chain) instantiated at every grid point.
     */
   def bm25TuningCurve(s: org.apache.spark.sql.SparkSession, dir: String,
                       nQ: Int = EvalNQ, k: Int = EvalK)

@@ -205,7 +205,7 @@ private[ops] object TwinSql {
     * the `text` column of `from` — the unit relation of every
     * token-set overlap twin.
     */
-  def termSetSql(name: String, from: String): String =
+  def termSetSql(from: String, name: String): String =
     s"""$name AS (
        |  SELECT DISTINCT doc_id, term FROM (
        |    SELECT doc_id, unnest(${toksOf("text")}) AS term
@@ -262,7 +262,7 @@ private[ops] object TwinSql {
     * of them would verify different pairs than the engine strikes).
     */
   def jaccPairChainSql(from: String, sfx: String = ""): String =
-    s"""${termSetSql(s"t$sfx", from)},
+    s"""${termSetSql(from, s"t$sfx")},
        |${overlapSql(s"t$sfx", "term", sfx)},
        |${jaccPairsSql(sfx)}""".stripMargin
 
