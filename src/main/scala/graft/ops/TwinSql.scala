@@ -371,7 +371,7 @@ private[ops] object TwinSql {
 
   /** The BM25 term weights at (k1, b) over [[bm25StatsSql]], matched to
     * the query terms `qs`(qid, term): CTEs `w$sfx`(term, doc_id, w) and
-    * `m$sfx`(qid, doc_id, term, w). The driver-folded doubles (k1 + 1,
+    * `m$sfx`(qid, doc_id, term, w). The Scala-folded doubles (k1 + 1,
     * 1 - b) are interpolated exactly as the Scala side folds them —
     * Double.toString round-trips, so both engines embed the identical
     * literal (at k1 = 1.2, b = 0.75: 2.2 and 0.25).
