@@ -1,8 +1,10 @@
 package graft.index
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+
+import graft.Checkpoints
 
 /** Query-time retrieval over the inverted-index family: the searching
   * counterpart of [[InvertedIndex]]'s build side. Disjunctive (OR)
@@ -14,10 +16,14 @@ import org.apache.spark.sql.functions._
   * corpus-wide exchange; df, dl, and avgdl all derive from it
   * (vocabulary/posting-sized follow-ups), so the token stream is
   * aggregated exactly once per plan, and a caller holding a persisted
-  * index skips the build entirely via the `*Postings` variants. The
-  * query set is broadcast (queries are human-sized; the posting side
-  * never shuffles for the match), per-(query, doc) accumulation
-  * exchanges only MATCHED postings (candidate-sized, not
+  * postings table skips that exchange via the `*Postings` variants.
+  * BM25 goes one step further: [[bm25Stats]] attaches dl, idf and avgdl
+  * to every posting and cuts the lineage there, so the BM25 index is
+  * ONE frame whose plan is a single RDD scan, and a search is one
+  * broadcast join over it — it neither recomputes nor re-renders the
+  * build. The query set is broadcast (queries are human-sized; the
+  * posting side never shuffles for the match), per-(query, doc)
+  * accumulation exchanges only MATCHED postings (candidate-sized, not
   * corpus-sized), and the top-k window partitions by query — never a
   * global sort. Per-term contributions are summed in sorted term order
   * via an array fold, so scores are reproducible bit-for-bit across
@@ -96,29 +102,74 @@ object Retrieval {
                  k1: Double = 1.2, b: Double = 0.75): DataFrame =
     searchBm25Postings(postings(tokens), queries, nDocs, k, k1, b)
 
-  /** The BM25 sufficient statistics of a postings table — per-posting
-    * doc length, per-term rounded idf, the scalar avgdl — computed
-    * ONCE and shared across every (k1, b) operating point (the q206
-    * sweep's shape, mirroring its twin's single tfdl/idf/ad CTE set;
-    * before the extraction each grid arm re-aggregated all three).
-    * dl is a posting-table-sized aggregate reused for BOTH the
-    * per-doc normalization and avgdl (the previous per-search shape
-    * paid a corpus-wide window SORT for dl plus a duplicate
-    * aggregation pass for avgdl).
+  /** The BM25 index of a postings table: every posting carries its
+    * document length and its term's rounded idf, next to the scalar
+    * avgdl — one row per (term, doc_id), columns (term, doc_id, tf, dl,
+    * idf, avgdl). It is built ONCE and shared across every (k1, b)
+    * operating point (the q206 sweep's shape, mirroring its twin's
+    * single tfdl/idf/ad CTE set), and a search reads nothing else:
+    * the index joined to the broadcast query terms, then the per-row
+    * weight, then the top-k fold.
+    *
+    * `tfdl` IS the index. `idf` (term, idf) and `avgdl` (one row) are
+    * projections of it, kept for callers that read the statistics on
+    * their own; persisting or counting them reads the index, never the
+    * postings.
     */
-  case class Bm25Stats(tfdl: DataFrame, idf: DataFrame, avgdl: DataFrame)
+  case class Bm25Stats(tfdl: DataFrame, idf: DataFrame, avgdl: DataFrame) {
 
+    /** Frees the blocks of the index [[bm25Stats]] returned (a local
+      * checkpoint, which `Dataset.unpersist()` does not free). Stats
+      * assembled from other frames are left alone. Reading the index
+      * after release throws.
+      */
+    def release(): Unit = Checkpoints.release(tfdl)
+  }
+
+  /** [[Bm25Stats]] of a postings table, with the index materialized
+    * behind one lineage cut: a lazy local checkpoint, so the index's
+    * plan is a single RDD scan and no later search recomputes or
+    * re-renders the build. Under adaptive execution the checkpoint
+    * call itself runs every shuffle and broadcast stage of the build;
+    * the first action over the index runs the last stage and stores
+    * its blocks. A caller need not persist the index: a `persist()`
+    * over it keeps a second in-memory copy of the same rows. Free it
+    * with [[Bm25Stats.release]] when done.
+    */
   def bm25Stats(tf: DataFrame, nDocs: Long): Bm25Stats = {
+    val index = bm25Index(tf, nDocs).localCheckpoint(false)
+    Bm25Stats(index, index.select(col("term"), col("idf")).distinct(),
+      index.select(col("avgdl")).limit(1))
+  }
+
+  /** The build plan of [[bm25Stats]]'s index, before the lineage cut.
+    * The postings aggregate is computed once: dl, df and avgdl all
+    * derive from it, and every branch reads its `tf` column, so the
+    * branches plan the same aggregate and adaptive execution reuses its
+    * one exchange. df therefore counts the postings with `tf > 0`, which
+    * is every posting: a `count(1)`, or a `count(tf)` Catalyst folds to
+    * one, prunes `tf`, and the df branch then re-tokenizes the documents
+    * into a second, distinct-only aggregate with its own exchange.
+    * Postings with a null term or doc_id are dropped up front, in every
+    * branch alike: the inner joins drop them from the index anyway, and
+    * otherwise the not-null filters Catalyst infers for the join sides
+    * alone make those branches' aggregate differ from the others'.
+    * dl is a posting-sized aggregate reused for both the per-doc
+    * normalization and avgdl, never a corpus-wide window sort. The one
+    * nested-loop join attaches the one-row avgdl.
+    */
+  private[graft] def bm25Index(postings: DataFrame, nDocs: Long): DataFrame = {
+    val tf = postings.filter(col("term").isNotNull && col("doc_id").isNotNull)
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    val tfdl = tf.join(dl, "doc_id")
-    val idf = tf.groupBy(col("term")).agg(count(lit(1)).as("df"))
-      .withColumn("idf",
+    val idf = tf.groupBy(col("term")).agg(count_if(col("tf") > 0).as("df"))
+      .select(col("term"),
         round(log((lit(nDocs.toDouble) - col("df") + lit(0.5)) /
-          (col("df") + lit(0.5)) + lit(1.0)), 9))
-      .select(col("term"), col("idf"))
+          (col("df") + lit(0.5)) + lit(1.0)), 9).as("idf"))
     val avgdl = dl.agg((sum(col("dl")).cast("double") /
       count(lit(1)).cast("double")).as("avgdl"))
-    Bm25Stats(tfdl, idf, avgdl)
+    tf.join(dl, "doc_id").join(idf, "term").crossJoin(broadcast(avgdl))
+      .select(col("term"), col("doc_id"), col("tf"), col("dl"), col("idf"),
+        col("avgdl"))
   }
 
   /** [[searchBm25]] from a prebuilt [[postings]] table. */
@@ -127,28 +178,13 @@ object Retrieval {
                          b: Double = 0.75): DataFrame =
     searchBm25FromStats(bm25Stats(tf, nDocs), queries, k, k1, b)
 
-  /** [[searchBm25Postings]] at one (k1, b) point over precomputed
-    * [[Bm25Stats]].
+  /** [[searchBm25Postings]] at one (k1, b) point over a prebuilt
+    * [[Bm25Stats]] index.
     */
   def searchBm25FromStats(stats: Bm25Stats, queries: DataFrame, k: Int,
-                          k1: Double = 1.2, b: Double = 0.75): DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
-    // scalar constants folded driver-side: ONE double each, so the
-    // twin can embed the same literal value (k1+1 and 1-b are single
-    // correctly-rounded ops — reproducible from the same inputs)
-    val tfD = col("tf").cast("double")
-    val sat = tfD * lit(k1 + 1.0) /
-      (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl")))
-    // query semi-join FIRST (r15, guide §1.2/§2.3): the broadcast join
-    // on the bounded query term set drops most postings before the idf
-    // join and the saturation divisions run. Same w expression on the
-    // same surviving rows — scores bit-identical.
-    val weighted = stats.tfdl.join(broadcast(queries), "term")
-      .join(stats.idf, "term")
-      .crossJoin(broadcast(stats.avgdl))
-      .withColumn("w", col("idf") * sat)
-    topK(weighted, k)
-  }
+                          k1: Double = 1.2, b: Double = 0.75): DataFrame =
+    bm25Search(stats, queries, k, Seq("qid"))(
+      _.withColumn("w", col("idf") * bm25Sat(k1, b)))
 
   /** Every (k1, b) grid point of [[searchBm25FromStats]] in ONE
     * postings pass (r15, guide §1.2 "remove unnecessary passes"): the
@@ -173,55 +209,60 @@ object Retrieval {
   def searchBm25MultiFromStats(stats: Bm25Stats, queries: DataFrame, k: Int,
                                grid: Seq[(String, Double, Double)])
       : DataFrame = {
-    require(k >= 1, s"k must be >= 1, got $k")
     require(grid.nonEmpty, "empty (system, k1, b) grid")
-    val tfD = col("tf").cast("double")
-    def satOf(k1: Double, b: Double) = tfD * lit(k1 + 1.0) /
-      (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl")))
     val wsys = array(grid.map { case (nm, k1, b) =>
-      struct(lit(nm).as("system"), (col("idf") * satOf(k1, b)).as("w"))
+      struct(lit(nm).as("system"), (col("idf") * bm25Sat(k1, b)).as("w"))
     }: _*)
-    // query semi-join FIRST (r15, guide §1.2/§2.3): before, every
-    // posting in the corpus computed the full |grid|-element (system,
-    // w) array — 6 saturation divisions per posting — only for the
-    // query match to discard almost all of them. Joining the bounded
-    // broadcast query set first confines the grid arithmetic to
-    // matched postings; each w is the same expression on the same
-    // surviving rows, so the union is bit-identical.
-    val weighted = stats.tfdl.join(broadcast(queries), "term")
-      .join(stats.idf, "term")
-      .crossJoin(broadcast(stats.avgdl))
-      .withColumn("wsys", wsys)
-    val matched = weighted
-      .select(col("qid"), col("doc_id"), col("term"),
-        explode(col("wsys")).as("sw"))
-      .select(col("qid"), col("doc_id"), col("term"),
-        col("sw").getField("system").as("system"),
-        col("sw").getField("w").as("w"))
-    val scored = matched.groupBy(col("system"), col("qid"), col("doc_id"))
-      .agg(
-        aggregate(
-          transform(array_sort(collect_list(struct(col("term"), col("w")))),
-            x => x.getField("w")),
-          lit(0.0), (acc, x) => acc + x).as("score"),
-        count(lit(1)).as("n_matched"))
-    val wq = Window.partitionBy(col("system"), col("qid"))
-      .orderBy(col("score").desc, col("doc_id"))
-    scored.withColumn("rnk", row_number().over(wq)).filter(col("rnk") <= k)
+    bm25Search(stats, queries, k, Seq("system", "qid"))(
+      _.select(col("qid"), col("doc_id"), col("term"), explode(wsys).as("sw"))
+        .select(col("qid"), col("doc_id"), col("term"),
+          col("sw").getField("system").as("system"),
+          col("sw").getField("w").as("w")))
   }
 
-  /** Shared tail: fold matched per-term weights in sorted term order,
-    * rank per query, keep the top k.
+  /** The BM25 saturation at (k1, b) over an index row. The scalar
+    * constants are folded driver-side: ONE double each, so the twin can
+    * embed the same literal value (k1+1 and 1-b are single
+    * correctly-rounded ops — reproducible from the same inputs).
     */
-  private def topK(matched: DataFrame, k: Int): DataFrame = {
-    val scored = matched.groupBy(col("qid"), col("doc_id"))
+  private def bm25Sat(k1: Double, b: Double): Column = {
+    val tfD = col("tf").cast("double")
+    tfD * lit(k1 + 1.0) /
+      (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl")))
+  }
+
+  /** One BM25 search over the index: the broadcast query terms join it
+    * FIRST (r15, guide §1.2/§2.3), so the weight arithmetic runs only
+    * on matched postings; `weigh` adds the per-row `w` (and `system`,
+    * for a grid); the top k are ranked per `keys`. The index carries
+    * idf, dl and avgdl on every row, so a search is one join: no idf
+    * join and no avgdl nested-loop broadcast.
+    */
+  private def bm25Search(stats: Bm25Stats, queries: DataFrame, k: Int,
+                         keys: Seq[String])(weigh: DataFrame => DataFrame)
+      : DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
+    topK(weigh(stats.tfdl.join(broadcast(queries), "term")), k, keys)
+  }
+
+  /** Shared tail: fold matched per-term weights in sorted term order
+    * per (`keys`, doc_id), rank per `keys` by (score desc, doc_id), keep
+    * the top k.
+    */
+  private def topK(matched: DataFrame, k: Int,
+                   keys: Seq[String] = Seq("qid")): DataFrame = {
+    // sort_array sorts these non-null structs as array_sort does, and
+    // renders without array_sort's comparator lambda in every plan
+    // description
+    val scored = matched.groupBy((keys :+ "doc_id").map(col): _*)
       .agg(
         aggregate(
-          transform(array_sort(collect_list(struct(col("term"), col("w")))),
+          transform(sort_array(collect_list(struct(col("term"), col("w")))),
             x => x.getField("w")),
           lit(0.0), (acc, x) => acc + x).as("score"),
         count(lit(1)).as("n_matched"))
-    val wq = Window.partitionBy(col("qid")).orderBy(col("score").desc, col("doc_id"))
+    val wq = Window.partitionBy(keys.map(col): _*)
+      .orderBy(col("score").desc, col("doc_id"))
     scored.withColumn("rnk", row_number().over(wq)).filter(col("rnk") <= k)
   }
 }

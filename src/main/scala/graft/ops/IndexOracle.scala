@@ -27,51 +27,14 @@ object IndexOracle {
     */
   val q114: QueryDef = QueryDef.sql(
     "q114_tfidf_retrieval",
-    """WITH tk AS (
-      |  SELECT doc_id,
-      |    unnest(list_filter(string_split_regex(text, '[ \t\n\x0B\f\r]+'), x -> x <> '')) AS term
-      |  FROM documents),
-      |n AS (SELECT count(*) AS n FROM documents),
-      |top8 AS (
-      |  SELECT term, row_number() OVER (ORDER BY count(*) DESC, term) - 1 AS r
-      |  FROM tk GROUP BY term ORDER BY count(*) DESC, term LIMIT 8),
-      |qs AS (SELECT CAST(r // 2 AS BIGINT) AS qid, term FROM top8),
-      |tf AS (SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf
-      |       FROM tk GROUP BY term, doc_id),
-      |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-      |       FROM tk GROUP BY term),
+    s"""WITH ${TwinSql.retrievalHeadSql},
       |w AS (
       |  SELECT tf.term, tf.doc_id,
       |    round(tf.tf * ln((n.n + 1.0) / (df.df + 1.0)), 9) AS w
       |  FROM tf JOIN df USING (term) CROSS JOIN n),
       |m AS (SELECT qs.qid, w.doc_id, w.term, w.w FROM w JOIN qs USING (term)),
-      |agg AS (
-      |  SELECT qid, doc_id,
-      |    list_sum(list(w ORDER BY term)) AS score,
-      |    CAST(count(*) AS BIGINT) AS n_matched
-      |  FROM m GROUP BY qid, doc_id)
-      |SELECT qid, doc_id, score, n_matched, rnk FROM (
-      |  SELECT qid, doc_id, score, n_matched,
-      |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rnk
-      |  FROM agg)
-      |WHERE rnk <= 10 ORDER BY qid, rnk""".stripMargin) { (s, dir) =>
-    import s.implicits._
-    val docs = Tables.documentsFan(s, dir)
-    val toks = docs.select(col("doc_id"),
-      explode(TextAnalytics.toks(col("text"))).as("term"))
-    val n = docs.count()
-    // postings built ONCE (lazy checkpoint: materialized by the top8
-    // collect, reused by the search action — without it the query-set
-    // derivation and the search each re-aggregate the token stream)
-    val tf = graft.index.Retrieval.postings(toks).localCheckpoint(false)
-    // human-sized query set: driver-side by nature (8 rows);
-    // term totals = sum of tf — no token re-pass
-    val top8 = tf.groupBy(col("term")).agg(sum(col("tf")).as("cnt"))
-      .orderBy(col("cnt").desc, col("term")).limit(8)
-      .collect().map(_.getString(0))
-    val queries = top8.zipWithIndex
-      .map { case (t, i) => (i.toLong / 2L, t) }.toSeq
-      .toDF("qid", "term")
+      |${TwinSql.retrievalTailSql}""".stripMargin) { (s, dir) =>
+    val (tf, n, queries) = retrievalContext(s, dir)
     graft.index.Retrieval.searchPostings(tf, queries, n, k = 10)
       .orderBy(col("qid"), col("rnk"))
   }
@@ -89,45 +52,39 @@ object IndexOracle {
     */
   val q115: QueryDef = QueryDef.sql(
     "q115_bm25_retrieval",
-    s"""WITH tk AS (
-      |  SELECT doc_id,
-      |    unnest(${TwinSql.toksSql}) AS term
-      |  FROM documents),
-      |n AS (SELECT count(*) AS n FROM documents),
-      |top8 AS (
-      |  SELECT term, row_number() OVER (ORDER BY count(*) DESC, term) - 1 AS r
-      |  FROM tk GROUP BY term ORDER BY count(*) DESC, term LIMIT 8),
-      |qs AS (SELECT CAST(r // 2 AS BIGINT) AS qid, term FROM top8),
-      |tf AS (SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf
-      |       FROM tk GROUP BY term, doc_id),
-      |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
-      |       FROM tk GROUP BY term),
+    s"""WITH ${TwinSql.retrievalHeadSql},
       |${TwinSql.bm25StatsSql},
       |${TwinSql.bm25WeightSql("", 1.2, 0.75)},
-      |agg AS (
-      |  SELECT qid, doc_id,
-      |    list_sum(list(w ORDER BY term)) AS score,
-      |    CAST(count(*) AS BIGINT) AS n_matched
-      |  FROM m GROUP BY qid, doc_id)
-      |SELECT qid, doc_id, score, n_matched, rnk FROM (
-      |  SELECT qid, doc_id, score, n_matched,
-      |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rnk
-      |  FROM agg)
-      |WHERE rnk <= 10 ORDER BY qid, rnk""".stripMargin) { (s, dir) =>
+      |${TwinSql.retrievalTailSql}""".stripMargin) { (s, dir) =>
+    val (tf, n, queries) = retrievalContext(s, dir)
+    graft.index.Retrieval.searchBm25Postings(tf, queries, n, k = 10)
+      .orderBy(col("qid"), col("rnk"))
+  }
+
+  /** The q114/q115 inputs: raw whitespace-token postings, the corpus
+    * size, and the query set (the 8 most frequent tokens by (count
+    * desc, term), paired into 4 two-term queries). The postings are
+    * built ONCE (lazy checkpoint: materialized by the top8 collect,
+    * reused by the search action — without it the query-set derivation
+    * and the search each re-aggregate the token stream).
+    */
+  private def retrievalContext(s: org.apache.spark.sql.SparkSession, dir: String)
+      : (org.apache.spark.sql.DataFrame, Long, org.apache.spark.sql.DataFrame) = {
     import s.implicits._
     val docs = Tables.documentsFan(s, dir)
     val toks = docs.select(col("doc_id"),
       explode(TextAnalytics.toks(col("text"))).as("term"))
     val n = docs.count()
     val tf = graft.index.Retrieval.postings(toks).localCheckpoint(false)
+    // human-sized query set: driver-side by nature (8 rows);
+    // term totals = sum of tf — no token re-pass
     val top8 = tf.groupBy(col("term")).agg(sum(col("tf")).as("cnt"))
       .orderBy(col("cnt").desc, col("term")).limit(8)
       .collect().map(_.getString(0))
     val queries = top8.zipWithIndex
       .map { case (t, i) => (i.toLong / 2L, t) }.toSeq
       .toDF("qid", "term")
-    graft.index.Retrieval.searchBm25Postings(tf, queries, n, k = 10)
-      .orderBy(col("qid"), col("rnk"))
+    (tf, n, queries)
   }
 
   /** Reference Job 1 end-to-end: normalize (tokenize/punct/stopword/

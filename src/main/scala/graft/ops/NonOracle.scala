@@ -1681,13 +1681,9 @@ object NonOracle {
                       nQ: Int = EvalNQ, k: Int = EvalK)
       : org.apache.spark.sql.DataFrame = {
     val (dt, n, tf, queries) = evalContext(s, dir, nQ)
-    // ONE stats build (tfdl/idf/avgdl) shared by every grid arm — the
-    // twin's single CTE set, mirrored; each localCheckpoint'd frame is
-    // consumed by all six arms
-    val st0 = graft.index.Retrieval.bm25Stats(tf, n)
-    val stats = graft.index.Retrieval.Bm25Stats(
-      st0.tfdl.localCheckpoint(false), st0.idf.localCheckpoint(false),
-      st0.avgdl.localCheckpoint(false))
+    // ONE index build shared by every grid arm — the twin's single
+    // tfdl/idf/ad CTE set, mirrored; bm25Stats already cuts its lineage
+    val stats = graft.index.Retrieval.bm25Stats(tf, n)
     // ONE pass for ALL grid points (r15, guide §1.2): the six arms
     // were six copies of the idf-join + matched exchange + top-k
     // window; searchBm25MultiFromStats runs them as one chain with a
@@ -1699,9 +1695,8 @@ object NonOracle {
     // the same rows survive with the same rk.
     // EAGER checkpoint kept: metrics and tau both traverse the arms,
     // and without it each branch re-ran the reweight+window
-    // (measured ~10s -> ~6s at sf0.1). The identical
-    // searchBm25FromStats path stays plan-audited through q115/q188/
-    // q200 (PlanAuditSpec carries the matching comment)
+    // (measured ~10s -> ~6s at sf0.1). The index build behind both
+    // checkpoints is plan-audited on its own (PlanAuditSpec)
     val wMulti = org.apache.spark.sql.expressions.Window
       .partitionBy(col("system"), col("qid"))
       .orderBy(col("score").desc, col("doc_id"))

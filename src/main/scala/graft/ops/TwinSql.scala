@@ -350,6 +350,44 @@ private[ops] object TwinSql {
       |      AS term
       |  FROM spine LEFT JOIN sb USING (source, bucket))""".stripMargin
 
+  /** The head of the q114/q115 retrieval twins: raw whitespace tokens
+    * `tk`(doc_id, term), the corpus size `n`, the 8 most frequent
+    * tokens by (count desc, term) paired into 4 two-term queries
+    * `qs`(qid, term), the postings `tf`(term, doc_id, tf) and the
+    * document frequencies `df`(term, df).
+    */
+  val retrievalHeadSql: String =
+    s"""tk AS (
+       |  SELECT doc_id,
+       |    unnest($toksSql) AS term
+       |  FROM documents),
+       |n AS (SELECT count(*) AS n FROM documents),
+       |top8 AS (
+       |  SELECT term, row_number() OVER (ORDER BY count(*) DESC, term) - 1 AS r
+       |  FROM tk GROUP BY term ORDER BY count(*) DESC, term LIMIT 8),
+       |qs AS (SELECT CAST(r // 2 AS BIGINT) AS qid, term FROM top8),
+       |tf AS (SELECT term, doc_id, CAST(count(*) AS BIGINT) AS tf
+       |       FROM tk GROUP BY term, doc_id),
+       |df AS (SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS df
+       |       FROM tk GROUP BY term)""".stripMargin
+
+  /** The tail of the q114/q115 retrieval twins over the matched weights
+    * `m`(qid, doc_id, term, w): the per-(qid, doc_id) score folded in
+    * sorted term order, then the top 10 per query by (score desc,
+    * doc_id), totally ordered — Retrieval's top-k fold and window.
+    */
+  val retrievalTailSql: String =
+    """agg AS (
+      |  SELECT qid, doc_id,
+      |    list_sum(list(w ORDER BY term)) AS score,
+      |    CAST(count(*) AS BIGINT) AS n_matched
+      |  FROM m GROUP BY qid, doc_id)
+      |SELECT qid, doc_id, score, n_matched, rnk FROM (
+      |  SELECT qid, doc_id, score, n_matched,
+      |    row_number() OVER (PARTITION BY qid ORDER BY score DESC, doc_id) AS rnk
+      |  FROM agg)
+      |WHERE rnk <= 10 ORDER BY qid, rnk""".stripMargin
+
   /** The BM25 sufficient statistics over the eval head's `tk`(doc_id,
     * term), `tf`, `df` and `n` CTEs: `tfdl` (tf with the document
     * length), the Lucene non-negative `idf` rounded to 9 places (the

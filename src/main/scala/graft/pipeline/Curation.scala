@@ -1,8 +1,8 @@
 package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import graft.Checkpoints
 import graft.ops.{Dedup, TextAnalytics}
 
 /** End-to-end training-data curation: the composition every individual
@@ -41,12 +41,13 @@ object Curation {
     *         observed metrics report its size: its plan is a single RDD
     *         scan, so a later query over it neither recomputes nor
     *         re-renders the stages that built it. `Dataset.unpersist()`
-    *         does not free a checkpoint — call [[release]] when done
-    *         with the frame, or its blocks stay until the RDD is
-    *         garbage-collected; reading the frame after [[release]]
-    *         throws. The intermediate checkpoints are released before
-    *         returning, and the call adds no entry to the session's
-    *         cache manager, so concurrent calls share nothing.
+    *         does not free a checkpoint — call
+    *         [[graft.Checkpoints.release]] when done with the frame, or
+    *         its blocks stay until the RDD is garbage-collected;
+    *         reading the frame after release throws. The intermediate
+    *         checkpoints are released before returning, and the call
+    *         adds no entry to the session's cache manager, so
+    *         concurrent calls share nothing.
     */
   // withColumn REPLACES same-named columns silently: a caller frame
   // that already carries one of the pipeline's internal temp columns
@@ -178,25 +179,12 @@ object Curation {
     // update. Observations are read only after both actions returned.
     val curated =
       try balanceStage(nearDeduped, maxPerSource).observe(oBalance, n).localCheckpoint(true)
-      finally { release(sigs); release(exact) }
+      finally { Checkpoints.release(sigs); Checkpoints.release(exact) }
 
     def metric(o: Observation): Long = o.get("n").asInstanceOf[Long]
     (curated, Report(metric(oIn), metric(oQuality), metric(oLang),
       metric(oExact), metric(oNearDup), metric(oBalance)))
   }
-
-  /** Frees the blocks of the frame [[curate]] returned: a local
-    * checkpoint is a persisted RDD behind the frame's `LogicalRDD` root,
-    * which `Dataset.unpersist()` does not touch. Pass curate's frame
-    * itself, not a frame derived from it (anything else is left alone).
-    * Reading the frame after release throws: a local checkpoint cannot
-    * be recomputed.
-    */
-  def release(curated: DataFrame): Unit =
-    curated.queryExecution.logical match {
-      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
-    }
 
   /** Benchmark decontamination: drop corpus documents sharing at least
     * `minShared` distinct word `n`-gram shingles with a held-out

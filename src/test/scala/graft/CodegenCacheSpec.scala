@@ -30,6 +30,7 @@ class CodegenCacheSpec extends SparkSpec {
       val sigs = Dedup.minhashSignatures(docs)
       val cands = Dedup.candidatesFromBands(Dedup.bandsFromSignatures(sigs))
       Dedup.connectedComponents(Dedup.verifyCandidates(cands, sigs)).count()
+      val persisted0 = persistedRdds
       val s = Retrieval.bm25Stats(
         Retrieval.postings(Normalize.tokens(curated)), report.afterBalance)
       val stats = Retrieval.Bm25Stats(s.tfdl.persist(), s.idf.persist(), s.avgdl.persist())
@@ -40,10 +41,17 @@ class CodegenCacheSpec extends SparkSpec {
             .select(col("doc_id").as("qid"), col("term")).distinct()
           Retrieval.searchBm25FromStats(stats, qdf, 10).collect()
         }
-      } finally Seq(stats.tfdl, stats.idf, stats.avgdl).foreach(_.unpersist(blocking = true))
-    } finally Curation.release(curated)
+      } finally {
+        Seq(stats.tfdl, stats.idf, stats.avgdl).foreach(_.unpersist(blocking = true))
+        stats.release()
+      }
+      assert((persistedRdds -- persisted0).isEmpty,
+        "the BM25 build left blocks persisted after unpersist and release")
+    } finally Checkpoints.release(curated)
     Bench.compiledClasses() - c0
   }
+
+  private def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
 
   test("a warm corpus pass compiles no class") {
     val queries = Tables.documents(spark, sfDir).orderBy("doc_id")

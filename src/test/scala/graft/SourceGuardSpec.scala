@@ -143,6 +143,9 @@ class SourceGuardSpec extends AnyFunSuite {
       ("spine AS (SELECT ns.source", "TwinSql.scala", "TwinSql.chiSquareSql"),
       ("tfdl AS (SELECT term, doc_id, tf", "TwinSql.scala", "TwinSql.bm25StatsSql"),
       ("SELECT qid, cid, score, rnk FROM (", "TwinSql.scala", "TwinSql.topKSql"),
+      ("qs AS (SELECT CAST(r // 2 AS BIGINT) AS qid, term FROM top8)", "TwinSql.scala",
+        "TwinSql.retrievalHeadSql"),
+      ("CAST(count(*) AS BIGINT) AS n_matched", "TwinSql.scala", "TwinSql.retrievalTailSql"),
       ("concat_ws(\"\\u0001\", slice(", "CurationOps.scala", "CurationOps.windowText"))
     val files = mainFiles
     for ((marker, owner, name) <- chains) {

@@ -97,6 +97,61 @@ class RetrievalSpec extends SparkSpec {
     assert(sat(2, 3) < 2.0 * sat(1, 3))
   }
 
+  test("BM25 over the index == an independent (k1, b) computation from the postings") {
+    // 40 docs of 0-11 tokens over a skewed 8-term vocabulary (empty
+    // docs carry no postings, so they count in neither dl nor avgdl)
+    val rnd = new scala.util.Random(7)
+    val vocab = Vector("ant", "bee", "cat", "dog", "eel", "fox", "gnu", "hen")
+    val toks = (1L to 40L).flatMap { d =>
+      Seq.fill(rnd.nextInt(12))(d -> vocab(rnd.nextInt(1 + rnd.nextInt(vocab.size))))
+    }
+    val n = 40L
+    val queries = Seq((0L, "ant"), (0L, "cat"), (1L, "dog"), (1L, "eel"),
+      (1L, "hen"), (2L, "gnu"), (2L, "yak"), (3L, "yak"))
+    val qdf = queries.toDF("qid", "term")
+    val stats = Retrieval.bm25Stats(Retrieval.postings(toks.toDF("doc_id", "term")), n)
+    try {
+      assert(stats.tfdl.columns.toSeq == Seq("term", "doc_id", "tf", "dl", "idf", "avgdl"),
+        "the index carries every BM25 statistic on each posting")
+      val tf: Map[(String, Long), Long] =
+        toks.groupBy(identity).map { case ((d, t), occ) => (t, d) -> occ.size.toLong }
+      val dl = tf.groupBy(_._1._2).map { case (d, ps) => d -> ps.values.sum }
+      val df = tf.keys.groupBy(_._1).map { case (t, ps) => t -> ps.size.toLong }
+      val avgdl = dl.values.sum.toDouble / dl.size.toDouble
+      def idf(t: String): Double = BigDecimal(StrictMath.log(
+        (n.toDouble - df(t) + 0.5) / (df(t) + 0.5) + 1.0))
+        .setScale(9, BigDecimal.RoundingMode.HALF_UP).toDouble
+      // (qid, doc_id, score, n_matched, rnk), top k per qid
+      def expected(k1: Double, b: Double, k: Int): Set[(Long, Long, Double, Long, Int)] =
+        queries.groupBy(_._1).toSeq.flatMap { case (qid, qts) =>
+          val terms = qts.map(_._2).toSet
+          tf.toSeq.filter { case ((t, _), _) => terms(t) }.groupBy(_._1._2).toSeq
+            .map { case (d, hits) =>
+              val score = hits.sortBy(_._1._1).foldLeft(0.0) { case (acc, ((t, _), c)) =>
+                val tfD = c.toDouble
+                acc + idf(t) * (tfD * (k1 + 1.0) /
+                  (tfD + k1 * ((1.0 - b) + b * dl(d).toDouble / avgdl)))
+              }
+              (d, score, hits.size.toLong)
+            }
+            .sortBy { case (d, score, _) => (-score, d) }.take(k).zipWithIndex
+            .map { case ((d, score, m), i) => (qid, d, score, m, i + 1) }
+        }.toSet
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.select("qid", "doc_id", "score", "n_matched", "rnk")
+          .as[(Long, Long, Double, Long, Int)].collect().toSet
+      val grid = Seq(("a", 1.2, 0.75), ("b", 0.5, 0.3), ("c", 2.0, 1.0))
+      for ((_, k1, b) <- grid) {
+        val want = expected(k1, b, 3)
+        assert(want.nonEmpty)
+        assert(rows(Retrieval.searchBm25FromStats(stats, qdf, 3, k1, b)) == want, s"k1=$k1 b=$b")
+      }
+      val multi = Retrieval.searchBm25MultiFromStats(stats, qdf, 3, grid)
+      for ((sys, k1, b) <- grid)
+        assert(rows(multi.filter(col("system") === sys)) == expected(k1, b, 3), s"system $sys")
+    } finally stats.release()
+  }
+
   test("persisted postings serve identically: searchPostings(parquet round-trip) == search(tokens)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-postings").toString
     Retrieval.postings(tokens).write.mode("overwrite").parquet(dir)

@@ -7,15 +7,15 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.graftshim.Shim
 
-import graft.SparkSpec
+import graft.{Checkpoints, SparkSpec}
 import graft.index.Retrieval
 import graft.ops.Tables
 import graft.text.Normalize
 import graft.tools.Profile
 
 /** The frame [[Curation.curate]] returns: a local checkpoint whose plan
-  * does not carry the curate build, and which [[Curation.release]]
-  * frees completely.
+  * does not carry the curate build, and which [[Checkpoints.release]]
+  * frees completely; a BM25 search over it reads one index frame.
   */
 class CuratedFrameSpec extends SparkSpec {
   import spark.implicits._
@@ -42,13 +42,27 @@ class CuratedFrameSpec extends SparkSpec {
     }
   }
 
-  /** A single search renders its own plan and the plans of the BM25
-    * stats it reads: 0.43-0.49M characters at sf0.001 (the number of
-    * adaptive updates varies run to run). Over a cached curate result
-    * it also rendered the whole curate build, nested caches included,
-    * at every execution start and adaptive update: 5.69M.
+  /** A single search renders its own plan and the index it reads:
+    * about 83k characters at sf0.001 (the number of adaptive updates
+    * varies run to run). Over the three separately built BM25 frames
+    * it also rendered their three build plans: 0.43-0.49M; over a
+    * cached curate result, the whole curate build too, nested caches
+    * included, at every execution start and adaptive update: 5.69M.
     */
-  private val SearchPlanCharsBound = 1000000L
+  private val SearchPlanCharsBound = 150000L
+
+  /** Jobs of one search: the query terms' distinct and broadcast, the
+    * matched-postings exchange, the top-k window's exchange, the result.
+    * Over the three-frame stats a search ran 7 (an idf join and an
+    * avgdl broadcast more).
+    */
+  private val SearchJobsBound = 5
+
+  /** Jobs the three-frame BM25 build (tfdl, idf, avgdl, each planned
+    * from the postings and persisted) ran in this test at sf0.001. The
+    * one index frame computes the postings once and must not run more.
+    */
+  private val ThreeFrameBuildJobs = 16
 
   test("a search over curate's frame does not render the curate build") {
     val docs = Tables.documents(spark, sfDir)
@@ -60,6 +74,7 @@ class CuratedFrameSpec extends SparkSpec {
       }.size
       assert(cached == 0, s"curate's frame still reads $cached cached plans")
 
+      val before = persistedRdds
       val (stats, buildChars, buildJobs) = rendered {
         val s = Retrieval.bm25Stats(
           Retrieval.postings(Normalize.tokens(curated)), report.afterBalance)
@@ -80,8 +95,15 @@ class CuratedFrameSpec extends SparkSpec {
         assert(hits.nonEmpty)
         assert(searchChars < SearchPlanCharsBound,
           s"one search rendered $searchChars plan characters")
-      } finally Seq(stats.tfdl, stats.idf, stats.avgdl).foreach(_.unpersist(blocking = true))
-    } finally Curation.release(curated)
+        assert(searchJobs <= SearchJobsBound, s"one search ran $searchJobs jobs")
+        assert(buildJobs <= ThreeFrameBuildJobs, s"the BM25 build ran $buildJobs jobs")
+      } finally {
+        Seq(stats.tfdl, stats.idf, stats.avgdl).foreach(_.unpersist(blocking = true))
+        stats.release()
+      }
+      assert((persistedRdds -- before).isEmpty,
+        "the BM25 build left blocks persisted after unpersist and release")
+    } finally Checkpoints.release(curated)
   }
 
   private def persistedRdds: Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
@@ -100,9 +122,9 @@ class CuratedFrameSpec extends SparkSpec {
       assert(spark.sharedState.cacheManager.isEmpty)
       // a frame derived from curate's is not curate's frame: its
       // release must not free blocks that other frames may read
-      Curation.release(curated.select("doc_id"))
+      Checkpoints.release(curated.select("doc_id"))
       assert((persistedRdds -- before).size == 1)
-      Curation.release(curated)
+      Checkpoints.release(curated)
       assert((persistedRdds -- before).isEmpty)
       assert(spark.sharedState.cacheManager.isEmpty)
     }

@@ -10,7 +10,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions.{col, least, lit}
 import org.apache.spark.sql.graftshim.Shim
 
-import graft.SparkSpec
+import graft.{Checkpoints, SparkSpec}
 
 class CurationSpec extends SparkSpec {
   import spark.implicits._
@@ -136,7 +136,7 @@ class CurationSpec extends SparkSpec {
       afterBalance = unbalanced.groupBy("source").count()
         .select(least(col("count"), lit(10L))).as[Long].collect().sum)
     val unbalancedIds = unbalanced.select("doc_id").as[Long].collect().toSet
-    Curation.release(unbalanced)
+    Checkpoints.release(unbalanced)
 
     val ((curated, report), actions, jobs) = actionsAndJobs {
       Curation.curate(spark, docs, minTokens = 4, maxPunctRatio = 0.5,
@@ -151,7 +151,7 @@ class CurationSpec extends SparkSpec {
     // the two materializations are the only actions: no stage pays a
     // count job of its own
     assert(actions == 2, s"curate ran $jobs jobs under $actions actions")
-    Curation.release(curated)
+    Checkpoints.release(curated)
   }
 
   test("two concurrent curate calls on one session return the serial report") {
@@ -160,7 +160,7 @@ class CurationSpec extends SparkSpec {
       maxPunctRatio = 0.5, maxPerSource = 10)
     val (serial, serialReport) = run()
     val serialIds = serial.select("doc_id").as[Long].collect().sorted.toSeq
-    Curation.release(serial)
+    Checkpoints.release(serial)
     spark.catalog.clearCache()
 
     val pool = Executors.newFixedThreadPool(2, (r: Runnable) => {
@@ -175,7 +175,7 @@ class CurationSpec extends SparkSpec {
       for ((curated, report) <- results) {
         assert(report == serialReport)
         assert(curated.select("doc_id").as[Long].collect().sorted.toSeq == serialIds)
-        Curation.release(curated)
+        Checkpoints.release(curated)
       }
       assert(spark.sharedState.cacheManager.isEmpty)
     } finally pool.shutdownNow()
