@@ -143,31 +143,36 @@ object Retrieval {
   }
 
   /** The build plan of [[bm25Stats]]'s index, before the lineage cut.
-    * The postings aggregate is computed once: dl, df and avgdl all
-    * derive from it, and every branch reads its `tf` column, so the
-    * branches plan the same aggregate and adaptive execution reuses its
-    * one exchange. df therefore counts the postings with `tf > 0`, which
-    * is every posting: a `count(1)`, or a `count(tf)` Catalyst folds to
-    * one, prunes `tf`, and the df branch then re-tokenizes the documents
-    * into a second, distinct-only aggregate with its own exchange.
-    * Postings with a null term or doc_id are dropped up front, in every
-    * branch alike: the inner joins drop them from the index anyway, and
-    * otherwise the not-null filters Catalyst infers for the join sides
-    * alone make those branches' aggregate differ from the others'.
-    * dl is a posting-sized aggregate reused for both the per-doc
-    * normalization and avgdl, never a corpus-wide window sort. The one
-    * nested-loop join attaches the one-row avgdl.
+    * The postings aggregate is computed once and read by two branches:
+    * the postings, shuffled by term, count their term's df in a window;
+    * the per-document side sums dl (a document-sized aggregate, never a
+    * corpus-wide window sort), attaches the one-row avgdl with the one
+    * nested-loop join, and is broadcast onto the postings.
+    *
+    * The build is one chain of stages, so adaptive execution plans it
+    * the same way every time. Two independent branches each followed
+    * by a stage (say, dl and df each aggregated and then broadcast)
+    * create those stages in the order their inputs finish, which
+    * renumbers the generated classes and recompiles them on a warm
+    * build. Here only the dl → avgdl → broadcast chain creates stages;
+    * the term shuffle feeds the final stage alone.
+    *
+    * Postings with a null term or doc_id are dropped up front, in both
+    * branches alike: the join drops them from the index anyway, and
+    * otherwise the not-null filters Catalyst infers for one branch make
+    * its postings aggregate differ from the other's, which then runs
+    * twice.
     */
   private[graft] def bm25Index(postings: DataFrame, nDocs: Long): DataFrame = {
     val tf = postings.filter(col("term").isNotNull && col("doc_id").isNotNull)
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
-    val idf = tf.groupBy(col("term")).agg(count_if(col("tf") > 0).as("df"))
-      .select(col("term"),
-        round(log((lit(nDocs.toDouble) - col("df") + lit(0.5)) /
-          (col("df") + lit(0.5)) + lit(1.0)), 9).as("idf"))
     val avgdl = dl.agg((sum(col("dl")).cast("double") /
       count(lit(1)).cast("double")).as("avgdl"))
-    tf.join(dl, "doc_id").join(idf, "term").crossJoin(broadcast(avgdl))
+    tf.withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
+      .withColumn("idf",
+        round(log((lit(nDocs.toDouble) - col("df") + lit(0.5)) /
+          (col("df") + lit(0.5)) + lit(1.0)), 9))
+      .join(broadcast(dl.crossJoin(broadcast(avgdl))), "doc_id")
       .select(col("term"), col("doc_id"), col("tf"), col("dl"), col("idf"),
         col("avgdl"))
   }

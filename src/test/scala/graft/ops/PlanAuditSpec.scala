@@ -251,8 +251,13 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(buildRows == Seq(Some(BigInt(1))), s"avgdl build side rows: $buildRows")
     assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]))
-    // dl comes from an aggregate, not a corpus-wide window sort
-    assert(!nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]))
+    // the one window counts df per term; dl comes from an aggregate,
+    // not a window partitioned by document
+    val windows = nodes.collect {
+      case w: org.apache.spark.sql.execution.window.WindowExec =>
+        w.partitionSpec.collect { case a: Attribute => a.name }
+    }
+    assert(windows == Seq(Seq("term")), s"windows partitioned by: $windows")
     // the dl, df and avgdl branches reuse the postings exchange
     val postingsShuffles = nodes.collect {
       case e: ShuffleExchangeLike => e.outputPartitioning
