@@ -59,6 +59,21 @@ object GraftSession {
     */
   val CodegenCacheEntries = "1000"
 
+  /** Whole-stage codegen names every generated class after its
+    * pipeline's codegen stage id, which under adaptive execution
+    * follows the order in which stages are created, and stages whose
+    * inputs are racing shuffles are created in the order those finish.
+    * The id is part of the source the codegen cache is keyed on, so a
+    * renumbered pipeline recompiles although its code is the same: the
+    * BM25 index build (postings → dl, idf and avgdl branches) recompiled
+    * 6 classes on 1 of 7 warm passes in each of two 8-pass loops of the
+    * CodegenCacheSpec chain at sf0.001. Without the id in the class name
+    * the source no longer depends on creation order: 0 of 14 warm
+    * passes compiled anything, and the cold pass compiled 148 classes
+    * instead of 152 (equal pipelines under different ids share one).
+    */
+  val CodegenIdInClassName = "false"
+
   /** Fixture-scale broadcast threshold for the registry queries: the
     * biggest dimension-ish side (orders at sf0.1, ~5 MB parquet / ~20 MB
     * in memory) becomes broadcastable. On a real cluster this stays at
@@ -83,6 +98,7 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
         MinPartitionSize)
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
+      .config("spark.sql.codegen.useIdInClassName", CodegenIdInClassName)
 
   /** [[builder]] plus the fixture-scale broadcast threshold: the session
     * the registry's queries are verified, benched and profiled under.

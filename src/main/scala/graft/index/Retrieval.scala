@@ -111,10 +111,12 @@ object Retrieval {
     * the index joined to the broadcast query terms, then the per-row
     * weight, then the top-k fold.
     *
-    * `tfdl` IS the index. `idf` (term, idf) and `avgdl` (one row) are
-    * projections of it, kept for callers that read the statistics on
-    * their own; persisting or counting them reads the index, never the
-    * postings.
+    * A search reads `tfdl` only, and `tfdl` must carry all six columns
+    * above: stats assembled by hand from a (term, doc_id, tf, dl) frame
+    * fail at analysis, and whatever `idf` and `avgdl` frames they hold
+    * are ignored. The two are projections of the index (a posting-sized
+    * `distinct` and a `limit(1)`), kept so existing callers still
+    * compile; they can go once no caller reads them.
     */
   case class Bm25Stats(tfdl: DataFrame, idf: DataFrame, avgdl: DataFrame) {
 
@@ -143,52 +145,57 @@ object Retrieval {
   }
 
   /** The build plan of [[bm25Stats]]'s index, before the lineage cut.
-    * The postings aggregate is computed once and read by two branches:
-    * the postings, shuffled by term, count their term's df in a window;
-    * the per-document side sums dl (a document-sized aggregate, never a
-    * corpus-wide window sort), attaches the one-row avgdl with the one
-    * nested-loop join, and is broadcast onto the postings.
+    * The postings aggregate is computed once: dl, df and avgdl all
+    * derive from it, and every branch reads its `tf` column, so the
+    * branches plan the same aggregate and adaptive execution reuses its
+    * one exchange. df therefore counts the postings with `tf > 0`, which
+    * is every posting: a `count(1)`, or a `count(tf)` Catalyst folds to
+    * one, prunes `tf`, and the df branch then re-tokenizes the documents
+    * into a second, distinct-only aggregate with its own exchange.
+    * df is a partial-then-final aggregate per term, so a term in every
+    * document costs one row per map task, not one task holding all its
+    * postings. dl is a document-sized aggregate reused for both the
+    * per-doc normalization and avgdl, never a corpus-wide window sort;
+    * the planner picks how the postings meet dl and idf from their
+    * sizes. The one broadcast hint and the one nested-loop join attach
+    * the one-row avgdl.
     *
-    * The build is one chain of stages, so adaptive execution plans it
-    * the same way every time. Two independent branches each followed
-    * by a stage (say, dl and df each aggregated and then broadcast)
-    * create those stages in the order their inputs finish, which
-    * renumbers the generated classes and recompiles them on a warm
-    * build. Here only the dl → avgdl → broadcast chain creates stages;
-    * the term shuffle feeds the final stage alone.
-    *
-    * Postings with a null term or doc_id are dropped up front, in both
-    * branches alike: the join drops them from the index anyway, and
-    * otherwise the not-null filters Catalyst infers for one branch make
-    * its postings aggregate differ from the other's, which then runs
-    * twice.
+    * Postings with a null term or doc_id are dropped up front, in every
+    * branch alike: the inner joins drop them from the index anyway, and
+    * otherwise the not-null filters Catalyst infers for the join sides
+    * alone make those branches' aggregate differ from the others'.
     */
   private[graft] def bm25Index(postings: DataFrame, nDocs: Long): DataFrame = {
     val tf = postings.filter(col("term").isNotNull && col("doc_id").isNotNull)
     val dl = tf.groupBy(col("doc_id")).agg(sum(col("tf")).as("dl"))
+    val idf = tf.groupBy(col("term")).agg(count_if(col("tf") > 0).as("df"))
+      .select(col("term"),
+        round(log((lit(nDocs.toDouble) - col("df") + lit(0.5)) /
+          (col("df") + lit(0.5)) + lit(1.0)), 9).as("idf"))
     val avgdl = dl.agg((sum(col("dl")).cast("double") /
       count(lit(1)).cast("double")).as("avgdl"))
-    tf.withColumn("df", count(lit(1)).over(Window.partitionBy(col("term"))))
-      .withColumn("idf",
-        round(log((lit(nDocs.toDouble) - col("df") + lit(0.5)) /
-          (col("df") + lit(0.5)) + lit(1.0)), 9))
-      .join(broadcast(dl.crossJoin(broadcast(avgdl))), "doc_id")
+    tf.join(dl, "doc_id").join(idf, "term").crossJoin(broadcast(avgdl))
       .select(col("term"), col("doc_id"), col("tf"), col("dl"), col("idf"),
         col("avgdl"))
   }
 
-  /** [[searchBm25]] from a prebuilt [[postings]] table. */
+  /** [[searchBm25]] from a prebuilt [[postings]] table. A one-shot
+    * search: it plans the index build inline under its own top-k, with
+    * no lineage cut, so it leaves no blocks behind. Callers that search
+    * one index more than once hold a [[bm25Stats]] instead.
+    */
   def searchBm25Postings(tf: DataFrame, queries: DataFrame, nDocs: Long,
                          k: Int, k1: Double = 1.2,
                          b: Double = 0.75): DataFrame =
-    searchBm25FromStats(bm25Stats(tf, nDocs), queries, k, k1, b)
+    bm25Search(bm25Index(tf, nDocs), queries, k, Seq("qid"))(
+      _.withColumn("w", col("idf") * bm25Sat(k1, b)))
 
   /** [[searchBm25Postings]] at one (k1, b) point over a prebuilt
     * [[Bm25Stats]] index.
     */
   def searchBm25FromStats(stats: Bm25Stats, queries: DataFrame, k: Int,
                           k1: Double = 1.2, b: Double = 0.75): DataFrame =
-    bm25Search(stats, queries, k, Seq("qid"))(
+    bm25Search(stats.tfdl, queries, k, Seq("qid"))(
       _.withColumn("w", col("idf") * bm25Sat(k1, b)))
 
   /** Every (k1, b) grid point of [[searchBm25FromStats]] in ONE
@@ -218,7 +225,7 @@ object Retrieval {
     val wsys = array(grid.map { case (nm, k1, b) =>
       struct(lit(nm).as("system"), (col("idf") * bm25Sat(k1, b)).as("w"))
     }: _*)
-    bm25Search(stats, queries, k, Seq("system", "qid"))(
+    bm25Search(stats.tfdl, queries, k, Seq("system", "qid"))(
       _.select(col("qid"), col("doc_id"), col("term"), explode(wsys).as("sw"))
         .select(col("qid"), col("doc_id"), col("term"),
           col("sw").getField("system").as("system"),
@@ -236,18 +243,19 @@ object Retrieval {
       (tfD + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl").cast("double") / col("avgdl")))
   }
 
-  /** One BM25 search over the index: the broadcast query terms join it
-    * FIRST (r15, guide §1.2/§2.3), so the weight arithmetic runs only
-    * on matched postings; `weigh` adds the per-row `w` (and `system`,
-    * for a grid); the top k are ranked per `keys`. The index carries
-    * idf, dl and avgdl on every row, so a search is one join: no idf
-    * join and no avgdl nested-loop broadcast.
+  /** One BM25 search over an index frame (see [[bm25Stats]]): the
+    * broadcast query terms join it FIRST (r15, guide §1.2/§2.3), so the
+    * weight arithmetic runs only on matched postings; `weigh` adds the
+    * per-row `w` (and `system`, for a grid); the top k are ranked per
+    * `keys`. The index carries idf, dl and avgdl on every row, so a
+    * search over a checkpointed index is one join: no idf join and no
+    * avgdl nested-loop broadcast.
     */
-  private def bm25Search(stats: Bm25Stats, queries: DataFrame, k: Int,
+  private def bm25Search(index: DataFrame, queries: DataFrame, k: Int,
                          keys: Seq[String])(weigh: DataFrame => DataFrame)
       : DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
-    topK(weigh(stats.tfdl.join(broadcast(queries), "term")), k, keys)
+    topK(weigh(index.join(broadcast(queries), "term")), k, keys)
   }
 
   /** Shared tail: fold matched per-term weights in sorted term order

@@ -170,6 +170,7 @@ class PlanAuditSpec extends SparkSpec {
       "q94_mixture_sampling" -> "one-row broadcast holding the scalar mixture total",
       "q102_knn_ivfpq" -> "bounded query batch x K centroids probe",
       "q110_source_temperature" -> "one-row broadcast holding the scalar max source size",
+      "q115_bm25_retrieval" -> "one-row broadcast holding the scalar corpus-mean doc length",
       "q43_kmeans_assign" -> "points x one-row broadcast holding the K centers array",
       "q117_centroid_classifier" -> "vectors x K-row broadcast of label centroids (K = distinct labels, bounded)",
       "q120_silhouette_by_label" -> "vectors x one-row broadcast packing the K label centroids",
@@ -190,7 +191,7 @@ class PlanAuditSpec extends SparkSpec {
       "q180_ivf_recall_curve" -> "bounded audit: query batch x K centroids, candidates x 8-row nprobe spine, brute reference x corpus, one-row totals",
       "q181_ivf_delete_serve" -> "bounded query batch x K-row broadcast of the persisted quantizer (the probeSearch serve join)",
       "q186_gate_disagreement" -> "q178's NB kernel: vocab rows x one-row broadcast of (V, N+, N-); doc rows x one-row broadcast of the class prior",
-      "q188_hybrid_rrf_retrieval" -> "the dense arm's bounded side: q31's bounded query batch x corpus",
+      "q188_hybrid_rrf_retrieval" -> "the audited arms' bounded sides: q115's one-row corpus-mean doc-length broadcast (sparse) + q31's bounded query batch x corpus (dense)",
       "q189_kneser_ney_score" -> "one-row broadcast holding the scalar distinct-bigram total NN",
       "q190_jl_recall_curve" -> "bounded audit: query batch x corpus (q31's shape, twice), 4-row dim spine, one-row totals",
       // q209/q210 need no entries: their K-seed/K-centroid broadcast
@@ -201,14 +202,14 @@ class PlanAuditSpec extends SparkSpec {
       "q191_gate_operating_points" -> "19-row threshold spine x doc rows (pre-aggregation) + q178's NB scalar broadcasts",
       "q195_dedup_threshold_sweep" -> "per-cut one-row aggregate crossJoins (scalar pair counts) over the bounded q85 slice",
       "q197_embedding_cell_drift" -> "q151's shared chiSquareByBucket: 2-window x K-cell spine + scalar N + scalar cell count, all broadcast",
-      "q200_retrieval_eval" -> "the audited engines' bounded sides: q31's bounded query batch x corpus (dense arm) and the query-count-sized n_rel/idcg broadcasts onto 15 metric rows",
+      "q200_retrieval_eval" -> "the audited engines' bounded sides: q115's one-row avgdl broadcast, q31's bounded query batch x corpus (dense arm), and the query-count-sized n_rel/idcg broadcasts onto 15 metric rows",
       "q201_embedding_drift_cells" -> "K cell rows x one-row broadcast of the two window totals (q171's shape)",
       "q203_doremi_weights" -> "q189's one-row NN broadcast + source rows x two one-row broadcasts (corpus totals, ordered-fold weight normalizer)",
       "q204_hard_negative_mining" -> "bounded anchor batch (doc_id<20) x text embeddings through bruteForceKnn (q31's shape); corpus path swaps in the IVF/LSH serving"
-      // q115 and q206 need no entries, and q188/q200 list only their
-      // other joins: a BM25 search reads the index behind its lineage
-      // cut, so the one-row avgdl broadcast is in no query's final
-      // plan. The index build is audited on its own below.
+      // q206 is absent: it searches a checkpointed BM25 index, so its
+      // plan holds no avgdl broadcast. q115/q188/q200 search once and
+      // plan the index build inline; the build is also audited on its
+      // own below.
     )
     val bad = scala.collection.mutable.ListBuffer[String]()
     val observedBnlj = scala.collection.mutable.TreeSet[String]()
@@ -239,7 +240,8 @@ class PlanAuditSpec extends SparkSpec {
   test("the BM25 index build aggregates the postings once and nested-loops only onto the one-row avgdl") {
     val docs = Tables.documents(spark, sfDir)
     val tf = graft.index.Retrieval.postings(graft.text.Normalize.tokens(docs))
-    val nodes = collectNodes(graft.index.Retrieval.bm25Index(tf, docs.count()))
+    val index = graft.index.Retrieval.bm25Index(tf, docs.count())
+    val nodes = collectNodes(index)
     val bnlj = nodes.collect {
       case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j
     }
@@ -251,13 +253,21 @@ class PlanAuditSpec extends SparkSpec {
     }
     assert(buildRows == Seq(Some(BigInt(1))), s"avgdl build side rows: $buildRows")
     assert(!nodes.exists(_.isInstanceOf[CartesianProductExec]))
-    // the one window counts df per term; dl comes from an aggregate,
-    // not a window partitioned by document
-    val windows = nodes.collect {
-      case w: org.apache.spark.sql.execution.window.WindowExec =>
-        w.partitionSpec.collect { case a: Attribute => a.name }
+    // dl and df come from aggregates, not window sorts
+    assert(!nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.window.WindowExec]))
+    // the one broadcast hint is on the one-row avgdl: a hint ignores
+    // the size threshold, so one on the document-sized dl side would
+    // ship a row per document to every executor
+    val hinted = index.queryExecution.optimizedPlan.collect {
+      case j: org.apache.spark.sql.catalyst.plans.logical.Join => j
+    }.flatMap { j =>
+      Seq(j.hint.leftHint -> j.left, j.hint.rightHint -> j.right).collect {
+        case (Some(h), side) if h.strategy.contains(
+            org.apache.spark.sql.catalyst.plans.logical.BROADCAST) =>
+          side.output.map(_.name)
+      }
     }
-    assert(windows == Seq(Seq("term")), s"windows partitioned by: $windows")
+    assert(hinted == Seq(Seq("avgdl")), s"broadcast-hinted join sides: $hinted")
     // the dl, df and avgdl branches reuse the postings exchange
     val postingsShuffles = nodes.collect {
       case e: ShuffleExchangeLike => e.outputPartitioning
