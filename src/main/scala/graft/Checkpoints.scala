@@ -3,9 +3,10 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Frees a frame materialized by `Dataset.localCheckpoint`: a local
-  * checkpoint is a persisted RDD behind the frame's `LogicalRDD` root,
-  * which `Dataset.unpersist()` does not touch.
+/** Frees a frame materialized by `Dataset.localCheckpoint` or
+  * `Shim.hashPartitionedCheckpoint`: a local checkpoint is a persisted
+  * RDD behind the frame's `LogicalRDD` root, which `Dataset.unpersist()`
+  * does not touch.
   */
 object Checkpoints {
 

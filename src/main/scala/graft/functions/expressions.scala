@@ -802,16 +802,19 @@ object functions {
 
 /** SparkSessionExtensions installer:
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * `spark.sql.extensions=graft.functions.GraftExtensions`. Installs the
+  * graft SQL functions and the [[FoldLocalRelations]] optimizer rule.
   */
 class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
+  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     GraftExtensions.register { (name, builder) =>
       ext.injectFunction(
         (org.apache.spark.sql.catalyst.FunctionIdentifier(name),
           new org.apache.spark.sql.catalyst.expressions.ExpressionInfo("graft", name),
           builder))
     }
+    ext.injectOptimizerRule(_ => FoldLocalRelations)
+  }
 }
 
 object GraftExtensions {

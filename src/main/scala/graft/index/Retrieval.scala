@@ -3,6 +3,7 @@ package graft.index
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 
 import graft.Checkpoints
 
@@ -22,13 +23,20 @@ import graft.Checkpoints
   * ONE frame whose plan is a single RDD scan, and a search is one
   * broadcast join over it — it neither recomputes nor re-renders the
   * build. The query set is broadcast (queries are human-sized; the
-  * posting side never shuffles for the match), per-(query, doc)
-  * accumulation exchanges only MATCHED postings (candidate-sized, not
-  * corpus-sized), and the top-k window partitions by query — never a
-  * global sort. Per-term contributions are summed in sorted term order
-  * via an array fold, so scores are reproducible bit-for-bit across
-  * engines and across partitionings (float addition is not
-  * associative; an unordered SUM would not be).
+  * posting side never shuffles for the match); one built on the driver,
+  * such as one search string's distinct terms, is folded to a local
+  * relation by the optimizer ([[graft.functions.FoldLocalRelations]]),
+  * so its distinct runs no shuffle stage. The index states its hash
+  * partitioning on doc_id through its checkpoint, so per-(query, doc)
+  * accumulation runs in the scan stage, and a search's one exchange, on
+  * the query, carries each partition's top-k rows per query (Spark's
+  * partial window group limit) to the top-k window — never a global
+  * sort. Where the postings are not partitioned on doc_id (the one-shot
+  * `*Postings` searches), the accumulation exchanges only MATCHED
+  * postings (candidate-sized, not corpus-sized). Per-term contributions
+  * are summed in sorted term order via an array fold, so scores are
+  * reproducible bit-for-bit across engines and across partitionings
+  * (float addition is not associative; an unordered SUM would not be).
   */
 object Retrieval {
 
@@ -105,11 +113,12 @@ object Retrieval {
   /** The BM25 index of a postings table: every posting carries its
     * document length and its term's rounded idf, next to the scalar
     * avgdl — one row per (term, doc_id), columns (term, doc_id, tf, dl,
-    * idf, avgdl). It is built ONCE and shared across every (k1, b)
-    * operating point (the q206 sweep's shape, mirroring its twin's
-    * single tfdl/idf/ad CTE set), and a search reads nothing else:
-    * the index joined to the broadcast query terms, then the per-row
-    * weight, then the top-k fold.
+    * idf, avgdl), hash-partitioned on doc_id. It is built ONCE and
+    * shared across every (k1, b) operating point (the q206 sweep's
+    * shape, mirroring its twin's single tfdl/idf/ad CTE set), and a
+    * search reads nothing else: the index joined to the broadcast query
+    * terms, then the per-row weight, then the top-k fold, all in the
+    * index's own partitions up to the one exchange on the query.
     *
     * A search reads `tfdl` only, and `tfdl` must carry all six columns
     * above: stats assembled by hand from a (term, doc_id, tf, dl) frame
@@ -128,18 +137,28 @@ object Retrieval {
     def release(): Unit = Checkpoints.release(tfdl)
   }
 
-  /** [[Bm25Stats]] of a postings table, with the index materialized
-    * behind one lineage cut: a lazy local checkpoint, so the index's
-    * plan is a single RDD scan and no later search recomputes or
-    * re-renders the build. Under adaptive execution the checkpoint
-    * call itself runs every shuffle and broadcast stage of the build;
-    * the first action over the index runs the last stage and stores
-    * its blocks. A caller need not persist the index: a `persist()`
-    * over it keeps a second in-memory copy of the same rows. Free it
-    * with [[Bm25Stats.release]] when done.
+  /** [[Bm25Stats]] of a postings table, with the index materialized by
+    * this call behind one lineage cut: a local checkpoint,
+    * hash-partitioned on doc_id, whose plan is a single RDD scan that
+    * states that partitioning (`Shim.hashPartitionedCheckpoint`), so no
+    * later search recomputes or re-renders the build, and a search folds
+    * each (query, doc) in the scan stage and exchanges only per-partition
+    * top-k rows. The postings, keyed the same way, are checkpointed
+    * first and freed once the index is stored: every branch of the build
+    * (dl, df, avgdl and the postings themselves) reads them, and without
+    * an exchange to reuse each branch would recompute them from the
+    * documents. Postings already partitioned on doc_id (curate's frame,
+    * tokenized) are not exchanged at all: both repartitions are planned
+    * away. A caller need not persist the index: a `persist()` over it
+    * keeps a second in-memory copy of the same rows. Free it with
+    * [[Bm25Stats.release]] when done.
     */
   def bm25Stats(tf: DataFrame, nDocs: Long): Bm25Stats = {
-    val index = bm25Index(tf, nDocs).localCheckpoint(false)
+    val postings = Shim.hashPartitionedCheckpoint(tf, Seq("doc_id"), eager = false)
+    val index =
+      try Shim.hashPartitionedCheckpoint(bm25Index(postings, nDocs), Seq("doc_id"),
+        eager = true)
+      finally Checkpoints.release(postings)
     Bm25Stats(index, index.select(col("term"), col("idf")).distinct(),
       index.select(col("avgdl")).limit(1))
   }

@@ -550,10 +550,8 @@ object CorpusDrift {
        |         WHEN vb.doc_id IS NULL THEN 'removed'
        |         WHEN va.text IS DISTINCT FROM vb.text THEN 'changed'
        |         ELSE 'unchanged' END AS status,
-       |    COALESCE(len(list_filter(string_split_regex(va.text, '[ \\t\\n\\x0B\\f\\r]+'),
-       |      x -> x <> '')), 0) AS tok_a,
-       |    COALESCE(len(list_filter(string_split_regex(vb.text, '[ \\t\\n\\x0B\\f\\r]+'),
-       |      x -> x <> '')), 0) AS tok_b
+       |    COALESCE(len(${TwinSql.toksOf("va.text")}), 0) AS tok_a,
+       |    COALESCE(len(${TwinSql.toksOf("vb.text")}), 0) AS tok_b
        |  FROM va FULL OUTER JOIN vb ON va.doc_id = vb.doc_id)
        |SELECT source,
        |  CAST(sum(CASE WHEN status = 'added' THEN 1 ELSE 0 END) AS BIGINT) AS n_added,

@@ -557,16 +557,23 @@ object Dedup {
       transform(array_sort(collect_list(struct(col("j"), col("mh")))),
         s => s.getField("mh").cast("string")))
 
-  val q27: QueryDef = QueryDef.sql(
-    "q27_minhash_signatures",
-    s"""WITH ${termSetSql("documents WHERE doc_id < 200", "t")},
+  /** The twin of [[minhashes]] over the first 200 documents: CTEs `t`
+    * (their distinct terms), `d` (term ids) and `mh` (doc_id, j, mh),
+    * the 16 MinHashes per document that q27 and q28 both start from.
+    */
+  private val minhashCtesSql: String =
+    s"""${termSetSql("documents WHERE doc_id < 200", "t")},
        |d AS (SELECT doc_id, $duckTid AS tid FROM t),
        |mh AS (
        |  SELECT d.doc_id, g.j,
        |    min(((2*g.j + 1) * d.tid + 97*g.j + 13) % 1000003) AS mh
        |  FROM d
        |  CROSS JOIN (SELECT unnest(range(16)) AS j) g
-       |  GROUP BY d.doc_id, g.j)
+       |  GROUP BY d.doc_id, g.j)""".stripMargin
+
+  val q27: QueryDef = QueryDef.sql(
+    "q27_minhash_signatures",
+    s"""WITH $minhashCtesSql
        |SELECT doc_id, string_agg(CAST(mh AS VARCHAR), ',' ORDER BY j) AS sig
        |FROM mh GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, dir) =>
     minhashes(dictTokens(s, dir, 200), 16)
@@ -581,14 +588,7 @@ object Dedup {
     */
   val q28: QueryDef = QueryDef.sql(
     "q28_lsh_candidates",
-    s"""WITH ${termSetSql("documents WHERE doc_id < 200", "t")},
-       |d AS (SELECT doc_id, $duckTid AS tid FROM t),
-       |mh AS (
-       |  SELECT d.doc_id, g.j,
-       |    min(((2*g.j + 1) * d.tid + 97*g.j + 13) % 1000003) AS mh
-       |  FROM d
-       |  CROSS JOIN (SELECT unnest(range(16)) AS j) g
-       |  GROUP BY d.doc_id, g.j),
+    s"""WITH $minhashCtesSql,
        |bands AS (
        |  SELECT doc_id, CAST(floor(j / 4) AS BIGINT) AS band,
        |    string_agg(CAST(mh AS VARCHAR), ',' ORDER BY j) AS band_sig
@@ -1599,8 +1599,10 @@ object Dedup {
     * The checkpoints keep no partitioning: their scans report
     * UnknownPartitioning(0), so with broadcast joins off every round
     * exchanges the label side on vertex id again (seen in the plan of
-    * the distributed path, localEdgeLimit = 0). ROADMAP item 4 tracks
-    * a checkpoint that states its partitioning.
+    * the distributed path, localEdgeLimit = 0).
+    * `Shim.hashPartitionedCheckpoint` (org.apache.spark.sql.graftshim)
+    * is the checkpoint that states its partitioning; the loop does not
+    * use it yet.
     *
     * Small edge lists skip the loop entirely: the materialized edges
     * are union-found on the driver (O(E α(E)), path compression) and

@@ -697,10 +697,9 @@ object Extended {
     */
   val q83: QueryDef = QueryDef.sql(
     "q83_array_setops",
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id,
-      |    list_distinct(list_filter(string_split_regex(lower(text), '[ \t\n\x0B\f\r]+'),
-      |      x -> x <> '')) AS toks
+      |    list_distinct(${TwinSql.toksOf("lower(text)")}) AS toks
       |  FROM documents WHERE doc_id < 50)
       |SELECT doc_id,
       |  COALESCE(array_to_string(list_sort(list_intersect(toks,

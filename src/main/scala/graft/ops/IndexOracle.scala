@@ -181,9 +181,8 @@ object IndexOracle {
     */
   val q100: QueryDef = QueryDef.sql(
     "q100_index_merge",
-    """WITH t AS (
-      |  SELECT DISTINCT doc_id, unnest(list_filter(
-      |    string_split_regex(text, '[ \t\n\x0B\f\r]+'), x -> x <> '')) AS term
+    s"""WITH t AS (
+      |  SELECT DISTINCT doc_id, unnest(${TwinSql.toksSql}) AS term
       |  FROM documents)
       |SELECT term,
       |  string_agg(CAST(doc_id AS VARCHAR), ',' ORDER BY doc_id) AS doc_ids

@@ -139,9 +139,9 @@ object MlOracle {
     */
   val q54: QueryDef = QueryDef.sql(
     "q54_langid",
-    """WITH t AS (
+    s"""WITH t AS (
       |  SELECT doc_id, lang AS labeled_lang, text,
-      |    list_filter(string_split_regex(lower(text), '[ \t\n\x0B\f\r]+'), x -> x <> '') AS toks
+      |    ${TwinSql.toksOf("lower(text)")} AS toks
       |  FROM documents),
       |sc AS (
       |  SELECT doc_id, labeled_lang,
@@ -149,7 +149,7 @@ object MlOracle {
       |    CAST(len(list_filter(toks, x -> x IN ('der','die','und','das','ist','nicht','ein'))) AS DOUBLE) AS s_de,
       |    CAST(len(list_filter(toks, x -> x IN ('el','la','de','que','y','los','es'))) AS DOUBLE) AS s_es,
       |    CAST(len(list_filter(toks, x -> x IN ('le','la','et','les','des','est','une'))) AS DOUBLE) AS s_fr,
-      |    CAST(length(text) - length(regexp_replace(text, '[\x{4e00}-\x{9fff}]', '', 'g')) AS DOUBLE) AS s_zh
+      |    CAST(length(text) - length(regexp_replace(text, '[\\x{4e00}-\\x{9fff}]', '', 'g')) AS DOUBLE) AS s_zh
       |  FROM t)
       |SELECT doc_id, labeled_lang,
       |  CASE WHEN s_en >= s_de AND s_en >= s_es AND s_en >= s_fr AND s_en >= s_zh THEN 'en'

@@ -678,9 +678,9 @@ object NonOracle {
     // by q160's fertility rollup: segN(word) IS the word's final
     // segmentation under the learned merges)
     val head =
-      """WITH w AS (
+      s"""WITH w AS (
         |  SELECT word, CAST(count(*) AS BIGINT) AS freq FROM (
-        |    SELECT unnest(list_filter(string_split_regex(text, '[ \t\n\x0B\f\r]+'), x -> x <> '')) AS word
+        |    SELECT unnest(${TwinSql.toksSql}) AS word
         |    FROM documents WHERE doc_id < 500) GROUP BY word),
         |seg0 AS MATERIALIZED (
         |  SELECT word, freq, list_append(regexp_extract_all(word, '(?s).'), '</w>') AS s
@@ -758,7 +758,7 @@ object NonOracle {
       s""",
          |sw AS (
          |  SELECT source, word, CAST(count(*) AS BIGINT) AS freq FROM (
-         |    SELECT source, unnest(list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> '')) AS word
+         |    SELECT source, unnest(${TwinSql.toksSql}) AS word
          |    FROM documents WHERE doc_id < 500) GROUP BY source, word),
          |u AS (SELECT word, CAST(len(s) AS BIGINT) AS units FROM seg20),
          |r AS (
@@ -835,7 +835,7 @@ object NonOracle {
       s""",
          |sw AS (
          |  SELECT source, word, CAST(count(*) AS BIGINT) AS freq FROM (
-         |    SELECT source, unnest(list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> '')) AS word
+         |    SELECT source, unnest(${TwinSql.toksSql}) AS word
          |    FROM documents WHERE doc_id < 500) GROUP BY source, word),
          |u AS (
          |  SELECT word,
@@ -1036,7 +1036,7 @@ object NonOracle {
        |  FROM est),
        |ex AS (
        |  SELECT source, CAST(count(DISTINCT term) AS BIGINT) AS n_exact
-       |  FROM (SELECT source, unnest(list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> '')) AS term
+       |  FROM (SELECT source, unnest(${TwinSql.toksSql}) AS term
        |        FROM documents)
        |  GROUP BY source)
        |SELECT ex.source, ex.n_exact, e2.hll_est
@@ -1069,8 +1069,7 @@ object NonOracle {
     "q130_cms_heavy_hitters",
     s"""WITH tc AS (
        |  SELECT term, CAST(count(*) AS BIGINT) AS cnt
-       |  FROM (SELECT unnest(list_filter(string_split_regex(text, '[ \\t\\n\\x0B\\f\\r]+'),
-       |                x -> x <> '')) AS term
+       |  FROM (SELECT unnest(${TwinSql.toksSql}) AS term
        |        FROM documents)
        |  GROUP BY term),
        |h AS (

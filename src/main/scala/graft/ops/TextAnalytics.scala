@@ -348,7 +348,7 @@ object TextAnalytics {
          |    $scoreSelects,
          |    CAST(length(text) - length(regexp_replace(text, '[\\x{4e00}-\\x{9fff}]', '', 'g')) AS DOUBLE) AS s_zh
          |    FROM (SELECT doc_id, lang, text,
-         |      list_filter(string_split_regex(lower(text), '[ \\t\\n\\x0B\\f\\r]+'), x -> x <> '') AS t
+         |      ${TwinSql.toksOf("lower(text)")} AS t
          |      FROM documents)))
          |ORDER BY doc_id""".stripMargin) { (s, dir) =>
       langId(Tables.documentsFan(s, dir))

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 import graft.Checkpoints
 import graft.ops.{Dedup, TextAnalytics}
 
@@ -13,9 +14,9 @@ import graft.ops.{Dedup, TextAnalytics}
   * Scale shape: stages 1-2 are narrow (scan speed); exact dedup is one
   * exchange on the text hash; near-dup is the narrow signature pass +
   * one band equi-join. A call runs two actions, each materializing a
-  * local checkpoint: the exact-dedup output and the returned frame.
-  * Per-stage counts are `observe` metrics of those two actions, so no
-  * stage pays a count job of its own.
+  * local checkpoint hash-partitioned on doc_id: the exact-dedup output
+  * and the returned frame. Per-stage counts are `observe` metrics of
+  * those two actions, so no stage pays a count job of its own.
   */
 object Curation {
 
@@ -40,7 +41,10 @@ object Curation {
     *         local checkpoint, already materialized by the action whose
     *         observed metrics report its size: its plan is a single RDD
     *         scan, so a later query over it neither recomputes nor
-    *         re-renders the stages that built it. `Dataset.unpersist()`
+    *         re-renders the stages that built it, and the scan states
+    *         its hash partitioning on doc_id, so a later per-document
+    *         aggregate or join on doc_id (a BM25 build's postings and
+    *         document lengths) does not exchange it. `Dataset.unpersist()`
     *         does not free a checkpoint — call
     *         [[graft.Checkpoints.release]] when done with the frame, or
     *         its blocks stay until the RDD is garbage-collected;
@@ -154,13 +158,15 @@ object Curation {
     val n = count(lit(1)).as("n")
 
     // 1-3. quality (narrow), language allowlist (narrow), exact dedup
-    // (one exchange). Action 1 materializes the exact-dedup output: the
-    // signature pass and the final anti-join both reread it, and the
+    // (one exchange). Action 1 materializes the exact-dedup output,
+    // partitioned on doc_id: the signature pass and the final anti-join
+    // both reread it, the anti-join without exchanging it, and the
     // first four observations fire on it.
     val quality = qualityStage(docs.observe(oIn, n), minTokens, maxPunctRatio)
       .observe(oQuality, n)
     val langed = langStage(quality, keepLangs).observe(oLang, n)
-    val exact = exactDedup(langed).observe(oExact, n).localCheckpoint(true)
+    val exact = Shim.hashPartitionedCheckpoint(exactDedup(langed).observe(oExact, n),
+      Seq("doc_id"), eager = true)
 
     // 4. near-dup: LSH candidates VERIFIED by signature agreement
     // (estimated Jaccard), then drop the higher doc_id of each pair.
@@ -178,7 +184,9 @@ object Curation {
     // tree again when its execution starts and on each adaptive-plan
     // update. Observations are read only after both actions returned.
     val curated =
-      try balanceStage(nearDeduped, maxPerSource).observe(oBalance, n).localCheckpoint(true)
+      try Shim.hashPartitionedCheckpoint(
+        balanceStage(nearDeduped, maxPerSource).observe(oBalance, n), Seq("doc_id"),
+        eager = true)
       finally { Checkpoints.release(sigs); Checkpoints.release(exact) }
 
     def metric(o: Observation): Long = o.get("n").asInstanceOf[Long]

@@ -3,11 +3,15 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
+
 /** GraftSession is the one session configuration: the shared test
   * session must carry every `builder()` setting (the forked test JVM
-  * gets no `-Dspark.*` options), graft's SQL functions must come from
-  * the builder's extensions alone, and no other source file may build
-  * its own session.
+  * gets no `-Dspark.*` options), graft's SQL functions and optimizer
+  * rule must come from the builder's extensions alone, and no other
+  * source file may build its own session.
   */
 class GraftSessionSpec extends SparkSpec {
 
@@ -36,6 +40,31 @@ class GraftSessionSpec extends SparkSpec {
     // another spec may have registered on the shared one
     val fresh = spark.newSession()
     assert(fresh.sql("SELECT porter_stem('meetings')").head().getString(0) == "meet")
+  }
+
+  test("the builder's extensions install the local-relation fold") {
+    // a fresh session shares the extensions, as for porter_stem above
+    for (s <- Seq(spark, spark.newSession()))
+      assert(s.sessionState.optimizer.batches.flatMap(_.rules)
+        .contains(functions.FoldLocalRelations))
+  }
+
+  test("spark.sql.extensions=graft.functions.GraftExtensions alone installs the fold and porter_stem") {
+    // Spark honours the setting by instantiating the named class and
+    // applying it to a new session's extensions. This JVM's one
+    // SparkContext was built without the setting, so the test applies
+    // the class the same way and reads what it injected through the
+    // extensions' own (package-private) builders.
+    val ext = new SparkSessionExtensions
+    Class.forName("graft.functions.GraftExtensions").getConstructor().newInstance()
+      .asInstanceOf[SparkSessionExtensions => Unit](ext)
+    def built(method: String, argType: Class[_], arg: AnyRef): AnyRef =
+      classOf[SparkSessionExtensions].getMethod(method, argType).invoke(ext, arg)
+    assert(built("buildOptimizerRules", classOf[SparkSession], spark) ==
+      Seq(functions.FoldLocalRelations))
+    val registry = built("registerFunctions", classOf[FunctionRegistry],
+      FunctionRegistry.builtin.clone()).asInstanceOf[FunctionRegistry]
+    assert(registry.functionExists(FunctionIdentifier("porter_stem")))
   }
 
   test("GraftSession.scala is the only SparkSession builder call site") {

@@ -22,7 +22,8 @@ import scala.jdk.CollectionConverters._
   *  - each verification chain two or more queries share is spelled
   *    once: the DuckDB-twin chains in `TwinSql`, the Spark exact
   *    set-overlap chain in `Dedup.overlapCounts` and the token n-gram
-  *    window text in `CurationOps.windowText`.
+  *    window text in `CurationOps.windowText`;
+  *  - the twin whitespace tokenizer is spelled once, in `TwinSql.toksOf`.
   */
 class SourceGuardSpec extends AnyFunSuite {
 
@@ -134,6 +135,17 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(forks.isEmpty, forks.mkString("\n"))
   }
 
+  test("the twin whitespace tokenizer is spelled only in TwinSql.toksOf") {
+    // matched across line breaks: a hand-spelled copy may wrap anywhere
+    val chain = """list_filter\(\s*string_split_regex\(""".r
+    val hits = mainFiles.flatMap { p =>
+      val code = codeLines(p).map(_._1).mkString("\n")
+      chain.findAllMatchIn(code).map(_ => p.getFileName.toString).toSeq
+    }
+    assert(hits == Seq("TwinSql.scala"),
+      "call TwinSql.toksOf instead of spelling the tokenizer: " + hits.mkString(", "))
+  }
+
   test("each verification chain is spelled once in src/main") {
     // (a line only the chain spells, the one file allowed to, its owner)
     val chains = Seq(
@@ -146,7 +158,9 @@ class SourceGuardSpec extends AnyFunSuite {
       ("qs AS (SELECT CAST(r // 2 AS BIGINT) AS qid, term FROM top8)", "TwinSql.scala",
         "TwinSql.retrievalHeadSql"),
       ("CAST(count(*) AS BIGINT) AS n_matched", "TwinSql.scala", "TwinSql.retrievalTailSql"),
-      ("concat_ws(\"\\u0001\", slice(", "CurationOps.scala", "CurationOps.windowText"))
+      ("concat_ws(\"\\u0001\", slice(", "CurationOps.scala", "CurationOps.windowText"),
+      ("min(((2*g.j + 1) * d.tid + 97*g.j + 13) % 1000003) AS mh", "Dedup.scala",
+        "Dedup.minhashCtesSql"))
     val files = mainFiles
     for ((marker, owner, name) <- chains) {
       val hits = files.flatMap { p =>

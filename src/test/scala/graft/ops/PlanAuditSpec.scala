@@ -278,6 +278,44 @@ class PlanAuditSpec extends SparkSpec {
       s"the token stream was aggregated and shuffled $postingsShuffles times")
   }
 
+  test("a search over bm25Stats exchanges only per-partition top-k rows, on qid") {
+    val docs = Tables.documents(spark, sfDir)
+    val stats = graft.index.Retrieval.bm25Stats(
+      graft.index.Retrieval.postings(graft.text.Normalize.tokens(docs)), docs.count())
+    try {
+      import spark.implicits._
+      val qdf = graft.text.Normalize.tokens(Seq((0L, "the quick data pipeline")).toDF("doc_id", "text"))
+        .select(org.apache.spark.sql.functions.col("doc_id").as("qid"),
+          org.apache.spark.sql.functions.col("term")).distinct()
+      val search = graft.index.Retrieval.searchBm25FromStats(stats, qdf, 10)
+      val nodes = collectNodes(search)
+      val plan = search.queryExecution.executedPlan.toString
+      // the index is partitioned on doc_id, so the per-(qid, doc_id)
+      // fold runs in the scan stage; the query terms fold to a local
+      // relation on the driver
+      val shuffles = nodes.collect { case e: ShuffleExchangeLike => e }
+      assert(shuffles.size == 1, s"expected one shuffle\n$plan")
+      val keys = shuffles.head.outputPartitioning match {
+        case h: HashPartitioning => h.expressions.collect { case a: Attribute => a.name }
+        case other => Seq(other.toString)
+      }
+      assert(keys == Seq("qid"), s"the one shuffle is not hashpartitioning(qid)\n$plan")
+      val partialLimit = shuffles.head.child.exists {
+        case w: org.apache.spark.sql.execution.window.WindowGroupLimitExec =>
+          w.mode == org.apache.spark.sql.execution.window.Partial
+        case _ => false
+      }
+      assert(partialLimit, s"the qid exchange does not sit above a partial top-k\n$plan")
+      val broadcast = nodes.collect {
+        case b: org.apache.spark.sql.execution.exchange.BroadcastExchangeExec => b.child
+      }
+      assert(broadcast.nonEmpty && broadcast.forall(
+        _.isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec]),
+        s"the query side is not a local table scan\n$plan")
+      assert(!nodes.exists(_.isInstanceOf[org.apache.spark.sql.execution.GenerateExec]))
+    } finally stats.release()
+  }
+
   test("q159 memorization risk: one content-keyed exchange feeds both aggregates") {
     val nodes = collectNodes(CurationOps.q159.build(spark, sfDir))
     // exchange 0 (r15): the Tables.fanout scan-parallelism guard —
