@@ -39,22 +39,18 @@ object Shim {
                                 eager: Boolean): DataFrame = {
     val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
     val n = spark.conf.get(SQLConf.SHUFFLE_PARTITIONS.key).toInt
-    df.repartition(n, keys.map(functions.col): _*).localCheckpoint(eager)
-      .queryExecution.logical match {
-        case r: LogicalRDD =>
-          require(r.rdd.getNumPartitions == n,
-            s"a checkpoint hash-partitioned into $n partitions has ${r.rdd.getNumPartitions}")
-          val resolver = spark.sessionState.conf.resolver
-          val attrs = keys.map(k => r.output.find(a => resolver(a.name, k)).get)
-          val stats =
-            if (!eager) r.computeStats()
-            else Statistics(spark.sparkContext.getRDDStorageInfo(_.id == r.rdd.id)
-              .map(i => BigInt(i.memSize + i.diskSize)).sum)
-          classic.Dataset.ofRows(spark,
-            r.copy(outputPartitioning = HashPartitioning(attrs, n))(
-              spark, Some(stats), Some(r.constraints)))
-        case other => throw new IllegalStateException(
-          s"localCheckpoint returned a ${other.nodeName}, not a LogicalRDD")
-      }
+    val r = df.repartition(n, keys.map(functions.col): _*).localCheckpoint(eager)
+      .queryExecution.logical.asInstanceOf[LogicalRDD]
+    require(r.rdd.getNumPartitions == n,
+      s"a checkpoint hash-partitioned into $n partitions has ${r.rdd.getNumPartitions}")
+    val resolver = spark.sessionState.conf.resolver
+    val attrs = keys.map(k => r.output.find(a => resolver(a.name, k)).get)
+    val stats =
+      if (!eager) r.computeStats()
+      else Statistics(spark.sparkContext.getRDDStorageInfo(_.id == r.rdd.id)
+        .map(i => BigInt(i.memSize + i.diskSize)).sum)
+    classic.Dataset.ofRows(spark,
+      r.copy(outputPartitioning = HashPartitioning(attrs, n))(
+        spark, Some(stats), Some(r.constraints)))
   }
 }
